@@ -59,24 +59,21 @@ def main() -> int:
     n_docs = pages.count()
     print(f"docs={n_docs} (reps={reps})")
 
-    agg = None
-    for engine in ("expr", "kernel"):
-        t0 = time.time()
-        c4 = c4_clean(pages, engine=engine)
-        agg = c4.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("c4_pass").cast("long")).alias("n_pass"),
-            F.sum("n_kept").alias("kept"),
-            F.sum(F.col("has_doc_blocklist").cast("long")).alias("n_lorem"),
-            F.sum(F.col("has_brace").cast("long")).alias("n_brace"),
-        ).collect()[0]
-        t_c4 = time.time() - t0
-        print(
-            f"c4_clean[{engine}]: {t_c4:.1f} s "
-            f"({n_docs / t_c4 / 1e6:.2f} M docs/s), "
-            f"pass={agg.n_pass} lorem={agg.n_lorem} brace={agg.n_brace} "
-            f"kept_lines={agg.kept}"
-        )
+    t0 = time.time()
+    agg = c4_clean(pages).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("c4_pass").cast("long")).alias("n_pass"),
+        F.sum("n_kept").alias("kept"),
+        F.sum(F.col("has_doc_blocklist").cast("long")).alias("n_lorem"),
+        F.sum(F.col("has_brace").cast("long")).alias("n_brace"),
+    ).collect()[0]
+    t_c4 = time.time() - t0
+    print(
+        f"c4_clean: {t_c4:.1f} s "
+        f"({n_docs / t_c4 / 1e6:.2f} M docs/s), "
+        f"pass={agg.n_pass} lorem={agg.n_lorem} brace={agg.n_brace} "
+        f"kept_lines={agg.kept}"
+    )
     # closed form: every doc keeps 4 lines (first/bullet/closing/final)
     # except %11 docs whose brace line fails terminal punct (3 kept);
     # %7 docs swap 'closing' for the lorem line (still kept). Flags:
@@ -93,21 +90,19 @@ def main() -> int:
     assert agg.n_pass == n_docs - n_both, (agg.n_pass, n_docs - n_both)
     assert agg.kept == 4 * n_docs - n11, (agg.kept, 4 * n_docs - n11)
 
-    for engine in ("expr", "kernel"):
-        t0 = time.time()
-        gl = gopher_line_rules(pages, engine=engine)
-        gagg = gl.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("gopher_line_pass").cast("long")).alias("n_pass"),
-            F.sum("n_stopword_types").alias("stop_sum"),
-        ).collect()[0]
-        t_gl = time.time() - t0
-        print(
-            f"gopher_line_rules[{engine}]: {t_gl:.1f} s "
-            f"({n_docs / t_gl / 1e6:.2f} M docs/s), "
-            f"pass={gagg.n_pass} stop_sum={gagg.stop_sum}"
-        )
-        assert gagg.n == n_docs
+    t0 = time.time()
+    gagg = gopher_line_rules(pages).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("gopher_line_pass").cast("long")).alias("n_pass"),
+        F.sum("n_stopword_types").alias("stop_sum"),
+    ).collect()[0]
+    t_gl = time.time() - t0
+    print(
+        f"gopher_line_rules: {t_gl:.1f} s "
+        f"({n_docs / t_gl / 1e6:.2f} M docs/s), "
+        f"pass={gagg.n_pass} stop_sum={gagg.stop_sum}"
+    )
+    assert gagg.n == n_docs
     pages.unpersist()
     print("rehearsal OK")
     return 0

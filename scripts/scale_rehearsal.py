@@ -165,7 +165,7 @@ def main() -> int:
         # stop-word-heavy query (r4 verdict #2): the highest-df corpus
         # term makes EVERY doc a candidate at max_df_ratio=1.0; the
         # two-phase top-k must keep this from funneling 1M candidate
-        # rows through one reducer — per engine
+        # rows through one reducer
         top_term = (
             big.select(F.explode(F.array_distinct(
                 F.split(F.col("text"), r"\s+"))).alias("t"))
@@ -178,19 +178,14 @@ def main() -> int:
         )
         print(f"stop-word term {top_term['t']!r}: df {top_term['count']}"
               f"/{n_total}")
-        for engine in ("expr", "kernel"):
-            t0 = time.perf_counter()
-            n_sw = bm25_topk(
-                big, stop_q, k=10, max_df_ratio=1.0, method=engine
-            ).count()
-            print(f"bm25_topk stop-word query [{engine}] {n_total} "
-                  f"candidates: {time.perf_counter()-t0:.1f} s, "
-                  f"{n_sw} rows")
-            assert n_sw == 10
+        t0 = time.perf_counter()
+        n_sw = bm25_topk(big, stop_q, k=10, max_df_ratio=1.0).count()
+        print(f"bm25_topk stop-word query {n_total} candidates: "
+              f"{time.perf_counter()-t0:.1f} s, {n_sw} rows")
+        assert n_sw == 10
 
-        # kernel-vs-expr crossover: a 32-query labeling batch (~96
-        # usable terms). The expr engine pays one interpreted array
-        # pass per term per doc; the kernel pays one token pass total.
+        # a 32-query labeling batch (~96 usable terms): the kernel
+        # pays one token pass per doc for the whole batch
         words = [r["t"] for r in (
             big.select(F.explode(F.array_distinct(
                 F.split(F.col("text"), r"\s+"))).alias("t"))
@@ -203,14 +198,10 @@ def main() -> int:
              for i in range(32)],
             "query_id string, query_text string",
         )
-        for engine in ("expr", "kernel"):
-            t0 = time.perf_counter()
-            n_b = bm25_topk(
-                big, batch, k=10, max_df_ratio=1.0, method=engine,
-                max_expr_terms=256,
-            ).count()
-            print(f"bm25_topk 32-query batch [{engine}] {n_total} docs: "
-                  f"{time.perf_counter()-t0:.1f} s, {n_b} rows")
+        t0 = time.perf_counter()
+        n_b = bm25_topk(big, batch, k=10, max_df_ratio=1.0).count()
+        print(f"bm25_topk 32-query batch {n_total} docs: "
+              f"{time.perf_counter()-t0:.1f} s, {n_b} rows")
 
         # eTLD+1 default (r4): subdomained urls over 20k distinct
         # registrable sites — www./cdn. of one site must cohere

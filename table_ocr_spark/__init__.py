@@ -23,14 +23,13 @@ from table_ocr_spark.api import (
     get_run_state,
     read_run_results,
 )
-from table_ocr_spark.operators.extract import extract_documents, extract_text_udf
+from table_ocr_spark.operators.extract import extract_documents
 from table_ocr_spark.operators.vote import sample_majority_vote
 from table_ocr_spark.pipelines import build_training_corpus
 from table_ocr_spark.plans.lineage import run_pipeline
 
 __all__ = [
     "extract_documents",
-    "extract_text_udf",
     "sample_majority_vote",
     "run_pipeline",
     "build_training_corpus",

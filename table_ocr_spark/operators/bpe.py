@@ -32,8 +32,8 @@ Split of labor, pinned deliberately:
   maintained under a lazy max-heap, each merge touching only the
   words that contain its pair — subword-nmt's approach), so cost per
   merge scales with the pair's support, not the sample; the obvious
-  recount-everything loop is kept as ``_train_merges_reference`` and
-  differential-pinned in tests.
+  recount-everything loop lives in ``tests/test_bpe.py`` as the
+  differential reference.
 - APPLICATION is the distributed part: a map-only Arrow kernel, no
   exchange at all. Per word, the greedy lowest-rank-pair loop (the
   rank-dict formulation popularized by the GPT-2 reference encoder);
@@ -48,9 +48,10 @@ Validated table contract (``_check_merges``, enforced on every apply):
 
 - every component is a single character, the sentinel, or the product
   of an EARLIER merge — so the rank-min kernel and the rank-order
-  twin provably agree (an out-of-order pair like ``('ab','c')``
-  before ``('a','b')`` makes the two formulations diverge and is
-  rejected, as is any fused-alphabet symbol);
+  formulation (apply merges in learned order, each everywhere; the
+  tests' reference) provably agree (an out-of-order pair like
+  ``('ab','c')`` before ``('a','b')`` makes the two formulations
+  diverge and is rejected, as is any fused-alphabet symbol);
 - no merge may SPELL the sentinel out of literal text: a product that
   contains ``</w>`` is only legal when it inherits it from its right
   component (true end-of-word lineage). Crawled text legitimately
@@ -113,7 +114,7 @@ def _word_seq(word: str) -> Tuple[str, ...]:
 def _apply_pair(s: Tuple[str, ...], a: str, b: str) -> Tuple[str, ...]:
     """Replace every left-to-right non-overlapping (a, b) adjacency in
     ``s`` with the concatenated symbol — the one merge-rewrite shared
-    by the trainer, the kernel, and the order-apply twin."""
+    by the trainer, the kernel, and the tests' order-apply reference."""
     ab = a + b
     out: List[str] = []
     i = 0
@@ -202,7 +203,8 @@ def _train_merges(
     (-count, pair); stale entries (count changed since push) are
     discarded on pop, so the deterministic argmax — highest count,
     ties to the lexicographically smallest pair — is exact.
-    Differential-pinned against ``_train_merges_reference``."""
+    Differential-pinned against the recount-everything reference
+    trainer in ``tests/test_bpe.py``."""
     import heapq
     from collections import Counter, defaultdict
 
@@ -267,46 +269,13 @@ def _train_merges(
     return merges
 
 
-def _train_merges_reference(
-    vocab: Dict[str, int], n_merges: int
-) -> List[Tuple[str, str]]:
-    """The obvious recount-everything trainer — O(sample symbols) per
-    merge. Kept slow and readable as the differential twin for
-    ``_train_merges``; exercised only by tests."""
-    from collections import Counter
-
-    seqs: Dict[str, Tuple[str, ...]] = {w: _word_seq(w) for w in vocab}
-    merges: List[Tuple[str, str]] = []
-    taken: set = set()
-    guard = 0
-    while len(merges) < n_merges and guard < 4 * n_merges + 100:
-        guard += 1
-        pairs: Counter = Counter()
-        for w, freq in vocab.items():
-            s = seqs[w]
-            for i in range(len(s) - 1):
-                p = (s[i], s[i + 1])
-                if not _eow_collision(*p):
-                    pairs[p] += freq
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        if best not in taken:  # re-emerged pair: merge, no new rank
-            merges.append(best)
-            taken.add(best)
-        for w, s in seqs.items():
-            if best[0] in s:
-                seqs[w] = _apply_pair(s, *best)
-    return merges
-
-
 def _check_merges(merges: Sequence[Sequence[str]]) -> List[Tuple[str, str]]:
     """Validate a merge table against the symbol-space contract (see
     module docstring): pairs of non-empty strings, no duplicates,
     every component CONSTRUCTIBLE (a single character, the sentinel,
     or the product of an earlier merge), and no sentinel-spelling
     products. Constructibility is what makes the rank-min kernel and
-    the rank-order twin provably agree, and what turns a fused-
+    the rank-order formulation provably agree, and what turns a fused-
     alphabet table (subword-nmt) into a loud error instead of a
     silent systematic under-merge."""
     out: List[Tuple[str, str]] = []
@@ -374,24 +343,6 @@ def _encode_word(
     if len(cache) >= _CACHE_MAX:
         cache.clear()
     cache[word] = s
-    return s
-
-
-def _encode_word_by_order(
-    word: str, merges: Sequence[Tuple[str, str]]
-) -> Tuple[str, ...]:
-    """Differential twin: apply merges in LEARNED ORDER, each
-    everywhere (the subword-nmt formulation). Equivalent to
-    ``_encode_word`` for every table that passes ``_check_merges``
-    (constructibility is exactly the property that makes the two
-    formulations agree); kept slow and obvious, exercised only by
-    tests."""
-    s = _word_seq(word)
-    for a, b in merges:
-        if len(s) < 2:
-            break
-        if a in s:
-            s = _apply_pair(s, a, b)
     return s
 
 

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from typing import Iterator, List, Optional
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -288,18 +287,6 @@ def extract_documents(
         list(EXTRACT_SCHEMA.fields) + [pages.schema[c] for c in keep]
     )
     return df.mapInArrow(_kernel_batches("html", keep), schema)
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Scalar Arrow UDF: html binary → extracted main-content text.
-    Convenience path for single-column extraction inside larger plans
-    (e.g. the round-trip correctness query)."""
-    from table_ocr_spark.kernel.html_extract import extract_html
-
-    return pd.Series(
-        [extract_html(h).text if h is not None else "" for h in html]
-    )
 
 
 def latest_capture(pages: DataFrame) -> DataFrame:

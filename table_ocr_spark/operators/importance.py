@@ -35,25 +35,13 @@ collision is part of the method).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from table_ocr_spark.operators.textstats import tokens
 
 HASH_MIX = 2654435761  # Knuth multiplicative constant (same as simhash)
 HASH_MOD = 1 << 32
-
-
-def _bucket(gram: Column, n_buckets: int) -> Column:
-    """Pinned engine-portable bucket of a bigram string as a COLUMN
-    expression (the oracle-SQL twin of the kernel below; kept for
-    documentation and differential testing)."""
-    val = (
-        F.length(gram).cast("long") * 31
-        + F.ascii(F.substring(gram, 1, 1)).cast("long") * 7
-        + F.ascii(F.substring(gram, -1, 1)).cast("long")
-    )
-    return ((val * HASH_MIX) % HASH_MOD) % n_buckets
 
 
 def _bigram_bucket_udf(n_buckets: int):
@@ -73,7 +61,8 @@ def _bigram_bucket_udf(n_buckets: int):
     only to hash (len, first char, last char) would push ~15-30 bytes
     per bigram across the Arrow boundary and through JVM ascii/substring
     expressions — this kernel emits the 4-byte bucket directly
-    (measured ~2x on the 1M-doc rehearsal). Bit-pinned to ``_bucket``
+    (measured ~2x on the 1M-doc rehearsal). Bit-pinned to the
+    column-expression reference in ``tests/test_sampling_packing.py``
     and the oracle SQL: len(bigram) = len(a)+len(b)+1, first char =
     a[0], last char = b[-1]; Python ``ord`` == Spark/DuckDB ``ascii``
     (Unicode codepoint)."""

@@ -10,51 +10,38 @@ average document length — fits on the driver after one bounded
 aggregation phase, and scoring becomes a single map-only pass over
 the corpus. Nothing corpus-sized ever shuffles on a term.
 
-Two scoring engines, selected by ``method`` (r3 verdict #2/#5 +
-advice: the expression path alone was the perf-weak component):
+Scoring is one Arrow ``mapInPandas`` kernel: a single token pass per
+document builds a term->tf dict over the (broadcast) query vocabulary,
+scores every query from it, and — the pre-reduce — keeps only a
+per-partition top-k heap per query, so the number of rows LEAVING each
+task is ``<= n_queries * k``, independent of candidate count. Phase 2
+runs the global per-query window over ``<= k * n_partitions`` narrow
+survivor rows per query (r3 verdict: a single ``row_number`` window
+partitioned only by query funneled up to ``max_df_ratio`` of the
+corpus through ONE reducer task).
 
-- ``"expr"`` — per-term JVM column expressions: tf via one
-  ``F.filter`` pass per usable term, score an explicit left-to-right
-  fold. Bit-exact reproducible in ANSI SQL (the oracle pins this
-  path) but costs one interpreted array pass PER TERM per doc —
-  quadratic in query-term count. Guarded by ``max_expr_terms``:
-  forcing ``method="expr"`` past it raises (fail-fast like
-  ``max_cell_size``) because a 10k-term fold is also deep into
-  codegen-collapse territory.
-- ``"kernel"`` — one Arrow ``mapInPandas`` kernel: a single token
-  pass per document builds a term->tf dict over the (broadcast)
-  query vocabulary, scores every query from it, and — the pre-reduce
-  — keeps only a per-partition top-k heap per query, so the number
-  of rows LEAVING each task is ``<= n_queries * k``, independent of
-  candidate count. Arithmetic is the same float64 left-fold in the
-  same order as the expr path (a differential test pins exact
-  equality).
-- ``"auto"`` (default) — expr while the total usable-term count is
-  ``<= max_expr_terms``, kernel past it (measured crossover: the
-  kernel wins from ~10 terms upward at 1M docs; BASELINE.md r4).
+The kernel is the one engine because it won every measurement against
+per-term JVM column expressions (one interpreted ``F.filter`` pass per
+usable term, so quadratic in query-term count), with identical result
+rows: 2 queries / 6 terms 12.2 vs 19.8 s, a stop-word query 10.1 vs
+12.8 s (200k docs x 4 text, 4 cores), a 32-query batch 6.2 vs 19.5 s
+(BASELINE.md r4). Its arithmetic is the ANSI SQL fold the contract
+oracle writes, so it matches DuckDB bit for bit under ``idf="rational"``.
 
-Top-k is two-phase in BOTH engines (r3 verdict: the single
-``row_number`` window partitioned only by query funneled up to
-``max_df_ratio`` of the corpus through ONE reducer task):
-phase 1 reduces candidates to ``k`` per (query, input partition) —
-inside the kernel for ``"kernel"``, via a (query, partition-id)
-window for ``"expr"`` — phase 2 runs the global per-query window
-over ``<= k * n_partitions`` narrow survivor rows per query.
-
-Stats are likewise two-shape: a single wide aggregate (one column
-per vocab term — zero extra shuffle) while the vocabulary is
-``<= max_expr_terms``; past that, a distinct-terms explode +
-``groupBy(term).count()`` whose map-side combine ships at most
-``n_partitions * |vocab|`` tiny partial rows — never a wide-agg row
-and never a corpus-sized term shuffle.
+Stats are two-shape, chosen by the size of the query vocabulary: a
+single wide aggregate (one column per vocab term — zero extra shuffle)
+up to ``_WIDE_AGG_MAX_TERMS`` terms; past that, a distinct-terms
+explode + ``groupBy(term).count()`` whose map-side combine ships at
+most ``n_partitions * |vocab|`` tiny partial rows — never a wide-agg
+row and never a corpus-sized term shuffle.
 
 The classic scatter hazard is a stop-word query term: its candidate
 set is the whole corpus. ``max_df_ratio`` prunes query terms whose
 document frequency exceeds the ratio (they carry near-zero idf
 anyway); the default is 0.05 — eval-query-realistic (a term in >5%
 of a web corpus is functionally a stop word). Even at
-``max_df_ratio=1.0`` the kernel path stays safe: candidates are
-pre-reduced before anything shuffles.
+``max_df_ratio=1.0`` scoring stays safe: candidates are pre-reduced
+before anything shuffles.
 
 Determinism pins (the oracle-exactness rules used repo-wide):
 - tokenizer = the shared :func:`~table_ocr_spark.operators.textstats.
@@ -63,7 +50,7 @@ Determinism pins (the oracle-exactness rules used repo-wide):
 - query terms are deduplicated KEEPING FIRST-OCCURRENCE ORDER and the
   score is an explicit left-fold over them (``t1 + t2 + ...``), so
   float addition order is pinned and a SQL mirror writing the same
-  chain reproduces every bit (both engines share the fold order);
+  chain reproduces every bit;
 - ``idf="rational"`` = (N - df + 0.5) / (df + 0.5) — one correctly-
   rounded division, bit-identical on any IEEE engine (this is what
   the oracle pins); ``idf="ln"`` (default) = ln(1 + rational), the
@@ -85,6 +72,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from table_ocr_spark.operators.textstats import tokens
+
+# query vocabularies up to this size get df from one wide aggregate
+# (one column per term); larger ones from explode + groupBy
+_WIDE_AGG_MAX_TERMS = 64
 
 
 def _py_tokens(text: str) -> list:
@@ -155,7 +146,7 @@ def _kernel_scorer(
                         tf[w] = tf.get(w, 0) + 1
                 if not tf:
                     continue
-                # identical float64 fold as the expr engine:
+                # the oracle's float64 left-fold, term by term:
                 # idf * (tf*(k1+1)) / (tf + k1*(1-b + b*dl/avgdl))
                 denom_tail = k1 * (one_minus_b + b * dl / avgdl)
                 doc_id = ids.iloc[row_i]
@@ -198,8 +189,6 @@ def bm25_topk(
     query_id_col: str = "query_id",
     query_text_col: str = "query_text",
     max_queries: int = 1000,
-    method: str = "auto",
-    max_expr_terms: int = 64,
 ) -> DataFrame:
     """(query_id, doc_id, score, rank) — the ``k`` best-scoring
     documents per query, rank 1-based, ties broken by min doc id. A
@@ -209,25 +198,19 @@ def bm25_topk(
     One bounded stats phase, one map-only scoring pass, two-phase
     top-k (per-partition pre-reduce, then the global per-query
     window over ``<= k * n_partitions`` survivors). See the module
-    docstring for the engine selection (``method``) and the scale
-    argument of each phase.
+    docstring for the scale argument of each phase.
     """
     if idf not in ("ln", "rational"):
         raise ValueError(f"idf must be 'ln' or 'rational', got {idf!r}")
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     # k1=0 would make the saturation term 0/0 for any partially-
-    # matching doc — ZeroDivisionError in the kernel engine, silent
-    # NaN-drop in the expr engine (forking the pinned two-engine
-    # identity); b outside [0,1] inverts the length normalization
+    # matching doc (ZeroDivisionError in the kernel); b outside [0,1]
+    # inverts the length normalization
     if not k1 > 0:
         raise ValueError(f"k1 must be > 0, got {k1}")
     if not 0.0 <= b <= 1.0:
         raise ValueError(f"b must be in [0, 1], got {b}")
-    if method not in ("auto", "expr", "kernel"):
-        raise ValueError(
-            f"method must be 'auto', 'expr' or 'kernel', got {method!r}"
-        )
     qrows = queries.select(query_id_col, query_text_col).limit(
         max_queries + 1
     ).collect()
@@ -257,7 +240,7 @@ def bm25_topk(
         F.col(id_col), tokens(F.col(text_col)).alias("_toks")
     )
     # ---- stats phase: n_docs, dl_sum, per-term df ----
-    if len(vocab) <= max_expr_terms:
+    if len(vocab) <= _WIDE_AGG_MAX_TERMS:
         # ONE wide aggregate: doc count, token total, and per-term df
         # via array_contains — zero extra shuffle, corpus read once
         stats = toked.agg(
@@ -314,91 +297,28 @@ def bm25_topk(
             usable_by_qid[qid] = usable
     if not usable_by_qid:
         return _empty_result(docs, queries, query_id_col, id_col)
-    n_usable_total = sum(len(ts) for ts in usable_by_qid.values())
-
-    if method == "auto":
-        method = "expr" if n_usable_total <= max_expr_terms else "kernel"
-    elif method == "expr" and n_usable_total > max_expr_terms:
-        raise ValueError(
-            f"bm25_topk: method='expr' with {n_usable_total} usable query "
-            f"terms (> max_expr_terms={max_expr_terms}) — one interpreted "
-            "array pass per term per doc and a fold that deep collapse "
-            "codegen; use method='kernel' (identical scores, one token "
-            "pass) or raise max_expr_terms deliberately"
-        )
-
-    if method == "kernel":
-        qid_type = queries.schema[query_id_col].dataType
-        did_type = docs.schema[id_col].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField(query_id_col, qid_type),
-                T.StructField(id_col, did_type),
-                T.StructField("score", T.DoubleType()),
-            ]
-        )
-        qids = list(usable_by_qid)
-        scorer = _kernel_scorer(
-            usable={i: usable_by_qid[q] for i, q in enumerate(qids)},
-            idfs={t: _idf(t) for ts in usable_by_qid.values() for t in ts},
-            k=k,
-            k1=k1,
-            b=b,
-            avgdl=avgdl,
-            out_schema=out_schema,
-            id_field=id_col,
-            qid_vals=dict(enumerate(qids)),
-        )
-        pre_reduced = toked.mapInPandas(scorer, schema=out_schema)
-    else:
-        dl = F.size("_toks").cast("double")
-        one_minus_b = 1.0 - b
-
-        def _eq(term):
-            # factory, NOT a default-arg lambda: F.filter passes
-            # (element, index) to a 2-arg lambda, silently clobbering
-            # a `t=t` default
-            return lambda x: x == F.lit(term)
-
-        structs = []
-        for qid, usable in usable_by_qid.items():
-            score = None
-            for t in usable:
-                tf = F.size(F.filter(F.col("_toks"), _eq(t))).cast("double")
-                contrib = (
-                    F.lit(_idf(t))
-                    * (tf * F.lit(k1 + 1.0))
-                    / (tf + F.lit(k1) * (F.lit(one_minus_b)
-                                         + F.lit(b) * dl / F.lit(avgdl)))
-                )
-                score = contrib if score is None else score + contrib
-            structs.append(
-                F.struct(F.lit(qid).alias("qid"), score.alias("score"))
-            )
-        scored = (
-            toked.select(
-                F.col(id_col), F.explode(F.array(*structs)).alias("_q")
-            )
-            .select(
-                F.col("_q.qid").alias(query_id_col),
-                F.col(id_col),
-                F.col("_q.score").alias("score"),
-            )
-            .filter(F.col("score") > 0)
-        )
-        # phase-1 pre-reduce (r3 verdict #2): top-k per (query, input
-        # partition). The exchange hashes on (query, partition-id) so
-        # no reducer ever sees more than one input partition's
-        # candidates for one query — the single-task funnel is gone.
-        w_local = Window.partitionBy("_pid", query_id_col).orderBy(
-            F.desc("score"), F.col(id_col)
-        )
-        pre_reduced = (
-            scored.withColumn("_pid", F.spark_partition_id())
-            .withColumn("_lrank", F.row_number().over(w_local))
-            .filter(F.col("_lrank") <= k)
-            .drop("_pid", "_lrank")
-        )
+    qid_type = queries.schema[query_id_col].dataType
+    did_type = docs.schema[id_col].dataType
+    out_schema = T.StructType(
+        [
+            T.StructField(query_id_col, qid_type),
+            T.StructField(id_col, did_type),
+            T.StructField("score", T.DoubleType()),
+        ]
+    )
+    qids = list(usable_by_qid)
+    scorer = _kernel_scorer(
+        usable={i: usable_by_qid[q] for i, q in enumerate(qids)},
+        idfs={t: _idf(t) for ts in usable_by_qid.values() for t in ts},
+        k=k,
+        k1=k1,
+        b=b,
+        avgdl=avgdl,
+        out_schema=out_schema,
+        id_field=id_col,
+        qid_vals=dict(enumerate(qids)),
+    )
+    pre_reduced = toked.mapInPandas(scorer, schema=out_schema)
 
     # phase 2: the global per-query window now ranks at most
     # k * n_input_partitions narrow survivor rows per query

@@ -243,43 +243,33 @@ def _bounded_train_sample(emb: DataFrame, vec_col: str, max_train: int):
     survivors. The filter keeps EVERY row below the cutoff, so if at
     least ``max_train`` rows survive, the global top-``max_train`` is
     provably inside the survivor set and the sample is BIT-IDENTICAL
-    to the unfiltered rule; the (vanishingly rare) under-full filter
-    falls back to the plain sort. Same shape as train_bpe's
-    sample-prefilter composition (operators/bpe.py).
+    to the unfiltered rule. An under-full filter (vanishingly rare)
+    doubles the cutoff's span and filters again, so it never falls
+    back to an unfiltered sort until the span is the whole hash range.
+    Same shape as train_bpe's sample-prefilter composition
+    (operators/bpe.py).
     """
     base = _with_vec(emb, vec_col, with_label=False).filter(
         F.col("vec").isNotNull() & (F.size("vec") > 0)
     )
     n = base.count()
-    if n <= 4 * max_train:
-        # the trap cannot fire (per-task top-N is bounded by the
-        # per-task row count) — one sort pass, two passes total
-        return (
-            base.orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
-            .limit(max_train)
-            .collect()
-        )
-    # xxhash64 is uniform over [-2^63, 2^63)
-    cutoff = -(2 ** 63) + (3 * max_train * (2 ** 64)) // n
-    pre = base.filter(F.xxhash64(F.col("vec_id")) < F.lit(int(cutoff)))
-    rows = (
-        pre.orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
-        .limit(max_train)
-        .collect()
-    )
-    if len(rows) >= max_train:
+    h = F.xxhash64(F.col("vec_id"))
+    # xxhash64 is uniform over [-2^63, 2^63); at n <= 4 * max_train the
+    # trap cannot fire (per-task top-N is bounded by the per-task row
+    # count), so the first pass sorts the whole range
+    full = 2 ** 64
+    span = full if n <= 4 * max_train else (3 * max_train * full) // n
+    while True:
+        span = min(span, full)
+        pre = base if span == full else base.filter(h < F.lit(span - 2 ** 63))
+        rows = pre.orderBy(h, F.col("vec_id")).limit(max_train).collect()
         # a FULL prefiltered sample proves the global top-N survived
         # the cutoff (every row below it is present) — no separate
         # pre-count pass needed (review r5: the count was a third
         # corpus scan spent validating the common case)
-        return rows
-    # vanishingly rare under-full filter: fall back to the plain sort
-    return (
-        base.orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
-        .limit(max_train)
-        .collect()
-    )
-
+        if len(rows) >= max_train or span == full:
+            return rows
+        span *= 2
 
 
 def train_pq_codebooks(
@@ -1087,9 +1077,11 @@ def cluster_pairs_kernel(
     value). Rows whose ``cell_col`` is NULL are dropped (an equi-join
     would never match them; :func:`semantic_dedup` NULLs the cell of
     zero-norm vectors upstream); zero-norm vectors inside a cell are
-    dropped for the same reason. Integer ids order identically in
-    numpy and Spark; string ids assume ASCII (Python code-point order
-    vs UTF8String byte order diverge past ASCII).
+    dropped for the same reason. Ids order identically in the kernel
+    and in Spark, strings included: Python compares ``str`` by code
+    point, Spark compares ``UTF8String`` by its UTF-8 bytes, and UTF-8
+    was designed so that byte order IS code-point order (only UTF-16
+    code-unit order diverges, past U+FFFF).
     """
     import numpy as np
     import pandas as pd

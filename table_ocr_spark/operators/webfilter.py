@@ -90,10 +90,10 @@ GOPHER_MIN_STOPWORDS = 2
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-# Python-twin pins for the Arrow kernels: Java regex \s is ASCII
-# [ \t\n\x0B\f\r] while Python re \s matches Unicode whitespace — the
-# kernels MUST use this explicit class or the two engines fork on
-# NBSP-bearing crawl text (same twin-pinning discipline as
+# Python pin for _repetition_kernel_udf's tokens: Java regex \s is
+# ASCII [ \t\n\x0B\f\r] while Python re \s matches Unicode whitespace,
+# so the kernel MUST use this explicit class or it splits NBSP-bearing
+# crawl text where tokens() does not (same twin-pinning discipline as
 # kernel/textops.py's fence stripper and its JVM twin).
 _PY_WS = "[ \t\n\x0b\f\r]+"
 
@@ -116,52 +116,9 @@ def _min_words_re(k: int) -> str:
     (12.9 vs 15.8 s at 1M docs). Equivalence: >= k words means the
     first k words w1..wk appear as w1 \\s+ ... \\s+ wk, which the
     greedy pattern matches; conversely a match exhibits k non-space
-    runs separated by whitespace. Java \\S == NOT [ \\t\\n\\x0B\\f\\r],
-    the same class both twins pin."""
+    runs separated by whitespace. Java \\S == NOT [ \\t\\n\\x0B\\f\\r]
+    (ASCII only: NBSP is not a word separator)."""
     return r"(\S+\s+){%d}\S" % (k - 1)
-
-
-def _c4_kernel_udf(min_words_per_line: int):
-    """text -> (n_lines, n_kept, text_clean) in one Arrow batch.
-    MEASURED AND LOSES (kept as the differential twin, not the
-    default): 24.7 s vs the expression form's 15.8 s at 1M docs —
-    unlike the per-doc Counter kernels (textstats._line_stats_udf),
-    the alternative here is a linear interpreted HOF, not a corpus
-    exchange, so the Arrow text transfer + Python loop buys nothing.
-    Python regex pins: `_PY_WS` for words (NOT re's unicode \\s),
-    patterns shared verbatim with the expression form (the subset
-    used — char classes, `|`, anchors — reads identically in Java
-    regex, RE2, and Python re)."""
-    import pandas as pd
-
-    @F.pandas_udf("n_lines long, n_kept long, text_clean string")
-    def udf(texts):  # type: ignore[no-untyped-def]
-        import re
-
-        ws = re.compile(_PY_WS)
-        term = re.compile(C4_TERMINAL_PUNCT_RE)
-        nl, nk, tc = [], [], []
-        for t in texts:
-            lines = [
-                ln.strip(LINE_TRIM_CHARS) for ln in (t or "").split("\n")
-            ]
-            lines = [ln for ln in lines if ln]
-            kept = [
-                ln
-                for ln in lines
-                if term.search(ln)
-                and len([w for w in ws.split(ln) if w])
-                >= min_words_per_line
-                and not any(p in ln.lower() for p in C4_LINE_BLOCKLIST)
-            ]
-            nl.append(len(lines))
-            nk.append(len(kept))
-            tc.append("\n".join(kept))
-        return pd.DataFrame(
-            {"n_lines": nl, "n_kept": nk, "text_clean": tc}
-        )
-
-    return udf
 
 
 def c4_clean(
@@ -170,7 +127,6 @@ def c4_clean(
     id_col: str = "doc_id",
     min_words_per_line: int = C4_MIN_WORDS_PER_LINE,
     min_kept_lines: int = C4_MIN_KEPT_LINES,
-    engine: str = "expr",
 ) -> DataFrame:
     """C4 line-rule cleaning: keep a line iff it ends in terminal
     punctuation AND has >= ``min_words_per_line`` words AND contains no
@@ -185,54 +141,35 @@ def c4_clean(
     pipeline completes the drop with ``.filter("c4_pass")``.
     Map-only; plan contains no Exchange (plan-asserted in tests).
 
-    ``engine='expr'`` (default) is UDF-free whole-stage-codegen'd
-    column expressions; ``'kernel'`` is the Arrow-batch twin, which
-    was MEASURED AND LOST at 1M docs (24.7 vs 15.8 s — see
-    :func:`_c4_kernel_udf`) and stays for differential testing.
+    UDF-free column expressions, whole-stage codegen'd around one HOF
+    line pass. An Arrow-batch kernel of the same rules measured slower
+    at 1M docs (24.7 vs 14.6 s, BASELINE.md r4): the alternative here
+    is a linear HOF, not a corpus exchange, so the Arrow text transfer
+    and Python loop buy nothing.
     """
-    if engine not in ("kernel", "expr"):
-        raise ValueError(f"engine must be 'kernel' or 'expr', got {engine!r}")
-    base = df.select(
+    lined = df.select(
         F.col(id_col),
         F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
+    ).select(id_col, "_t", _trimmed_lines("_t").alias("_lines"))
+
+    def _keep(line: Column) -> Column:
+        ok = line.rlike(C4_TERMINAL_PUNCT_RE)
+        if min_words_per_line >= 1:
+            ok = ok & line.rlike(_min_words_re(min_words_per_line))
+        low = F.lower(line)
+        for phrase in C4_LINE_BLOCKLIST:
+            ok = ok & ~low.contains(phrase)
+        return ok
+
+    kept = F.filter(F.col("_lines"), _keep)
+    st = lined.select(
+        id_col,
+        F.size("_lines").cast("long").alias("n_lines"),
+        F.size(kept).cast("long").alias("n_kept"),
+        F.array_join(kept, "\n").alias("text_clean"),
+        F.lower("_t").alias("_low"),
+        F.col("_t").contains("{").alias("has_brace"),
     )
-    if engine == "kernel":
-        k = base.select(
-            id_col,
-            "_t",
-            _c4_kernel_udf(min_words_per_line)(F.col("_t")).alias("_k"),
-        )
-        st = k.select(
-            id_col,
-            F.col("_k.n_lines").alias("n_lines"),
-            F.col("_k.n_kept").alias("n_kept"),
-            F.col("_k.text_clean").alias("text_clean"),
-            F.lower("_t").alias("_low"),
-            F.col("_t").contains("{").alias("has_brace"),
-        )
-    else:
-        lined = base.select(
-            id_col, "_t", _trimmed_lines("_t").alias("_lines")
-        )
-
-        def _keep(line: Column) -> Column:
-            ok = line.rlike(C4_TERMINAL_PUNCT_RE)
-            if min_words_per_line >= 1:
-                ok = ok & line.rlike(_min_words_re(min_words_per_line))
-            low = F.lower(line)
-            for phrase in C4_LINE_BLOCKLIST:
-                ok = ok & ~low.contains(phrase)
-            return ok
-
-        kept = F.filter(F.col("_lines"), _keep)
-        st = lined.select(
-            id_col,
-            F.size("_lines").cast("long").alias("n_lines"),
-            F.size(kept).cast("long").alias("n_kept"),
-            F.array_join(kept, "\n").alias("text_clean"),
-            F.lower("_t").alias("_low"),
-            F.col("_t").contains("{").alias("has_brace"),
-        )
     has_doc_block = F.lit(False)
     for phrase in C4_DOC_BLOCKLIST:
         has_doc_block = has_doc_block | F.col("_low").contains(phrase)
@@ -253,61 +190,10 @@ def c4_clean(
     )
 
 
-def _gopher_kernel_udf():
-    """text -> raw counts (n_lines, n_bullet, n_ellipsis, n_toks,
-    n_alpha, n_stop) in one Arrow batch; fractions and flags derive
-    JVM-side. MEASURED DEAD EVEN with the six-HOF expression twin
-    (35.3 vs 35.4 s at 1M docs), so the UDF-free twin is the default;
-    kept as the differential twin. (A third strategy — whole-text
-    multiline ``regexp_count`` + per-stopword ``rlike``, zero HOFs —
-    measured 70.3 s: N full-text regex scans lose to one line pass.)
-    Same Python pins as :func:`_c4_kernel_udf`."""
-    import pandas as pd
-
-    @F.pandas_udf(
-        "n_lines long, n_bullet long, n_ellipsis long, "
-        "n_toks long, n_alpha long, n_stop long"
-    )
-    def udf(texts):  # type: ignore[no-untyped-def]
-        import re
-
-        ws = re.compile(_PY_WS)
-        bullet = re.compile(GOPHER_BULLET_RE)
-        ellipsis = re.compile(GOPHER_ELLIPSIS_RE)
-        alpha = re.compile("[A-Za-z]")
-        stops = set(GOPHER_STOPWORDS)
-        out = {k: [] for k in
-               ("n_lines", "n_bullet", "n_ellipsis",
-                "n_toks", "n_alpha", "n_stop")}
-        for t in texts:
-            t = t or ""
-            lines = [ln.strip(LINE_TRIM_CHARS) for ln in t.split("\n")]
-            lines = [ln for ln in lines if ln]
-            toks = [w for w in ws.split(t) if w]
-            out["n_lines"].append(len(lines))
-            out["n_bullet"].append(
-                sum(1 for ln in lines if bullet.search(ln))
-            )
-            out["n_ellipsis"].append(
-                sum(1 for ln in lines if ellipsis.search(ln))
-            )
-            out["n_toks"].append(len(toks))
-            out["n_alpha"].append(
-                sum(1 for w in toks if alpha.search(w))
-            )
-            out["n_stop"].append(
-                len(stops.intersection(w.lower() for w in toks))
-            )
-        return pd.DataFrame(out)
-
-    return udf
-
-
 def gopher_line_rules(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    engine: str = "expr",
 ) -> DataFrame:
     """Gopher document-SHAPE rules — the line-start/line-end/word-form
     axis :func:`textstats.gopher_quality` (length / mean-word-length /
@@ -317,55 +203,41 @@ def gopher_line_rules(
     present. Emits per-rule stats + flags + the conjunction.
     Map-only; plan contains no Exchange (plan-asserted in tests).
 
-    ``engine='expr'`` (default) is the UDF-free six-HOF-pass form;
-    ``'kernel'`` is the Arrow-batch twin — measured dead even at 1M
-    docs (see :func:`_gopher_kernel_udf`), so UDF-free wins by
-    simplicity. Kept for differential testing.
+    UDF-free: six HOF passes over the bound line and token arrays. An
+    Arrow-batch kernel of the same counts measured even at 1M docs
+    (36.7 vs 35.7 s, BASELINE.md r4), so the UDF-free form is the one
+    engine. (A third strategy — whole-text multiline ``regexp_count`` +
+    per-stopword ``rlike``, zero HOFs — measured 70.3 s: N full-text
+    regex scans lose to one line pass.)
     """
-    if engine not in ("kernel", "expr"):
-        raise ValueError(f"engine must be 'kernel' or 'expr', got {engine!r}")
-    base = df.select(
+    lined = df.select(
         F.col(id_col),
         F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
+    ).select(
+        id_col,
+        _trimmed_lines("_t").alias("_lines"),
+        tokens(F.col("_t")).alias("_toks"),
     )
-    if engine == "kernel":
-        k = base.select(
-            id_col, _gopher_kernel_udf()(F.col("_t")).alias("_g")
-        )
-        n_lines = F.col("_g.n_lines")
-        n_toks = F.col("_g.n_toks")
-        bullet = F.col("_g.n_bullet")
-        ellipsis = F.col("_g.n_ellipsis")
-        alpha = F.col("_g.n_alpha")
-        n_stop = F.col("_g.n_stop")
-        src = k
-    else:
-        lined = base.select(
-            id_col,
-            _trimmed_lines("_t").alias("_lines"),
-            tokens(F.col("_t")).alias("_toks"),
-        )
-        n_lines = F.size("_lines").cast("long")
-        n_toks = F.size("_toks").cast("long")
-        bullet = F.size(
-            F.filter(F.col("_lines"), lambda l: l.rlike(GOPHER_BULLET_RE))
-        ).cast("long")
-        ellipsis = F.size(
-            F.filter(F.col("_lines"), lambda l: l.rlike(GOPHER_ELLIPSIS_RE))
-        ).cast("long")
-        alpha = F.size(
-            F.filter(F.col("_toks"), lambda w: w.rlike("[A-Za-z]"))
-        ).cast("long")
-        toks_low = F.transform(F.col("_toks"), F.lower)
-        n_stop = sum(
-            (
-                F.array_contains(toks_low, w).cast("int")
-                for w in GOPHER_STOPWORDS
-            ),
-            F.lit(0),
-        ).cast("long")
-        src = lined
-    st = src.select(
+    n_lines = F.size("_lines").cast("long")
+    n_toks = F.size("_toks").cast("long")
+    bullet = F.size(
+        F.filter(F.col("_lines"), lambda l: l.rlike(GOPHER_BULLET_RE))
+    ).cast("long")
+    ellipsis = F.size(
+        F.filter(F.col("_lines"), lambda l: l.rlike(GOPHER_ELLIPSIS_RE))
+    ).cast("long")
+    alpha = F.size(
+        F.filter(F.col("_toks"), lambda w: w.rlike("[A-Za-z]"))
+    ).cast("long")
+    toks_low = F.transform(F.col("_toks"), F.lower)
+    n_stop = sum(
+        (
+            F.array_contains(toks_low, w).cast("int")
+            for w in GOPHER_STOPWORDS
+        ),
+        F.lit(0),
+    ).cast("long")
+    st = lined.select(
         id_col,
         n_lines.alias("n_lines"),
         F.round(bullet / F.greatest(n_lines, F.lit(1)), 6).alias(

@@ -13,10 +13,8 @@ whole pipeline is one lazy plan until the report forces it):
 5. exact dedup on normalized text (canonical = min url)
 6. MinHash+LSH near-dup removal at the given Jaccard threshold
    (exact-verified pairs → connected-component closure → longest-text
-   survivor per cluster; ``near_dedup="pairwise"`` selects the cheap
-   drop-the-greater-url shortcut instead, which over-keeps on
-   non-transitive similarity triangles. Cluster mode runs the CC
-   convergence jobs eagerly at this stage.)
+   survivor per cluster; the CC convergence jobs run eagerly at this
+   stage)
 7. PII redaction (emails/phones → typed placeholders)
 8. (optional) benchmark decontamination — drop docs whose k-shingle
    overlap with a benchmark set crosses the threshold
@@ -43,7 +41,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from table_ocr_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
+from table_ocr_spark.operators.dedup import (
+    cluster_survivors,
+    duplicate_clusters,
+    exact_dedup,
+    minhash_lsh_pairs,
+)
 from table_ocr_spark.operators.extract import extract_documents, latest_capture
 from table_ocr_spark.operators.textstats import gopher_quality, redact_pii
 
@@ -511,7 +514,6 @@ def build_training_corpus(
     n_tiers: int | None = None,
     token_budget: int | None = None,
     tier_mix: dict | None = None,
-    near_dedup: str = "cluster",
     allow_upsampling: bool = False,
 ) -> tuple[DataFrame, CorpusReport]:
     """pages(url, warc_ts, html, ...) → (corpus(url, text, n_emails,
@@ -531,10 +533,6 @@ def build_training_corpus(
     silently caps at one pass."""
     # argument contract checks BEFORE the first materializing job —
     # a typo must fail in milliseconds, not after hours of extraction
-    if near_dedup not in ("cluster", "pairwise"):
-        raise ValueError(
-            f"near_dedup must be 'cluster' or 'pairwise', got {near_dedup!r}"
-        )
     if token_budget is not None and n_tiers is None:
         raise ValueError("token_budget requires n_tiers (budgets are per tier)")
     if allow_upsampling and token_budget is None:
@@ -568,33 +566,19 @@ def build_training_corpus(
         uniq, text_col="text", id_col="url", k=shingle_k,
         threshold=minhash_threshold,
     )
-    if near_dedup == "cluster":
-        # transitive closure + best-representative survivor (longest
-        # text, ties to min url) — near-dup is not transitive, so the
-        # pairwise shortcut below over-keeps (two docs both similar to
-        # a third but not to each other would BOTH survive). The CC
-        # loop runs its convergence jobs here, so this stage is eager.
-        from table_ocr_spark.operators.dedup import (
-            cluster_survivors,
-            duplicate_clusters,
-        )
-
-        clusters = duplicate_clusters(uniq, pairs, id_col="url")
-        scores = uniq.select(
-            "url", F.length("text").cast("double").alias("_len")
-        )
-        keep = (
-            cluster_survivors(clusters, scores, id_col="url", score_col="_len")
-            .filter(F.col("keep"))
-            .select("url")
-        )
-        near_uniq = uniq.join(keep, "url", "left_semi").cache()
-    elif near_dedup == "pairwise":
-        # cheap shape: drop the greater url of every pair — no
-        # iteration, one anti-join, but over-keeps on non-transitive
-        # similarity triangles
-        losers = pairs.select(F.col("id_b").alias("url")).distinct()
-        near_uniq = uniq.join(losers, "url", "left_anti").cache()
+    # transitive closure + best-representative survivor (longest text,
+    # ties to min url) — near-dup is not transitive, so dropping one
+    # side of every pair would over-keep (two docs both similar to a
+    # third but not to each other would BOTH survive). The CC loop
+    # runs its convergence jobs here, so this stage is eager.
+    clusters = duplicate_clusters(uniq, pairs, id_col="url")
+    scores = uniq.select("url", F.length("text").cast("double").alias("_len"))
+    keep = (
+        cluster_survivors(clusters, scores, id_col="url", score_col="_len")
+        .filter(F.col("keep"))
+        .select("url")
+    )
+    near_uniq = uniq.join(keep, "url", "left_semi").cache()
     n_near = near_uniq.count()
 
     clean = redact_pii(near_uniq, text_col="text", id_col="url")
@@ -861,7 +845,6 @@ def crawl_to_shards(
     minhash_threshold: float = 0.8,
     shingle_k: int = 3,
     benchmark: DataFrame | None = None,
-    near_dedup: str = "cluster",
     allow_upsampling: bool = False,
 ) -> dict:
     """THE north-star composition in one call: raw WARC container
@@ -908,7 +891,6 @@ def crawl_to_shards(
         n_tiers=n_tiers,
         token_budget=token_budget,
         tier_mix=tier_mix,
-        near_dedup=near_dedup,
         allow_upsampling=allow_upsampling,
     )
     tier_report = materialize_tiered_corpus(

@@ -4,6 +4,7 @@ count/array consistency, and the pack_sequences weight integration
 that makes the documented BPE-weight swap-in executable end to end."""
 
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,8 +12,10 @@ from pyspark.sql import functions as F
 from table_ocr_spark.operators.bpe import (
     EOW,
     MAX_TRAIN_DOCS,
+    _apply_pair,
     _encode_word,
-    _encode_word_by_order,
+    _eow_collision,
+    _word_seq,
     apply_bpe,
     bpe_token_count,
     train_bpe,
@@ -21,6 +24,49 @@ from table_ocr_spark.operators.bpe import (
 
 def _ranks(merges):
     return {tuple(m): i for i, m in enumerate(merges)}
+
+
+def _train_merges_reference(vocab, n_merges):
+    """The obvious recount-everything trainer — O(sample symbols) per
+    merge. Slow and readable: the differential reference for the
+    indexed ``bpe._train_merges``."""
+    seqs = {w: _word_seq(w) for w in vocab}
+    merges = []
+    taken = set()
+    guard = 0
+    while len(merges) < n_merges and guard < 4 * n_merges + 100:
+        guard += 1
+        pairs = Counter()
+        for w, freq in vocab.items():
+            s = seqs[w]
+            for i in range(len(s) - 1):
+                p = (s[i], s[i + 1])
+                if not _eow_collision(*p):
+                    pairs[p] += freq
+        if not pairs:
+            break
+        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+        if best not in taken:  # re-emerged pair: merge, no new rank
+            merges.append(best)
+            taken.add(best)
+        for w, s in seqs.items():
+            if best[0] in s:
+                seqs[w] = _apply_pair(s, *best)
+    return merges
+
+
+def _encode_word_by_order(word, merges):
+    """Apply merges in LEARNED ORDER, each everywhere (the subword-nmt
+    formulation). Equivalent to ``bpe._encode_word`` for every table
+    that passes ``_check_merges`` (constructibility is exactly the
+    property that makes the two formulations agree)."""
+    s = _word_seq(word)
+    for a, b in merges:
+        if len(s) < 2:
+            break
+        if a in s:
+            s = _apply_pair(s, a, b)
+    return s
 
 
 class TestTrain:
@@ -138,10 +184,7 @@ class TestValidator:
 
 class TestTrainerDifferential:
     def test_indexed_matches_reference(self):
-        from table_ocr_spark.operators.bpe import (
-            _train_merges,
-            _train_merges_reference,
-        )
+        from table_ocr_spark.operators.bpe import _train_merges
 
         for seed in range(6):
             rng = random.Random(seed)

@@ -603,31 +603,6 @@ class TestCrawlPagesTransform:
         assert a == b and len(a) == 9
 
 
-def test_extract_text_udf_matches_extract_documents(spark, tmp_path):
-    """The exported single-column convenience UDF must agree with the
-    full extract_documents operator on the same html bytes."""
-    from table_ocr_spark.datagen import write_pages_parquet
-    from table_ocr_spark.operators.extract import (
-        extract_documents,
-        extract_text_udf,
-    )
-
-    pq = str(tmp_path / "pages.parquet")
-    write_pages_parquet(pq, n_docs=30, seed=5)
-    pages = spark.read.parquet(pq)
-    via_udf = {
-        r["url"]: r["t"]
-        for r in pages.select(
-            "url", extract_text_udf(F.col("html")).alias("t")
-        ).collect()
-    }
-    via_op = {
-        r["url"]: r["extracted_text"]
-        for r in extract_documents(pages).collect()
-    }
-    assert via_udf == via_op
-
-
 class TestCrawlToShards:
     def test_warc_bytes_to_packed_shards_one_call(self, spark, tmp_path):
         """The north-star composition: .warc.gz container bytes in,

@@ -242,3 +242,38 @@ def test_bounded_train_sample_prefilter_is_bit_identical(spark):
         .collect()
     )
     assert [r["vec_id"] for r in got] == [r["vec_id"] for r in plain]
+
+
+def test_bounded_train_sample_widens_under_full_cutoff(spark):
+    """vec_ids picked by their xxhash64 so the first cutoff keeps only
+    two rows: the sampler must widen the cutoff and filter again, and
+    still return exactly the plain smallest-xxhash sort."""
+    from pyspark.sql import functions as F
+    from table_ocr_spark.operators.similarity import _bounded_train_sample
+
+    max_train, n = 5, 60
+    # first span is 3 * max_train / n = 1/4 of the hash range
+    first_cutoff = -(2 ** 63) + (3 * max_train * 2 ** 64) // n
+    hashed = [
+        (r["id"], r["h"])
+        for r in spark.range(20_000)
+        .select("id", F.xxhash64("id").alias("h"))
+        .collect()
+    ]
+    low = [i for i, h in hashed if h < first_cutoff][:2]
+    mid = [i for i, h in hashed if first_cutoff <= h < 0][:10]
+    high = [i for i, h in hashed if h >= 0][: n - len(low) - len(mid)]
+    ids = low + mid + high
+    assert len(low) == 2 and len(ids) == n
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0]) for i in ids],
+        "vec_id long, embedding array<float>",
+    )
+    got = _bounded_train_sample(emb, "embedding", max_train)
+    plain = (
+        emb.orderBy(F.xxhash64(F.col("vec_id")), F.col("vec_id"))
+        .limit(max_train)
+        .collect()
+    )
+    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in plain]
+    assert len(got) == max_train

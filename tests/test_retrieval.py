@@ -149,76 +149,86 @@ def _collect_ranked(df):
     )
 
 
-def test_kernel_and_expr_engines_are_bit_identical(spark):
-    # the Arrow kernel must reproduce the expression fold EXACTLY —
-    # same float64 ops in the same pinned left-fold order
-    docs = _df(spark).repartition(5)
-    qs = _qdf(
-        spark,
-        [("q1", "apple durian"), ("q2", "banana"),
-         ("q3", "cherry banana apple"), ("q4", "zzz elderberry")],
-    )
+def _reference_ranked(qs, k, idf_mode):
+    """_py_bm25 ranked like the operator: score desc, then min doc_id."""
+    out = []
+    for qid, text in qs:
+        got = _py_bm25(text, idf_mode=idf_mode, max_df_ratio=1.0)
+        ranked = sorted(got.items(), key=lambda x: (-x[1], x[0]))[:k]
+        out += [(qid, i + 1, d, s) for i, (d, s) in enumerate(ranked)]
+    return sorted(out)
+
+
+def test_kernel_matches_reference_across_partitions(spark):
+    # the Arrow kernel must reproduce the pinned left-fold EXACTLY
+    # (same float64 ops, same order) for both idf recipes
+    qs = [("q1", "apple durian"), ("q2", "banana"),
+          ("q3", "cherry banana apple"), ("q4", "zzz elderberry")]
     for idf_mode in ("ln", "rational"):
-        a = _collect_ranked(bm25_topk(
-            docs, qs, k=5, idf=idf_mode, max_df_ratio=1.0, method="expr"))
-        b = _collect_ranked(bm25_topk(
-            docs, qs, k=5, idf=idf_mode, max_df_ratio=1.0, method="kernel"))
-        assert a == b, idf_mode  # exact float equality included
-        assert len(a) > 0
+        got = _collect_ranked(bm25_topk(
+            _df(spark).repartition(5), _qdf(spark, qs), k=5,
+            idf=idf_mode, max_df_ratio=1.0))
+        want = _reference_ranked(qs, 5, idf_mode)
+        assert got == want, idf_mode  # exact float equality included
+        assert len(want) > 0
 
 
 def test_topk_partition_count_invariance(spark):
-    # the two-phase pre-reduce (per-partition heap / (_pid, qid)
+    # the two-phase pre-reduce (per-partition heap, then the global
     # window) must not change results with the physical partitioning
+    want = _reference_ranked([("q", "apple cherry")], 3, "ln")
     qs = _qdf(spark, [("q", "apple cherry")])
-    base = None
-    for n_parts, method in [(1, "expr"), (7, "expr"), (1, "kernel"),
-                            (7, "kernel"), (3, "auto")]:
+    for n_parts in (1, 3, 7):
         got = _collect_ranked(bm25_topk(
-            _df(spark).repartition(n_parts), qs, k=3,
-            max_df_ratio=1.0, method=method))
-        if base is None:
-            base = got
-        assert got == base, (n_parts, method)
-    assert len(base) == 3
+            _df(spark).repartition(n_parts), qs, k=3, max_df_ratio=1.0))
+        assert got == want, n_parts
+    assert len(want) == 3
 
 
-def test_expr_path_has_pre_reduce_in_plan(spark):
-    # r3 verdict #2: the global per-query window must be fed by a
-    # per-(partition, query) local top-k, never raw candidates
-    plan = bm25_topk(
-        _df(spark), _qdf(spark, [("q", "apple")]),
-        max_df_ratio=1.0, method="expr",
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "_pid" in plan and "spark_partition_id" in plan.lower()
-    # the local pre-reduce is a group-limit keyed by (_pid, query) —
-    # Spark 4 pushes row_number<=k down as WindowGroupLimit
-    assert "WindowGroupLimit [_pid" in plan
+def test_kernel_pre_reduce_bounds_rows_per_partition():
+    # the global per-query window must be fed at most k rows per
+    # (query, partition), never raw candidates: one partition of all
+    # eight docs, two queries matching four docs each, k=2 -> 2 + 2 rows
+    import pandas as pd
 
+    from pyspark.sql import types as T
 
-def test_expr_forced_past_term_guard_raises(spark):
-    qs = _qdf(spark, [("q", "apple banana cherry durian")])
-    with pytest.raises(ValueError, match="max_expr_terms"):
-        bm25_topk(_df(spark), qs, max_df_ratio=1.0, method="expr",
-                  max_expr_terms=3)
-    # auto silently routes the same batch to the kernel
-    out = bm25_topk(_df(spark), qs, max_df_ratio=1.0, method="auto",
-                    max_expr_terms=3)
-    assert out.count() > 0
+    from table_ocr_spark.operators.retrieval import _kernel_scorer
+
+    schema = T.StructType([
+        T.StructField("query_id", T.StringType()),
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+    ])
+    toks = [d[1].split() for d in DOCS]
+    scorer = _kernel_scorer(
+        usable={0: ["apple"], 1: ["banana"]},
+        idfs={"apple": 1.0, "banana": 1.0},
+        k=2, k1=1.2, b=0.75,
+        avgdl=sum(len(t) for t in toks) / len(toks),
+        out_schema=schema, id_field="doc_id",
+        qid_vals={0: "a", 1: "b"},
+    )
+    batch = pd.DataFrame({"doc_id": [d[0] for d in DOCS], "_toks": toks})
+    out = pd.concat(list(scorer(iter([batch]))))
+    assert sorted(out["query_id"]) == ["a", "a", "b", "b"]
 
 
 def test_wide_vocab_stats_path_matches_wide_agg(spark):
-    # past max_expr_terms the stats phase switches to the
-    # explode+groupBy shape; dfs must agree with the wide aggregate
+    # a query vocabulary past _WIDE_AGG_MAX_TERMS switches the stats
+    # phase to the explode+groupBy shape; the unseen filler terms
+    # change no score, so dfs must agree with the wide aggregate
+    from table_ocr_spark.operators.retrieval import _WIDE_AGG_MAX_TERMS
+
     qs_text = "apple banana cherry durian elderberry zzz filler"
-    qs = _qdf(spark, [("q", qs_text)])
+    filler = " ".join(f"unseen{i}" for i in range(_WIDE_AGG_MAX_TERMS))
     a = _collect_ranked(bm25_topk(
-        _df(spark), qs, k=8, max_df_ratio=1.0, max_expr_terms=64,
-        method="kernel"))
+        _df(spark), _qdf(spark, [("q", qs_text)]), k=8, max_df_ratio=1.0))
     b = _collect_ranked(bm25_topk(
-        _df(spark), qs, k=8, max_df_ratio=1.0, max_expr_terms=2,
-        method="kernel"))
+        _df(spark), _qdf(spark, [("q", f"{qs_text} {filler}")]), k=8,
+        max_df_ratio=1.0))
     assert a == b and len(a) > 0
+    assert a == _reference_ranked([("q", qs_text)], 8, "ln")
 
 
 def test_default_df_ratio_prunes_stop_words(spark):
@@ -229,8 +239,8 @@ def test_default_df_ratio_prunes_stop_words(spark):
     assert bm25_topk(_df(spark), qs, max_df_ratio=1.0).count() == 4
 
 def test_bm25_parameter_guards(spark):
-    """k1=0 forked the two engines (kernel ZeroDivisionError vs expr
-    silent NaN-drop); both knobs are validated up front now."""
+    """k1=0 would divide by zero in the kernel; both knobs are
+    validated up front."""
     import pytest
 
     from table_ocr_spark.operators.retrieval import bm25_topk

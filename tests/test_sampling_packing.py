@@ -297,13 +297,24 @@ def test_temperature_sample_null_stratum_not_dropped(spark):
     assert any(r["doc_id"] == 4 for r in out.collect())
 
 
-def test_dsir_bucket_kernel_matches_column_expression(spark):
-    # the Arrow kernel and the column-expression/oracle twin must agree
-    # bucket-for-bucket (incl. unicode: ord == ascii == codepoint)
-    from table_ocr_spark.operators.importance import (
-        _bigram_bucket_udf,
-        _bucket,
+def _bucket(gram, n_buckets):
+    """Pinned engine-portable bucket of a bigram string as a column
+    expression — the oracle SQL's formula, the reference for
+    importance._bigram_bucket_udf."""
+    from table_ocr_spark.operators.importance import HASH_MIX, HASH_MOD
+
+    val = (
+        F.length(gram).cast("long") * 31
+        + F.ascii(F.substring(gram, 1, 1)).cast("long") * 7
+        + F.ascii(F.substring(gram, -1, 1)).cast("long")
     )
+    return ((val * HASH_MIX) % HASH_MOD) % n_buckets
+
+
+def test_dsir_bucket_kernel_matches_column_expression(spark):
+    # the Arrow kernel and the column-expression/oracle reference must
+    # agree bucket-for-bucket (incl. unicode: ord == ascii == codepoint)
+    from table_ocr_spark.operators.importance import _bigram_bucket_udf
     from table_ocr_spark.operators.dedup import _gram_seq_udf
     from table_ocr_spark.operators.textstats import tokens
 
@@ -317,8 +328,6 @@ def test_dsir_bucket_kernel_matches_column_expression(spark):
         ],
         "doc_id long, text string",
     )
-    from pyspark.sql import functions as F
-
     kern = df.select(
         "doc_id",
         _bigram_bucket_udf(10_000)(tokens(F.col("text"))).alias("b"),

@@ -496,6 +496,32 @@ def test_cluster_pairs_kernel_matches_fold_join(spark):
     assert fold.exceptAll(kern).count() == 0
 
 
+def test_cluster_pairs_kernel_non_ascii_ids_match_fold_join(spark):
+    """String ids past ASCII: the kernel orders id_a < id_b by Python
+    code point, Spark by UTF-8 bytes — the same order, so every one of
+    the 13 * 12 / 2 pairs must match the fold join row for row. U+FFFF
+    vs an astral emoji is where UTF-16 order would flip."""
+    from table_ocr_spark.operators.similarity import (
+        cluster_pairs_kernel,
+        cosine_near_dup_pairs,
+    )
+
+    ids = ["a", "z", "A", "é", "ÿ", "ā", "中", "\uffff", "😀",
+           "a\u00e9", "ae", "\u00e9a", "€"]
+    rows = [(v, [1.0, 0.1 * i + 0.05], 0) for i, v in enumerate(ids)]
+    emb = spark.createDataFrame(
+        rows, "vec_id string, embedding array<float>, cluster int"
+    )
+    kern = cluster_pairs_kernel(emb, threshold=0.0)
+    fold = cosine_near_dup_pairs(
+        emb.withColumnRenamed("cluster", "label"), threshold=0.0
+    )
+    got = sorted(map(tuple, kern.collect()))
+    want = sorted(map(tuple, fold.collect()))
+    assert len(want) == 78
+    assert got == want
+
+
 def test_cluster_pairs_kernel_cell_guard(spark):
     from table_ocr_spark.operators.similarity import cluster_pairs_kernel
 

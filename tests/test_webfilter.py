@@ -3,11 +3,27 @@ per-rule semantics, pinned trim/word definitions, doc flags, and the
 map-only plan contract (no Exchange — a per-document answer must never
 cost a corpus-line shuffle)."""
 
+import re
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
+from table_ocr_spark.operators.textstats import LINE_TRIM_CHARS
 from table_ocr_spark.operators.webfilter import (
+    _PY_WS,
+    C4_DOC_BLOCKLIST,
+    C4_LINE_BLOCKLIST,
     C4_MIN_KEPT_LINES,
+    C4_MIN_WORDS_PER_LINE,
+    C4_TERMINAL_PUNCT_RE,
+    GOPHER_BULLET_RE,
+    GOPHER_ELLIPSIS_RE,
+    GOPHER_MAX_BULLET_FRAC,
+    GOPHER_MAX_ELLIPSIS_FRAC,
+    GOPHER_MIN_ALPHA_FRAC,
+    GOPHER_MIN_STOPWORDS,
+    GOPHER_STOPWORDS,
     c4_clean,
     gopher_line_rules,
 )
@@ -146,20 +162,93 @@ class TestGopherLineRules:
         assert "Exchange" not in plan
 
 
+def _round6(x: float) -> float:
+    """Spark's round(x, 6) on a double: HALF_UP on the decimal
+    representation, not Python's round-half-even on the binary."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _py_lines(t: str) -> list:
+    return [ln for ln in (ln.strip(LINE_TRIM_CHARS) for ln in t.split("\n")) if ln]
+
+
+def _py_words(s: str) -> list:
+    # Java regex \s is ASCII; Python's unicode \s would split on NBSP
+    return [w for w in re.split(_PY_WS, s) if w]
+
+
+def _c4_reference(doc_id, text) -> dict:
+    """Plain-Python c4_clean row for one document."""
+    t = text or ""
+    lines = _py_lines(t)
+    kept = [
+        ln
+        for ln in lines
+        if re.search(C4_TERMINAL_PUNCT_RE, ln)
+        and len(_py_words(ln)) >= C4_MIN_WORDS_PER_LINE
+        and not any(p in ln.lower() for p in C4_LINE_BLOCKLIST)
+    ]
+    doc_block = any(p in t.lower() for p in C4_DOC_BLOCKLIST)
+    brace = "{" in t
+    return {
+        "doc_id": doc_id,
+        "text_clean": "\n".join(kept),
+        "n_lines": len(lines),
+        "n_kept": len(kept),
+        "n_dropped": len(lines) - len(kept),
+        "has_doc_blocklist": doc_block,
+        "has_brace": brace,
+        "c4_pass": not doc_block and not brace
+        and len(kept) >= C4_MIN_KEPT_LINES,
+    }
+
+
+def _gopher_reference(doc_id, text) -> dict:
+    """Plain-Python gopher_line_rules row for one document."""
+    t = text or ""
+    lines = _py_lines(t)
+    toks = _py_words(t)
+    n_l, n_t = max(len(lines), 1), max(len(toks), 1)
+    bullet = _round6(
+        sum(1 for ln in lines if re.search(GOPHER_BULLET_RE, ln)) / n_l
+    )
+    ellipsis = _round6(
+        sum(1 for ln in lines if re.search(GOPHER_ELLIPSIS_RE, ln)) / n_l
+    )
+    alpha = _round6(sum(1 for w in toks if re.search("[A-Za-z]", w)) / n_t)
+    n_stop = len(set(GOPHER_STOPWORDS).intersection(w.lower() for w in toks))
+    passes = {
+        "passes_bullet": bullet <= GOPHER_MAX_BULLET_FRAC,
+        "passes_ellipsis": ellipsis <= GOPHER_MAX_ELLIPSIS_FRAC,
+        "passes_alpha": alpha >= GOPHER_MIN_ALPHA_FRAC,
+        "passes_stopwords": n_stop >= GOPHER_MIN_STOPWORDS,
+    }
+    return {
+        "doc_id": doc_id,
+        "n_lines": len(lines),
+        "bullet_start_frac": bullet,
+        "ellipsis_end_frac": ellipsis,
+        "alpha_word_frac": alpha,
+        "n_stopword_types": n_stop,
+        **passes,
+        "gopher_line_pass": all(passes.values()),
+    }
+
+
 class TestEngineTwins:
-    """The Arrow kernels and the column-expression twins are pinned to
-    identical semantics — including the whitespace class (Java \\s is
-    ASCII; the kernels use the explicit _PY_WS class, NOT Python's
-    unicode \\s) and the trim set. NBSP and CRLF are the trap cases."""
+    """Both operators are pinned to plain-Python per-row references —
+    including the whitespace class (Java \\s is ASCII; the references
+    use the explicit _PY_WS class, NOT Python's unicode \\s) and the
+    trim set. NBSP and CRLF are the trap cases."""
 
     @pytest.fixture(scope="class")
     def nasty(self, spark, docs):
         extra = spark.createDataFrame(
             [
-                # NBSP between words: neither engine may split on it,
-                # so 'two words here.' is 2 words -> dropped
-                (100, "two words here.\nA real kept line stays."),
-                # CRLF endings: \r is in the trim set on both engines
+                # NBSP between words: it is not a word separator, so
+                # 'two\xa0words here.' is 2 words -> dropped
+                (100, "two\xa0words here.\nA real kept line stays."),
+                # CRLF endings: \r is in the trim set
                 (101, "crlf line one stays fine.\r\ncrlf two keeps going.\r\n"),
                 # vertical tab is NOT in the trim set but IS a word
                 # separator in both regex dialects
@@ -170,31 +259,21 @@ class TestEngineTwins:
         )
         return docs.union(extra)
 
+    @staticmethod
+    def _check(op_df, reference, nasty):
+        got = {r.doc_id: r.asDict() for r in op_df.collect()}
+        want = {
+            r.doc_id: reference(r.doc_id, r.text) for r in nasty.collect()
+        }
+        assert set(got) == set(want)
+        for did in want:
+            assert got[did] == want[did], did
+
     def test_c4_differential(self, nasty):
-        a = {r.doc_id: r for r in c4_clean(nasty, engine="kernel").collect()}
-        b = {r.doc_id: r for r in c4_clean(nasty, engine="expr").collect()}
-        assert set(a) == set(b)
-        for did in a:
-            assert a[did].asDict() == b[did].asDict(), did
+        self._check(c4_clean(nasty), _c4_reference, nasty)
 
     def test_gopher_differential(self, nasty):
-        a = {
-            r.doc_id: r
-            for r in gopher_line_rules(nasty, engine="kernel").collect()
-        }
-        b = {
-            r.doc_id: r
-            for r in gopher_line_rules(nasty, engine="expr").collect()
-        }
-        assert set(a) == set(b)
-        for did in a:
-            assert a[did].asDict() == b[did].asDict(), did
-
-    def test_bad_engine_rejected(self, docs):
-        with pytest.raises(ValueError):
-            c4_clean(docs, engine="pandas")
-        with pytest.raises(ValueError):
-            gopher_line_rules(docs, engine="pandas")
+        self._check(gopher_line_rules(nasty), _gopher_reference, nasty)
 
 
 class TestGopherRepetition:
