@@ -2725,10 +2725,10 @@ def _corpus_report_sql() -> str:
         SELECT 'corpus' AS section, 'docs' AS key, n AS n,
                CAST(NULL AS DOUBLE) AS value FROM nn
         UNION ALL
-        SELECT 'corpus', 'tokens', CAST(sum(n_tokens) AS BIGINT), NULL
+        SELECT 'corpus', 'tokens', CAST(coalesce(sum(n_tokens), 0) AS BIGINT), NULL
         FROM m
         UNION ALL
-        SELECT 'corpus', 'chars', CAST(sum(n_chars) AS BIGINT), NULL
+        SELECT 'corpus', 'chars', CAST(coalesce(sum(n_chars), 0) AS BIGINT), NULL
         FROM m
         UNION ALL
         SELECT 'corpus', 'empty_docs',

@@ -778,18 +778,25 @@ def remove_duplicate_spans(
 
 
 def _truncate_plan(df: DataFrame):
-    """Cut the logical plan of an iteratively-rebuilt frame. Uses the
-    reliable checkpoint when the session has a checkpoint dir (the
-    cluster deployment: survives executor loss), else a localCheckpoint
-    (this sandbox). Without this, iteration i's plan contains i nested
-    join trees and Catalyst re-plans the whole stack every loop — plan
-    time grows quadratically and a lost partition recomputes the
-    entire history.
+    """Cut the logical plan of an iteratively-rebuilt frame or a stage
+    output. Uses the reliable checkpoint when the session has a
+    checkpoint dir (the cluster deployment: survives executor loss),
+    else a localCheckpoint (local mode). Without this, iteration i's
+    plan contains i nested join trees and Catalyst re-plans the whole
+    stack every loop — plan time grows quadratically and a lost
+    partition recomputes the entire history. Stage boundaries
+    (``build_training_corpus``, the CC edge set) use it too: a
+    ``.cache()`` keeps its full upstream plan inside every consumer,
+    and Spark re-renders that plan's explain string at every SQL
+    execution start and AQE update.
 
     LAZY on purpose: every caller runs an aggregate action on the
-    result immediately (the convergence probe), which materializes the
-    checkpoint in the same job — eager=True would spend a separate
-    job per iteration on the same work. The reliable path persists
+    result immediately (the convergence probe, a stage count), which
+    materializes the checkpoint in the same job — eager=True would
+    spend a separate job on the same work. Under AQE the lazy call
+    already runs the input's shuffle map stages (planning the RDD
+    executes the adaptive plan's query stages); only the final stage
+    waits for the action. The reliable path persists
     first: RDD checkpointing writes its files in a SECOND pass that
     recomputes the un-cached plan (the classic persist-before-
     checkpoint rule), so without the cache every cluster iteration
@@ -797,10 +804,10 @@ def _truncate_plan(df: DataFrame):
 
     Returns ``(checkpointed, cached)`` — ``cached`` is the persisted
     input frame (None on the localCheckpoint path). The CALLER must
-    ``cached.unpersist()`` once the NEXT round's checkpoint has
-    materialized: relying on ContextCleaner GC lets up to max_iters
-    cached label frames pile up in executor storage on a large dup
-    subgraph (ADVICE r3)."""
+    ``cached.unpersist()`` once the checkpoint has materialized (after
+    the stage count, or the next round's probe): relying on
+    ContextCleaner GC lets up to max_iters cached label frames pile up
+    in executor storage on a large dup subgraph (ADVICE r3)."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         df.persist()
@@ -961,14 +968,18 @@ def duplicate_clusters(
     id; labels are 2 longs/row, so every exchange after the first
     edge join is narrow regardless of document size.
 
-    Convergence detection: labels only ever DECREASE, so for integer
-    ids sum(label) (exact, decimal(38,0) — no long overflow at 10^12
-    ids) is strictly monotone and equality between iterations IS
-    convergence — one cheap aggregate per round, no old-vs-new join.
-    Non-integer ids (urls) fall back to an old-vs-new changed-row
-    probe: one extra equi-join per round, over the subgraph only.
-    Each round's frame is checkpointed (:func:`_truncate_plan`) to
-    stop Catalyst re-planning a growing join stack. Raises
+    Convergence detection: a round has converged when no edge joins
+    two different labels. A label is always an id of the node's own
+    component no larger than the node's id (propagation follows edges
+    and min() only selects existing ids), so a component whose edges
+    all agree carries one label: its min id, the fixed point. The
+    probe is one count over the subgraph's edges with both endpoint
+    labels joined on, the same for every orderable id type, and the
+    loop stops in the round that reaches the fixed point — no
+    confirming round. The symmetrized edges and each round's labels
+    are checkpointed (:func:`_truncate_plan`), so every round plans
+    over two leaves instead of the upstream pair pipeline and a
+    growing join stack. Raises
     ``RuntimeError`` after ``max_iters`` (pathological graphs only:
     log2(10^12-node chain) < 25).
 
@@ -1027,7 +1038,7 @@ def duplicate_clusters(
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    edges.persist()
+    edges, edges_cached = _truncate_plan(edges)
     # src covers every endpoint after symmetrization
     init = (
         edges.select(F.col("src").alias("id"))
@@ -1043,42 +1054,12 @@ def duplicate_clusters(
         labels = spark.read.parquet(_cc_round_path(state_dir, start_round))
     else:
         labels = _cc_commit(spark, state_dir, init, 0)
-    # convergence probe: integer ids use the monotone exact label sum
-    # (decimal(38,0) — one aggregate scan, no long overflow at 10^12
-    # ids); any other orderable id type (urls!) compares against the
-    # previous round's labels — one extra equi-join per round, but
-    # ONLY over the subgraph, never the corpus. Both probes also
-    # materialize the round's lazy checkpoint with a full action.
-    int_ids = dict(labels.dtypes)["lbl"] in (
-        "tinyint", "smallint", "int", "bigint",
-    )
-
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    def _n_changed(frame: DataFrame, prev: DataFrame) -> int:
-        return (
-            frame.join(
-                prev.select("id", F.col("lbl").alias("_prev")), "id"
-            )
-            .where(F.col("lbl") != F.col("_prev"))
-            .count()
-        )
-
-    if int_ids:
-        prev_sum = _label_sum(labels)
-    elif state_dir is None:
-        labels.count()  # materialize the init checkpoint
+    # each symmetrized pair once: a split pair splits in both directions
+    probe_edges = edges.where(F.col("src") < F.col("dst"))
     converged = False
     rnd = start_round
     for _ in range(max_iters):
         rnd += 1
-        # only the changed-row probe needs last round's labels; on the
-        # integer path holding the reference would delay the
-        # ContextCleaner cache drop by a round
-        prev_labels = None if int_ids else labels
         offered = (
             edges.join(labels, edges["src"] == labels["id"])
             .select(F.col("dst").alias("id"), "lbl")
@@ -1101,12 +1082,18 @@ def duplicate_clusters(
             labels, cached = _truncate_plan(jumped)
         else:
             labels = _cc_commit(spark, state_dir, jumped, rnd)
-        if int_ids:
-            new_sum = _label_sum(labels)
-            done = new_sum == prev_sum
-            prev_sum = new_sum
-        else:
-            done = _n_changed(labels, prev_labels) == 0
+        # convergence probe (see docstring): count the edges whose two
+        # endpoints still carry different labels. Its full scan of the
+        # labels also materializes this round's lazy checkpoint.
+        n_split = (
+            probe_edges
+            .join(labels.select(F.col("id").alias("src"),
+                                F.col("lbl").alias("_ls")), "src")
+            .join(labels.select(F.col("id").alias("dst"),
+                                F.col("lbl").alias("_ld")), "dst")
+            .where(F.col("_ls") != F.col("_ld"))
+            .count()
+        )
         # the probe materialized this round's checkpoint, so last
         # round's cached frame (which fed the checkpoint write) is dead
         # — drop it NOW instead of waiting for ContextCleaner GC
@@ -1114,12 +1101,12 @@ def duplicate_clusters(
         # accumulate in executor storage on a large dup subgraph)
         if prev_cached is not None:
             prev_cached.unpersist()
-        if done:
+        if n_split == 0:
             converged = True
             break
-    edges.unpersist()
-    if cached is not None:
-        cached.unpersist()
+    for c in (edges_cached, cached):
+        if c is not None:
+            c.unpersist()
     if not converged:
         raise RuntimeError(
             f"duplicate_clusters: no convergence in {max_iters} iterations "

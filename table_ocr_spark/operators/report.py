@@ -66,8 +66,8 @@ def corpus_report(
 
     totals = stats.agg(
         F.count(F.lit(1)).alias("docs"),
-        F.sum("n_tokens").alias("toks"),
-        F.sum("n_chars_obs").alias("chars"),
+        F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("toks"),
+        F.coalesce(F.sum("n_chars_obs"), F.lit(0)).alias("chars"),
         F.sum(F.when(F.col("n_tokens") == 0, 1).otherwise(0)).alias(
             "empty"
         ),

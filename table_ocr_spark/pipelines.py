@@ -3,8 +3,9 @@ operators exist for. One call takes a raw Common-Crawl-style pages
 table to a deduplicated, quality-filtered, PII-scrubbed text corpus
 with per-stage audit counts.
 
-Stage order (each stage is a DataFrame → DataFrame transform; the
-whole pipeline is one lazy plan until the report forces it):
+Stage order (each stage is a DataFrame → DataFrame transform; each
+stage output is checkpointed into a plan leaf by the count that fills
+its report field, so no stage's plan carries its upstream stages):
 
 1. latest-capture dedup (re-crawled urls: newest wins — W3)
 2. kernel extraction (map-only mapInArrow; html never shuffles)
@@ -42,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from table_ocr_spark.operators.dedup import (
+    _truncate_plan,
     cluster_survivors,
     duplicate_clusters,
     exact_dedup,
@@ -504,6 +506,18 @@ def next_frontier(
     return plan, report
 
 
+def _stage_leaf(df: DataFrame) -> tuple[DataFrame, int]:
+    """A stage output as a checkpointed plan leaf, and its row count.
+    The count is the action that materializes the checkpoint; on the
+    reliable path the persisted copy that fed the checkpoint write is
+    released right after it."""
+    leaf, cached = _truncate_plan(df)
+    n = leaf.count()
+    if cached is not None:
+        cached.unpersist()
+    return leaf, n
+
+
 def build_training_corpus(
     pages: DataFrame,
     minhash_threshold: float = 0.8,
@@ -517,8 +531,11 @@ def build_training_corpus(
     allow_upsampling: bool = False,
 ) -> tuple[DataFrame, CorpusReport]:
     """pages(url, warc_ts, html, ...) → (corpus(url, text, n_emails,
-    n_phones), per-stage counts). The returned DataFrame is unevaluated;
-    the report runs one count per stage (cache-backed). Pass
+    n_phones), per-stage counts). Each stage output is a checkpointed
+    plan leaf (``_truncate_plan``: localCheckpoint, or the reliable
+    checkpoint when the session has a checkpoint dir), materialized by
+    the one count per stage that fills the report; the returned
+    DataFrame is a small lazy plan over the last leaf. Pass
     ``benchmark`` (a (doc_id-or-any, text) frame) to drop contaminated
     docs, and ``sample_fraction`` for a deterministic final
     down-sample. ``n_tiers`` appends a global quality-tier column
@@ -544,23 +561,21 @@ def build_training_corpus(
     n_input = pages.count()
 
     deduped_pages = latest_capture(pages) if "warc_ts" in pages.columns else pages
-    extracted = (
+    extracted, n_extracted = _stage_leaf(
         extract_documents(deduped_pages)
         .select("url", F.col("extracted_text").alias("text"))
         .filter(F.length("text") > 0)
-        .cache()
     )
-    n_extracted = extracted.count()
 
     quality = gopher_quality(extracted, text_col="text", id_col="url")
     keep_urls = quality.filter(F.col("quality_pass")).select("url")
-    passed = extracted.join(keep_urls, "url", "left_semi").cache()
-    n_quality = passed.count()
+    passed, n_quality = _stage_leaf(
+        extracted.join(keep_urls, "url", "left_semi")
+    )
 
     exact = exact_dedup(passed, text_col="text", id_col="url")
     canonical = exact.filter(~F.col("is_dup")).select("url")
-    uniq = passed.join(canonical, "url", "left_semi").cache()
-    n_exact = uniq.count()
+    uniq, n_exact = _stage_leaf(passed.join(canonical, "url", "left_semi"))
 
     pairs = minhash_lsh_pairs(
         uniq, text_col="text", id_col="url", k=shingle_k,
@@ -578,8 +593,7 @@ def build_training_corpus(
         .filter(F.col("keep"))
         .select("url")
     )
-    near_uniq = uniq.join(keep, "url", "left_semi").cache()
-    n_near = near_uniq.count()
+    near_uniq, n_near = _stage_leaf(uniq.join(keep, "url", "left_semi"))
 
     clean = redact_pii(near_uniq, text_col="text", id_col="url")
     n_pii = clean.filter(F.col("had_pii")).count()
@@ -596,9 +610,8 @@ def build_training_corpus(
             threshold=contamination_threshold,
         )
         dirty = stats.filter(F.col("is_contaminated")).select("url")
-        corpus = corpus.join(dirty, "url", "left_anti").cache()
-        # the count also forces the cache; contaminated = removed rows
-        n_contaminated = n_near - corpus.count()
+        corpus, n_clean = _stage_leaf(corpus.join(dirty, "url", "left_anti"))
+        n_contaminated = n_near - n_clean
 
     n_after_sample = -1
     if sample_fraction is not None:
@@ -616,9 +629,9 @@ def build_training_corpus(
             "url", "n_tokens", "quality_score"
         )
         tiers = score_tiers(stats, "quality_score", n_tiers=n_tiers)
-        corpus = corpus.join(
-            tiers.select("url", "n_tokens", "tier"), "url"
-        ).cache()
+        corpus, _ = _stage_leaf(
+            corpus.join(tiers.select("url", "n_tokens", "tier"), "url")
+        )
         if token_budget is not None:
             from table_ocr_spark.operators.sampling import (
                 token_budget_sample,

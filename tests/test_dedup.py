@@ -395,6 +395,29 @@ def test_duplicate_clusters_max_iters_raises(spark):
         _clusters(spark, [1, 2, 3, 4], [(1, 2), (2, 3), (3, 4)], max_iters=1)
 
 
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_duplicate_clusters_converges_in_fixed_point_round(spark, id_type):
+    # three disjoint pairs reach the fixed point in round 1; the
+    # split-edge probe stops there, with no confirming round, for
+    # every id type
+    from table_ocr_spark.operators.dedup import duplicate_clusters
+
+    ids = [1, 2, 3, 4, 5, 6] if id_type == "long" else list("abcdef")
+    docs = spark.createDataFrame([(i,) for i in ids], f"doc_id {id_type}")
+    pairs = spark.createDataFrame(
+        [(ids[1], ids[0]), (ids[2], ids[3]), (ids[5], ids[4])],
+        f"id_a {id_type}, id_b {id_type}",
+    )
+    rows = {
+        r["doc_id"]: r
+        for r in duplicate_clusters(docs, pairs, max_iters=1).collect()
+    }
+    for lo, hi in zip(ids[::2], ids[1::2]):
+        assert rows[lo]["cluster_id"] == rows[hi]["cluster_id"] == lo
+        assert rows[hi]["is_dup"] and not rows[lo]["is_dup"]
+        assert rows[lo]["cluster_size"] == 2
+
+
 # ---------------------------------------------------------------------------
 # cluster_survivors — best-score survivor per cluster
 
@@ -444,8 +467,8 @@ def test_survivor_null_scores_lose_and_all_null_falls_back(spark):
 
 
 def test_duplicate_clusters_string_ids(spark):
-    # url-keyed corpora use the changed-row convergence probe; the
-    # closure semantics must be identical to the integer path
+    # url-keyed corpora: the closure semantics must be identical to
+    # the integer path
     from table_ocr_spark.operators.dedup import duplicate_clusters
 
     docs = spark.createDataFrame(
@@ -693,8 +716,8 @@ def test_duplicate_clusters_reads_legacy_single_file_meta(spark, tmp_path):
 
 
 def test_duplicate_clusters_state_dir_string_ids(spark, tmp_path):
-    # the changed-row convergence probe (url ids) must also work
-    # against durable round files
+    # the convergence probe must also work for url ids against
+    # durable round files
     from table_ocr_spark.operators.dedup import duplicate_clusters
 
     ids = [f"u://{i:03d}" for i in range(40)]

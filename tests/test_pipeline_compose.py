@@ -8,7 +8,9 @@ from table_ocr_spark.datagen import write_pages_parquet
 from table_ocr_spark.pipelines import build_training_corpus
 
 
-def test_training_corpus_pipeline(spark, tmp_path):
+def _planted_pages(spark, tmp_path):
+    """60 datagen pages plus a planted exact dup and a PII page:
+    ``(pages, url the dup copies)``."""
     pq = str(tmp_path / "pages.parquet")
     write_pages_parquet(pq, n_docs=60, seed=21, dup_frac=0.0)
     base = spark.read.parquet(pq)
@@ -36,8 +38,11 @@ def test_training_corpus_pipeline(spark, tmp_path):
         base.schema,
     )
     src_url = passing.limit(1).collect()[0]["url"]
-    pages = base.unionByName(dup).unionByName(pii)
+    return base.unionByName(dup).unionByName(pii), src_url
 
+
+def test_training_corpus_pipeline(spark, tmp_path):
+    pages, src_url = _planted_pages(spark, tmp_path)
     corpus, rep = build_training_corpus(pages)
     rows = {r["url"]: r for r in corpus.collect()}
 
@@ -61,6 +66,41 @@ def test_training_corpus_pipeline(spark, tmp_path):
 
     assert rep.n_had_pii == 1
     assert rep.n_after_near_dedup <= rep.n_after_exact_dedup
+
+
+def test_training_corpus_plan_is_flat(spark, tmp_path):
+    # every stage output is a checkpointed plan leaf: a cached stage
+    # would embed its whole upstream plan (an InMemoryRelation), which
+    # Spark re-renders at every job of every later stage
+    pages, _ = _planted_pages(spark, tmp_path)
+    corpus, _ = build_training_corpus(pages)
+    plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+        corpus._jdf.queryExecution(), "formatted"
+    )
+    assert "InMemoryRelation" not in plan
+
+
+def test_training_corpus_reliable_checkpoint_path(spark, tmp_path):
+    # with a checkpoint dir set, stage leaves are reliable checkpoints
+    # (persist + checkpoint, persisted copy released after the count):
+    # same report and same corpus as the localCheckpoint path. n_tiers
+    # adds the tiered-corpus leaf.
+    pages, _ = _planted_pages(spark, tmp_path)
+    corpus, rep = build_training_corpus(pages, n_tiers=2)
+    want = sorted(map(tuple, corpus.collect()))
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        corpus2, rep2 = build_training_corpus(pages, n_tiers=2)
+        assert rep2 == rep
+        assert sorted(map(tuple, corpus2.collect())) == want
+    finally:
+        # unset so the rest of the session-scoped suite stays on the
+        # localCheckpoint path (scala setter: Option[String] = None)
+        getattr(jsc, "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None)
+        )
 
 
 def test_training_corpus_optional_stages(spark, tmp_path):

@@ -420,4 +420,7 @@ def test_corpus_report_empty_corpus(spark):
         for r in corpus_report(df).collect()
     }
     assert got[("corpus", "docs")] == (0, None)
+    # totals of an empty corpus are 0, not NULL
+    assert got[("corpus", "tokens")] == (0, None)
+    assert got[("corpus", "chars")] == (0, None)
     assert not [k for k in got if k[0] == "tokens_quantile"]
