@@ -35,6 +35,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from table_ocr_spark.local_frames import local_frame
 from table_ocr_spark.operators.textstats import tokens
 
 SIMHASH_BITS = 32
@@ -900,8 +901,8 @@ def _write_cc_meta(spark, state_dir: str, rnd: int, done: bool) -> None:
     N-1, so a readable marker N implies fully-committed round-N labels.
     mode="overwrite" here only clears a partial marker left by a
     previous crash of this SAME write."""
-    spark.createDataFrame(
-        [(rnd, done)], "round long, done boolean"
+    local_frame(
+        spark, [(rnd, done)], "round long, done boolean"
     ).coalesce(1).write.mode("overwrite").parquet(
         _cc_marker_path(state_dir, rnd, done)
     )

@@ -32,6 +32,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from table_ocr_spark.local_frames import local_frame
 from table_ocr_spark.operators.textstats import tokens
 
 
@@ -107,7 +108,7 @@ def pack_sequences(
         bases.append((row["_bucket"], running))
         running += row["_total"]
     spark = df.sparkSession
-    base_df = spark.createDataFrame(bases, "_bucket long, _base long")
+    base_df = local_frame(spark, bases, "_bucket long, _base long")
 
     w = (
         Window.partitionBy("_bucket")

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from table_ocr_spark.local_frames import local_frame
 from .textstats import gopher_quality, token_stats
 from .tiers import tier_cutoffs
 
@@ -60,6 +61,17 @@ def corpus_report(
 
     ``n`` carries counts (NULL for pure-value rows), ``value`` carries
     fractions/cutoffs rounded to 6 dp (NULL for pure-count rows).
+
+    Evaluation is mixed: the ``tokens_quantile`` rows are computed
+    EAGERLY, at call time (an emptiness probe plus the
+    :func:`tiers.tier_cutoffs` collect), and ride the returned frame as
+    a local relation; every other section is lazy and reads ``df``
+    when the card is materialized. The quantiles are therefore a
+    snapshot of the input as it was at the call: if ``df`` is
+    non-deterministic, or its source changes before the card is
+    collected, the quantile rows can disagree with the other sections.
+    Materialize a stable input (checkpoint or write it) first when
+    that matters.
     """
     spark = df.sparkSession
     stats = token_stats(df, text_col=text_col, id_col=id_col)
@@ -140,7 +152,7 @@ def corpus_report(
         ("tokens_quantile", f"q{i + 1}", None, float(c))
         for i, c in enumerate(cuts)
     ]
-    parts.append(spark.createDataFrame(qrows, REPORT_SCHEMA))
+    parts.append(local_frame(spark, qrows, REPORT_SCHEMA))
 
     quality = gopher_quality(df, text_col=text_col, id_col=id_col).agg(
         F.count(F.lit(1)).alias("docs"),

@@ -21,6 +21,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from table_ocr_spark.functions.sqlfuncs import as_double_array, cosine
+from table_ocr_spark.local_frames import local_frame
+
+# empty pq_topk / ivf_pq_topk result (no usable query vector)
+_TOPK_SCHEMA = "query_id long, neighbor_id long, rank int, score double"
 
 
 def _with_vec(
@@ -558,15 +562,7 @@ def pq_topk(
             for s in range(m)
         ])
     if not luts:
-        return emb.sparkSession.createDataFrame(
-            [],
-            T.StructType([
-                T.StructField("query_id", T.LongType()),
-                T.StructField("neighbor_id", T.LongType()),
-                T.StructField("rank", T.IntegerType()),
-                T.StructField("score", T.DoubleType()),
-            ]),
-        )
+        return local_frame(emb.sparkSession, [], _TOPK_SCHEMA)
 
     keep = k * refine
     qid_arr = np.asarray(sorted(luts), dtype=np.int64)
@@ -669,7 +665,8 @@ def pq_topk(
     # candidate set so the big vector table streams map-only through
     # a broadcast hash join.
     if query_vecs is not None:
-        qv = emb.sparkSession.createDataFrame(
+        qv = local_frame(
+            emb.sparkSession,
             [
                 (int(qid), [float(x) for x in v])
                 for qid, v in query_vecs.items()
@@ -744,17 +741,7 @@ def ivf_pq_topk(
     if not labels:
         # no query rows: empty result with the pq_topk schema (training
         # on the empty cell subset would fail fast for the wrong reason)
-        from pyspark.sql import types as T
-
-        return emb.sparkSession.createDataFrame(
-            [],
-            T.StructType([
-                T.StructField("query_id", T.LongType()),
-                T.StructField("neighbor_id", T.LongType()),
-                T.StructField("rank", T.IntegerType()),
-                T.StructField("score", T.DoubleType()),
-            ]),
-        )
+        return local_frame(emb.sparkSession, [], _TOPK_SCHEMA)
     cells = emb.filter(F.col("label").isin(labels))
     return pq_topk(
         cells,

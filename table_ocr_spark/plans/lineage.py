@@ -11,6 +11,12 @@ checksum, started_at, finished_at)``; a restarted run anti-joins pending buckets
 against completed lineage rows and re-processes only those
 (SURVEY.md §2.10, §4.3.3).
 
+Lineage timestamps are UTC: ``started_at``/``finished_at`` are stamped
+as tz-aware UTC datetimes, so the stored instant does not depend on the
+driver's local zone. The lineage and ``_meta`` rows are driver-built
+local relations (:func:`table_ocr_spark.local_frames.local_frame`): a
+commit runs no Python worker.
+
 Output data is written ``partitionBy("bucket")`` with DYNAMIC partition
 overwrite, so re-processing a bucket is idempotent (exactly-once per
 bucket at rest even if a wave crashed mid-write).
@@ -31,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from table_ocr_spark.local_frames import local_frame
 from table_ocr_spark.operators.extract import extract_documents
 
 LINEAGE_SCHEMA = T.StructType(
@@ -174,9 +181,9 @@ def _run_pipeline_inner(
         # resume with a different bucketing slip past the guard below
         # (silent bucket mis-routing). Overwriting is safe precisely
         # because we just read the dir as meaningless.
-        spark.createDataFrame(
-            [(num_buckets,)], "num_buckets int"
-        ).write.mode("overwrite").parquet(_meta_path(out_dir))
+        local_frame(spark, [(num_buckets,)], "num_buckets int").write.mode(
+            "overwrite"
+        ).parquet(_meta_path(out_dir))
     elif existing != num_buckets:
         raise ValueError(
             f"out_dir was created with num_buckets={existing}; resuming "
@@ -204,7 +211,7 @@ def _run_pipeline_inner(
     for wi, wave in enumerate(waves):
         if fail_after_wave is not None and wi == fail_after_wave:
             raise InjectedFailure(f"injected failure before wave {wi}")
-        started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        started = _dt.datetime.now(_dt.timezone.utc)
         subset = bucketed.filter(F.col("bucket").isin(wave))
         # bucket is a pure function of url — recompute after the kernel
         # stage instead of joining (keeps the stage shuffle-free)
@@ -230,7 +237,7 @@ def _run_pipeline_inner(
             )
             .collect()
         )
-        finished = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        finished = _dt.datetime.now(_dt.timezone.utc)
         stat_by_bucket = {r["bucket"]: r for r in stats}
         lin_rows = []
         for b in wave:
@@ -247,7 +254,7 @@ def _run_pipeline_inner(
                     finished,
                 )
             )
-        spark.createDataFrame(lin_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
+        local_frame(spark, lin_rows, LINEAGE_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(_lineage_path(out_dir))
         processed += len(wave)

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from table_ocr_spark.local_frames import local_frame
+
 CATALOGS = ("projects", "prompts", "schemas")
 
 _SCHEMAS = {
@@ -96,7 +98,7 @@ class CatalogStore:
             return self.spark.read.schema(_SCHEMAS[catalog]).parquet(path)
         except AnalysisException as e:
             if self._path_missing(path, e):
-                return self.spark.createDataFrame([], _SCHEMAS[catalog])
+                return local_frame(self.spark, [], _SCHEMAS[catalog])
             raise
 
     def _path_missing(self, path: str, err) -> bool:
@@ -127,10 +129,7 @@ class CatalogStore:
     def upsert(self, catalog: str, rows: list[dict]) -> None:
         """insert-or-replace by name (``storage.py:54-66`` rewrites the
         file; same read-modify-write here, name-deduped — U4)."""
-        incoming = self.spark.createDataFrame(
-            [tuple(r.get(f.name) for f in _SCHEMAS[catalog].fields) for r in rows],
-            _SCHEMAS[catalog],
-        )
+        incoming = local_frame(self.spark, rows, _SCHEMAS[catalog])
         existing = self.read(catalog)
         merged = incoming.unionByName(
             existing.join(incoming.select("name"), "name", "left_anti")
@@ -149,8 +148,7 @@ class CatalogStore:
         materialize them on the driver and write from a literal
         DataFrame with no lineage back to the path. (Under Iceberg this
         whole method is a MERGE INTO snapshot commit.)"""
-        rows = df.collect()
-        out = self.spark.createDataFrame(rows, _SCHEMAS[catalog])
+        out = local_frame(self.spark, df.collect(), _SCHEMAS[catalog])
         out.write.mode("overwrite").parquet(self._path(catalog))
 
 

@@ -62,6 +62,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from table_ocr_spark.local_frames import local_frame
 from table_ocr_spark.operators.urlnorm import _SCHEME_RE, host_canonical
 from table_ocr_spark.sources.sinkio import SinkOpener, resolve_opener
 
@@ -251,8 +252,7 @@ def _write_sorted_index(
     cached.unpersist()
     manifest.sort(key=lambda r: r["file"])
     _write_cluster_idx(path, manifest, io)
-    spark = rows.sparkSession
-    return spark.createDataFrame(manifest, _MANIFEST_SCHEMA)
+    return local_frame(rows.sparkSession, manifest, _MANIFEST_SCHEMA)
 
 
 def _writer_kernel(path: str, opener: "SinkOpener | None" = None):
@@ -420,8 +420,8 @@ def cdx_lookup(
             )
     cands = candidate_files(path, prefix, opener)
     if not cands:
-        return spark.createDataFrame(
-            [], "surt string, ts string, fields string, url string"
+        return local_frame(
+            spark, [], "surt string, ts string, fields string, url string"
         )
     out = read_cdx(spark, path, files=cands).where(
         F.col("surt").startswith(prefix)
@@ -600,11 +600,7 @@ def merge_cdx(
 
     manifest.sort(key=lambda r: r["file"])
     _write_cluster_idx(out_path, manifest, io)
-    return spark.createDataFrame(
-        [tuple(m[f.name] for f in _MANIFEST_SCHEMA.fields)
-         for m in manifest],
-        _MANIFEST_SCHEMA,
-    )
+    return local_frame(spark, manifest, _MANIFEST_SCHEMA)
 
 
 def rebalance_cdx(

@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from table_ocr_spark.local_frames import local_frame
 from table_ocr_spark.sources.sinkio import SinkOpener, resolve_opener
 from table_ocr_spark.sources.warc import header_value
 
@@ -177,9 +178,7 @@ def write_member_files(
     )
     # Materialize NOW (localCheckpoint would cache; a bounded collect
     # is fine — the manifest is n_files rows) and return a small frame.
-    recs = manifest.collect()
-    spark = rows.sparkSession
-    return spark.createDataFrame(recs, _WRITE_SCHEMA)
+    return local_frame(rows.sparkSession, manifest.collect(), _WRITE_SCHEMA)
 
 
 def write_wet(

@@ -174,3 +174,65 @@ def test_corrupt_lineage_raises_not_silent_empty(spark, tmp_path):
     # a MISSING table still reads as a fresh start
     assert completed_buckets(spark, str(tmp_path / "absent")) == []
     assert next_run_id(spark, str(tmp_path / "absent")) == "run1"
+
+
+@pytest.fixture()
+def non_utc_driver(monkeypatch):
+    """The driver process runs in UTC+05:30; the zone is restored (and
+    re-read by the C library) on teardown."""
+    import time
+
+    monkeypatch.setenv("TZ", "Asia/Kolkata")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_lineage_timestamps_are_utc_on_non_utc_driver(
+    spark, tmp_path, non_utc_driver
+):
+    """started_at/finished_at store the wall-clock instant whatever the
+    driver's local zone: a naive-UTC stamp read as local time would
+    land 19,800 s in the past here."""
+    import time
+
+    from table_ocr_spark.datagen.pages import generate_pages
+
+    pages, _ = generate_pages(n_docs=6, seed=5)
+    df = spark.createDataFrame(
+        [(p["url"], p["html"]) for p in pages], "url string, html binary"
+    )
+    out = str(tmp_path / "tz_run")
+    run_pipeline(spark, df, out, num_buckets=2, wave_size=2)
+    now = time.time()
+    got = (
+        spark.read.parquet(os.path.join(out, "_lineage"))
+        .select(
+            F.unix_timestamp("started_at").alias("s"),
+            F.unix_timestamp("finished_at").alias("f"),
+        )
+        .collect()
+    )
+    assert got
+    for r in got:
+        assert abs(r["s"] - now) < 120, (r["s"], now)
+        assert abs(r["f"] - now) < 120, (r["f"], now)
+
+
+def test_run_tables_read_back_with_pinned_schema(spark, tmp_path):
+    from table_ocr_spark.datagen.pages import generate_pages
+    from table_ocr_spark.plans.lineage import LINEAGE_SCHEMA
+
+    pages, _ = generate_pages(n_docs=6, seed=6)
+    df = spark.createDataFrame(
+        [(p["url"], p["html"]) for p in pages], "url string, html binary"
+    )
+    out = str(tmp_path / "schema_run")
+    run_pipeline(spark, df, out, num_buckets=4, wave_size=2)
+    lin = spark.read.parquet(os.path.join(out, "_lineage"))
+    assert [(f.name, f.dataType) for f in lin.schema.fields] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA.fields
+    ]
+    meta = spark.read.parquet(os.path.join(out, "_meta"))
+    assert meta.schema.simpleString() == "struct<num_buckets:int>"
