@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Benchmark harness (driver-run, per round).
 
-Times the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``, then evidences
+Times the components in ``__spark_entry__.BENCH``, in its order, at
+``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test tables) on
+``local[$SPARK_GRAFT_CPUS]``, then evidences
 the north rule's two-cluster-size scaling criterion by running the SAME
-extraction job at two parallelism levels (local[N_LOW] and
-local[N_HIGH], default 8 → 32) on identical input and reporting
-throughput at both plus efficiency = (T_low / T_high) / (high/low).
+extraction job at local[N] and local[4N] on identical input and
+reporting throughput at each plus efficiency = (T_N / T_4N) / 4, for
+the pairs in SCALING_PAIRS (2 → 8, the primary pair, and 8 → 32).
 
 Prints exactly ONE JSON line to stdout:
   {"metric": ..., "value": <total headline sec>, "unit": "sec",
@@ -29,177 +30,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# the round-1/round-2 headline subset — its subtotal is still printed
-# separately so the suite total stays comparable to BENCH_r01/r02
-R2_SUBSET = [
-    "extract_text",
-    "extract_cells",
-    "pdf_extract",
-    "majority_vote",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_bruteforce",
-    "embedding_near_dup_lsh",
-    "doc_stats",
-    "lang_id",
-    "doc_fingerprint",
-    "quality_filter",
-    "doc_repetition",
-    "pii_redact",
-    "sessionize",
-    "hourly_event_rollup",
-    "latest_event_per_user",
-    "cost_model",
-    "q1_returnflag",
-    "top_customers",
-    "results_payload_decode",
-]
-
-# round-3: the round-2 "extended" operators are PROMOTED into the
-# headline suite so regressions in that surface are tracked
-# round-over-round like everything else (VERDICT r2 #6).
-# dedup_ngram_jaccard stays out — it is the documented quadratic
-# ground-truth shape, not a benchmark target.
-PROMOTED = [
-    "url_canonicalize",
-    "page_range_extract",
-    "stratified_sample",
-    "decontamination",
-    "pack_sequences",
-    "unigram_logprob",
-    "dup_span_stats",
-    "ann_ivf",
-    "embedding_near_dup",
-    "asof_click_before_purchase",
-    "range_join_events",
-]
-
-# new round-3 operators (Gopher dup-line kernel, cross-snapshot novel-
-# document anti-join, domain-blocklist audit, tier extraction, near-dup
-# graph closure + survivor selection, exact token-budget sampling)
-R3_NEW = [
-    "line_repetition",
-    "novel_documents",
-    "blocked_hosts",
-    "dsir_weights",
-    "temperature_sample",
-    "score_tiers",
-    "duplicate_clusters",
-    "dedup_survivors",
-    "token_budget_sample",
-    "score_tiers_continuous",
-    "leakage_safe_splits",
-    "bm25_topk",
-    "remove_repeated_lines",
-]
-
-# round-4 operators
-R4_NEW = [
-    "registrable_domain",
-    "remove_duplicate_spans",
-    "webtext_filters",
-    "gopher_repetition",
-    "ccnet_buckets",
-    "remove_repeated_paragraphs",
-    "host_authority",
-    "host_pagerank",
-    "warc_extract",
-    "page_metadata",
-    "normalize_text",
-    "robots_decisions",
-    "sitemap_digest",
-    "crawl_frontier",
-    "surt_key",
-    "resolve_href",
-    "redirect_chains",
-    "chunk_documents",
-    "crawl_health",
-    "ann_pq",
-    "wat_sidecar",
-]
-
-R5_NEW = [
-    "quality_classifier",
-    "langid_classifier",
-    "bpe_tokenize",
-    "unimax_sample",
-    "semantic_dedup",
-    "trigram_logprob",
-    "corpus_report",
-    "top_terms",
-]
-
-HEADLINE = R2_SUBSET + PROMOTED + R3_NEW + R4_NEW + R5_NEW
+import __spark_entry__ as em  # noqa: E402
 
 
-def _bench_queries(em) -> dict:
-    """queries() overlaid with the per-COMPONENT functions: round 4
-    composed same-family contract queries into ≤50 driver-gate rows
-    (see __spark_entry__), but the bench keeps timing components
-    individually so BENCH_r01..r03 numbers stay comparable."""
-    comp = {
-        "extract_text": em.q_extract_text,
-        "pdf_extract": em.q_pdf_extract,
-        "majority_vote": em.q_majority_vote,
-        "dedup_minhash_lsh": em.q_dedup_minhash_lsh,
-        "ann_bruteforce": em.q_ann_bruteforce,
-        "ann_ivf": em.q_ann_ivf,
-        "embedding_near_dup": em.q_embedding_near_dup,
-        "embedding_near_dup_lsh": em.q_embedding_near_dup_lsh,
-        "doc_stats": em.q_doc_stats,
-        "lang_id": em.q_lang_id,
-        "doc_fingerprint": em.q_fingerprint,
-        "quality_filter": em.q_quality_filter,
-        "doc_repetition": em.q_doc_repetition,
-        "pii_redact": em.q_pii_redact,
-        "cost_model": em.q_cost_model,
-        "url_canonicalize": em.q_url_canonicalize,
-        "unigram_logprob": em.q_unigram_logprob,
-        "asof_click_before_purchase": em.q_asof_click_before_purchase,
-        "range_join_events": em.q_range_join_events,
-        "line_repetition": em.q_line_repetition,
-        "dsir_weights": em.q_dsir_only,
-        "quality_classifier": em.q_quality_classifier,
-        "langid_classifier": em.q_langid_classifier,
-        "bpe_tokenize": em.q_bpe_tokenize,
-        "unimax_sample": em.q_unimax_only,
-        "trigram_logprob": em.q_trigram_logprob,
-        "corpus_report": em.q_corpus_report,
-        "top_terms": em.q_top_terms,
-        # the scale-path kernel twin; the contract leg times as part
-        # of the embedding_near_dup composite on the expr engine
-        "semantic_dedup": em.q_semantic_dedup_kernel,
-        "score_tiers": em.q_score_tiers,
-        "duplicate_clusters": em.q_duplicate_clusters,
-        "dedup_survivors": em.q_dedup_survivors,
-        "score_tiers_continuous": em.q_score_tiers_continuous,
-        "registrable_domain": em.q_registrable_domain,
-        "page_range_extract": em.q_page_range_extract,
-        "remove_repeated_lines": em.q_remove_repeated_lines_only,
-        "remove_repeated_paragraphs": em.q_remove_repeated_paragraphs_only,
-        "gopher_repetition": em.q_gopher_repetition,
-        "ccnet_buckets": em.q_ccnet_buckets,
-        "host_authority": em.q_host_authority,
-        "host_pagerank": em.q_host_pagerank,
-        "warc_extract": em.q_warc_extract,
-        "page_metadata": em.q_page_metadata,
-        "normalize_text": em.q_normalize_text,
-        "robots_decisions": em.q_robots_decisions,
-        "sitemap_digest": em.q_sitemap_digest,
-        "crawl_frontier": em.q_crawl_frontier,
-        "surt_key": em.q_surt_key,
-        "resolve_href": em.q_resolve_href,
-        "redirect_chains": em.q_redirect_chains,
-        # pack_sequences became a composite row; keep timing the pure
-        # prefix-sum component for r1-r3 comparability
-        "pack_sequences": em.q_pack_sequences_only,
-        "chunk_documents": em.q_chunk_documents,
-        "crawl_health": em.q_crawl_health,
-        "ann_pq": em.q_ann_pq,
-        "wat_sidecar": em.q_wat_sidecar,
-    }
-    return {**em.queries(), **comp}
+def _r2_names() -> list[str]:
+    """The round-1/2 headline subset, whose subtotal is still reported
+    on its own so the suite stays comparable to BENCH_r01/r02."""
+    return [em.name_of(fn) for fn, flags in em.BENCH if flags & em.R2]
+
 
 # N -> 4N pairs for the scaling criterion. (2, 8) is the primary pair:
 # a best-of-3 multiprocessing probe shows this VM delivers 2/4/8 procs
@@ -236,9 +74,7 @@ def run_headline(
     spark, sf_dir: str
 ) -> tuple[dict[str, float], list[float], dict[str, float]]:
     """Returns (times, per-group host probes, query->probe map)."""
-    import __spark_entry__ as em
-
-    qs = _bench_queries(em)
+    qs = [(em.name_of(fn), fn, flags) for fn, flags in em.BENCH]
     # warmup: JVM + python workers + parquet footer cache. The python
     # warmup runs one mapInArrow AND one pandas-UDF stage across all
     # partitions so the full-width python worker pool (both runner
@@ -247,7 +83,7 @@ def run_headline(
     from pyspark.sql import functions as _F
 
     spark.range(1000).selectExpr("sum(id)").collect()
-    _noop_write(qs["doc_stats"](spark, sf_dir))
+    _noop_write(em.q_doc_stats(spark, sf_dir))
 
     _warm = _F.pandas_udf(lambda v: v, "long")
     wdf = spark.range(0, 3200, 1, 32)
@@ -255,22 +91,9 @@ def run_headline(
     _noop_write(
         wdf.mapInArrow(lambda it: it, "id long")
     )
-    _noop_write(qs["pdf_extract"](spark, sf_dir))  # materialize payload corpus
-    # best-of-2 (the shared sandbox VM has load spikes); the heavy
-    # multi-stage queries get a third trial — a single co-tenant spike
-    # across both trials of a 3-4 s query otherwise records a 2x
-    # regression that no code change caused
-    HEAVY = {
-        "dedup_minhash_lsh", "dedup_simhash", "embedding_near_dup_lsh",
-        "dup_span_stats", "embedding_near_dup",
-        # the iterative CC queries run 15+ sequential job barriers, so
-        # a co-tenant spike inflates them 2-3x where map-only queries
-        # inflate ~20% — they need the extra trial most
-        "duplicate_clusters", "dedup_survivors",
-        # pointer-doubling redirect walk: 5 sequential checkpoint
-        # rounds, same barrier-sensitivity class as CC
-        "redirect_chains",
-    }
+    _noop_write(em.q_pdf_extract(spark, sf_dir))  # materialize payload corpus
+    # best-of-2 (shared hosts have load spikes); HEAVY
+    # components get a third trial (why: the comment on em.BENCH)
     # in-band host-capacity probes (VERDICT r3 #8): one effective-core
     # probe per query GROUP, so entries taken under a co-tenant spike
     # self-qualify in BENCH.md instead of reading as code regressions
@@ -278,15 +101,15 @@ def run_headline(
     times: dict[str, float] = {}
     probes: list[float] = []
     query_probe: dict[str, float] = {}
-    for gi in range(0, len(HEADLINE), group_size):
+    for gi in range(0, len(qs), group_size):
         probe = probe_effective_cores()
         probes.append(probe)
-        for name in HEADLINE[gi:gi + group_size]:
+        for name, fn, flags in qs[gi:gi + group_size]:
             query_probe[name] = probe
             best = float("inf")
-            for _ in range(3 if name in HEAVY else 2):
+            for _ in range(3 if flags & em.HEAVY else 2):
                 t0 = time.perf_counter()
-                _noop_write(qs[name](spark, sf_dir))
+                _noop_write(fn(spark, sf_dir))
                 best = min(best, time.perf_counter() - t0)
                 # dedup operators cache intermediates; don't let leaked
                 # caches build memory pressure for later queries
@@ -459,7 +282,8 @@ def main() -> int:
         shutil.rmtree(work, ignore_errors=True)
 
     total = round(sum(qtimes.values()), 3)
-    r2_subtotal = round(sum(qtimes[n] for n in R2_SUBSET), 3)
+    r2 = _r2_names()
+    r2_subtotal = round(sum(qtimes[n] for n in r2), 3)
     result = {
         "metric": "headline query suite wall time + extraction scaling",
         "value": total,
@@ -493,7 +317,7 @@ def main() -> int:
         "unit": "sec",
         # the round-1/2-comparable subset only; the full per-query map
         # (len(qtimes) keys) lives in BENCH_FULL.json / BENCH.md
-        "queries": {k: qtimes[k] for k in R2_SUBSET if k in qtimes},
+        "queries": {k: qtimes[k] for k in r2 if k in qtimes},
         "n_queries_total": len(qtimes),
         "queries_full_file": "BENCH_FULL.json",
         "r2_subtotal": r2_subtotal,
@@ -527,6 +351,7 @@ LOW_CAPACITY = 22.4  # 0.7 * 32 nominal cores
 
 def _write_bench_md(result: dict, query_probe: dict | None = None) -> None:
     query_probe = query_probe or {}
+    r2 = _r2_names()
     probes = result.get("headline_host_probes", [])
     lines = [
         "# BENCH — measured numbers (regenerated by bench.py)",
@@ -535,7 +360,7 @@ def _write_bench_md(result: dict, query_probe: dict | None = None) -> None:
         f"({len(result['queries'])} queries; the round-2 extended surface "
         "is promoted into the headline as of round 3)",
         "",
-        f"Round-1/2-comparable subtotal (the original {len(R2_SUBSET)}-query "
+        f"Round-1/2-comparable subtotal (the original {len(r2)}-query "
         f"headline): **{result.get('r2_subtotal')} s** "
         "(vs 28.88 r1, 20.52 r2 driver runs).",
         "",
@@ -549,12 +374,12 @@ def _write_bench_md(result: dict, query_probe: dict | None = None) -> None:
         "|---|---|---|",
     ]
     for k, v in result["queries"].items():
-        star = "" if k in R2_SUBSET else " *"
+        star = "" if k in r2 else " *"
         p = query_probe.get(k)
         flag = "†" if (p is not None and p < LOW_CAPACITY) else ""
         lines.append(f"| {k}{star} | {v}{flag} | {p if p is not None else ''} |")
     lines.append("")
-    lines.append("`*` = promoted from the round-2 extended table.")
+    lines.append("`*` = not in the round-2 subtotal.")
     s = result.get("scaling") or {}
     if s:
         lines += [

@@ -1,6 +1,6 @@
 """Driver-contract surface: entry() smoke, queries()/oracle_sql()
 key alignment, and a DuckDB spot-check of a few queries at sf0.001
-(the full 29-query sweep runs in scripts/check_contract.py at sf0.01;
+(the full 50-query sweep runs in scripts/check_contract.py at sf0.01;
 this is the fast regression net)."""
 
 import duckdb
