@@ -183,11 +183,14 @@ def probe_effective_cores(procs: int = 32) -> float:
 
 
 def _spin_task(_: int) -> float:
-    t0 = time.perf_counter()
+    # CPU time, not wall: a worker queued behind others for a core must
+    # not count its waiting as work, or an oversubscribed host reads as
+    # ``procs`` effective cores
+    t0 = time.process_time()
     x = 0
     for i in range(4_000_000):
         x += i
-    return time.perf_counter() - t0
+    return time.process_time() - t0
 
 
 def run_scaling_rounds(corpus_path: str, n_docs: int, rounds: int = 3) -> dict:

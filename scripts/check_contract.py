@@ -9,12 +9,13 @@ Usage: python scripts/check_contract.py [sf_dir] [only_query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -23,8 +24,6 @@ TABLES = [
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
     con = duckdb.connect()
     for t in TABLES:
         # a missing table only matters if an oracle references it —
@@ -81,8 +80,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     # a typo'd query name must NOT yield a vacuous green gate
-
-    import os
 
     # conditioned oracles (temperature_sample) gather their threshold
     # inputs from the compared parquet — point them at THIS run's sf

@@ -567,9 +567,10 @@ def duplicate_span_stats(
     ``xxhash64(gram)`` (8 bytes) instead — the ``exact_dedup``
     narrowing, MEASURED at sf0.1 with the shuffled-join regime forced:
     **13.20 MB raw-gram keys -> 7.62 MB hashed (1.73x)**
-    (scripts/measure_shuffle.py; note the same trick LOSES for short
-    unigram tokens — see unigram_logprob — because lz4 compresses
-    Zipfian short strings better than random hashes; 5-gram strings
+    (BASELINE.md "Token/gram exchange-key encoding" row; note the
+    same trick LOSES for short unigram tokens — see unigram_logprob —
+    because lz4 compresses Zipfian short strings better than random
+    hashes; 5-gram strings
     are long and near-unique, so the hash wins here and the gap grows
     with document length). A 64-bit collision can mark a rare
     gram's position as covered because it collided with a hot gram's

@@ -536,8 +536,9 @@ def unigram_logprob(
     token has corpus count >= 1 (self-scored), so no OOV smoothing
     branch is needed.
 
-    Exchange width — MEASURED (scripts/measure_shuffle.py, sf0.1,
-    shuffled-join regime forced), and the obvious narrowing loses:
+    Exchange width — MEASURED (BASELINE.md "Token/gram exchange-key
+    encoding" row, sf0.1, shuffled-join regime forced), and the obvious
+    narrowing loses:
     keying the count + join-back on ``xxhash64(tok)`` (the
     ``exact_dedup`` trick) measured **1.18 MB hashed vs 1.09 MB
     raw-token keys** head-to-head — shuffle blocks are lz4-compressed
