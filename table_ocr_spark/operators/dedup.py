@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from table_ocr_spark.local_frames import local_frame
+from table_ocr_spark.sources.catalog import fs_exists
 from table_ocr_spark.operators.textstats import tokens
 
 SIMHASH_BITS = 32
@@ -70,14 +71,12 @@ def content_key_cols(text_col: str) -> list:
 
 
 def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    key: str = "hash",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Exact duplicate clustering: every doc mapped to the canonical
     (min id) doc of its normalized-text group, plus the group size.
 
-    ``key="hash"`` (default, the crawl-scale path): the groupBy and the
-    join back are keyed on a 192-bit composite —
+    The groupBy and the join back are keyed on a 192-bit composite —
     ``(xxhash64(norm), md5(norm))`` — 40 bytes/row through both
     exchanges instead of the full normalized document text (which
     roughly doubled exchange bytes for the stage). The two hashes are
@@ -86,20 +85,11 @@ def exact_dedup(
     expected number of colliding PAIRS is n^2/2^193 ≈ 2^-113 — not a
     realistic failure mode (the single-hash xxhash64 variant alone
     WOULD collide at that scale: ~2^15 expected pairs, hence the
-    second hash as the collision check). ``key="text"`` keeps the
-    full-string grouping for byte-paranoid audits; both paths produce
-    identical clusters.
+    second hash as the collision check). :func:`exact_dedup_audit`
+    certifies a corpus against the full normalized text.
     """
-    if key not in ("hash", "text"):
-        raise ValueError(f"key must be 'hash' or 'text', got {key!r}")
-    if key == "hash":
-        keyed = df.select(F.col(id_col), *content_key_cols(text_col))
-        group_cols = ["_h64", "_h128"]
-    else:
-        keyed = df.select(
-            F.col(id_col), normalized_text(F.col(text_col)).alias("_norm")
-        )
-        group_cols = ["_norm"]
+    keyed = df.select(F.col(id_col), *content_key_cols(text_col))
+    group_cols = ["_h64", "_h128"]
     groups = keyed.groupBy(*group_cols).agg(
         F.min(id_col).alias("canonical_id"),
         F.count(F.lit(1)).alias("n_copies"),
@@ -821,16 +811,6 @@ def _cc_round_path(state_dir: str, rnd: int) -> str:
     return f"{state_dir}/labels/round={rnd}"
 
 
-def _fs_exists(spark, path: str) -> bool:
-    """Hadoop-FS existence probe — the shared copy lives in
-    ``sources/catalog.fs_exists`` (kept as a module-local name so the
-    many in-module call sites and streaming/crawl.py's import stay
-    stable)."""
-    from table_ocr_spark.sources.catalog import fs_exists
-
-    return fs_exists(spark, path)
-
-
 def _cc_marker_path(state_dir: str, rnd: int, done: bool) -> str:
     return f"{state_dir}/meta/{'done' if done else 'round'}_{rnd}"
 
@@ -845,7 +825,7 @@ def _read_cc_meta(spark, state_dir: str):
     could be destroyed by a kill during its own rewrite, stranding
     resume permanently)."""
     meta = f"{state_dir}/meta"
-    if not _fs_exists(spark, meta):
+    if not fs_exists(spark, meta):
         return None
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(meta)
@@ -875,7 +855,7 @@ def _read_cc_meta(spark, state_dir: str):
             continue  # partial marker from a crashed write
         if not rows:
             continue
-        if _fs_exists(spark, _cc_round_path(state_dir, rnd)):
+        if fs_exists(spark, _cc_round_path(state_dir, rnd)):
             return rnd, done
     if not markers:
         # legacy layout (pre-marker rounds wrote ONE overwritten parquet
@@ -887,7 +867,7 @@ def _read_cc_meta(spark, state_dir: str):
             rows = spark.read.parquet(meta).collect()
         except Exception:
             return None
-        if rows and _fs_exists(
+        if rows and fs_exists(
             spark, _cc_round_path(state_dir, int(rows[0]["round"]))
         ):
             return int(rows[0]["round"]), bool(rows[0]["done"])

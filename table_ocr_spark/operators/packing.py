@@ -31,6 +31,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from table_ocr_spark.local_frames import local_frame
 from table_ocr_spark.operators.textstats import tokens
@@ -44,16 +45,20 @@ def pack_sequences(
     weight_col: Optional[str] = None,
     bucket_width: int = 1 << 20,
     max_buckets: int = 4_000_000,
+    group_col: Optional[str] = None,
 ) -> DataFrame:
     """Per document: ``n_tokens``, global ``start_offset`` (exclusive
     prefix sum over ascending ``id_col``), and ``seq_id`` =
     ``floor(start_offset / capacity)``. ``weight_col`` overrides the
-    token count (e.g. a precomputed BPE length). The bounded-collect
-    safety argument is ENFORCED, not assumed: the per-bucket totals are
-    counted first and the job fails fast above ``max_buckets`` (at 4M
-    rows ≈ 64 MB of driver objects) with the fix spelled out — raise
-    ``bucket_width``. Default width 2^20 ids/bucket keeps 10^12 dense
-    ids under 10^6 buckets."""
+    token count (e.g. a precomputed BPE length). ``group_col`` packs
+    each group as its own stream in one plan: buckets are keyed
+    ``(group, bucket)``, offsets restart at 0 per group, and the group
+    column leads the output. The bounded-collect safety argument is
+    ENFORCED, not assumed: the per-bucket totals are counted first and
+    the job fails fast above ``max_buckets`` (at 4M rows ≈ 64 MB of
+    driver objects) with the fix spelled out — raise ``bucket_width``
+    (offsets never depend on it). Default width 2^20 ids/bucket keeps
+    10^12 dense ids under 10^6 buckets."""
     if capacity <= 0:
         raise ValueError(f"capacity must be positive, got {capacity}")
     weight = (
@@ -61,12 +66,14 @@ def pack_sequences(
         if weight_col
         else F.size(tokens(F.col(text_col))).cast("long")
     )
+    keys = [group_col] if group_col else []
     # try_cast, then VALIDATE: a non-numeric or NULL id would land in
     # bucket NULL, silently vanish in the inner bucket join below, and
     # (mixed with numeric ids) crash the driver sort on None<int. The
     # totals action below doubles as the validator, so the check costs
     # no extra job.
     base = df.select(
+        *keys,
         F.col(id_col).alias("_id"),
         weight.alias("n_tokens"),
         F.floor(F.col(id_col).try_cast("long") / bucket_width).alias(
@@ -74,7 +81,7 @@ def pack_sequences(
         ),
     )
 
-    totals_df = base.groupBy("_bucket").agg(
+    totals_df = base.groupBy(*keys, "_bucket").agg(
         F.sum("n_tokens").alias("_total"),
         (F.count(F.lit(1)) - F.count("n_tokens")).alias("_n_null_w"),
         F.min("n_tokens").alias("_min_w"),
@@ -87,11 +94,12 @@ def pack_sequences(
             f"raise bucket_width (currently {bucket_width}) so the "
             f"per-bucket totals stay a bounded driver collect"
         )
-    if any(row["_bucket"] is None for row in totals):
+    # a totals row leads with (group..., _bucket)
+    if any(None in row[: len(keys) + 1] for row in totals):
         raise ValueError(
-            f"pack_sequences: {id_col!r} has NULL or non-numeric values "
-            "— the prefix sum is keyed on a numeric document id; map "
-            "string ids to a dense numeric id upstream"
+            f"pack_sequences: {id_col!r} (or {group_col!r}) has NULL or "
+            "non-numeric values — the prefix sum is keyed on a numeric "
+            "document id; map string ids to a dense numeric id upstream"
         )
     if any(
         row["_n_null_w"] > 0 or (row["_min_w"] is not None and row["_min_w"] < 0)
@@ -102,25 +110,29 @@ def pack_sequences(
             "upstream (NULL weights silently shift every later "
             "document's start_offset)"
         )
-    running = 0
+    # the running sum restarts at 0 in each group
+    running: dict = {}
     bases = []
-    for row in sorted(totals, key=lambda r: r["_bucket"]):
-        bases.append((row["_bucket"], running))
-        running += row["_total"]
-    spark = df.sparkSession
-    base_df = local_frame(spark, bases, "_bucket long, _base long")
+    for row in sorted(totals, key=lambda r: tuple(r[: len(keys) + 1])):
+        group = tuple(row[: len(keys)])
+        bases.append((*group, row["_bucket"], running.get(group, 0)))
+        running[group] = running.get(group, 0) + row["_total"]
+    schema = T.StructType([base.schema[k] for k in keys])
+    schema = schema.add("_bucket", "long").add("_base", "long")
+    base_df = local_frame(df.sparkSession, bases, schema)
 
     w = (
-        Window.partitionBy("_bucket")
+        Window.partitionBy(*keys, "_bucket")
         .orderBy(F.col("_id").asc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = base.withColumn(
         "_local", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
     )
-    out = local.join(F.broadcast(base_df), "_bucket")
+    out = local.join(F.broadcast(base_df), [*keys, "_bucket"])
     start = F.col("_base") + F.col("_local")
     return out.select(
+        *keys,
         F.col("_id").alias(id_col),
         "n_tokens",
         start.alias("start_offset"),
@@ -132,6 +144,7 @@ def write_training_shards(
     packed: DataFrame,
     path: str,
     seqs_per_shard: int = 1024,
+    group_col: Optional[str] = None,
 ) -> None:
     """Materialize the packed layout as loader-ready shards:
     ``shard = floor(seq_id / seqs_per_shard)``, one parquet directory
@@ -140,17 +153,19 @@ def write_training_shards(
     sequentially with zero sorting. One hash repartition on the shard
     key co-locates a shard's rows in one task → one sorted file per
     shard directory; shard count is n_seqs/seqs_per_shard, so the
-    write parallelism scales with the corpus."""
+    write parallelism scales with the corpus. ``group_col`` keys it
+    all on ``(group, shard)``: ``<group>=G/shard=K/`` in one write."""
     if seqs_per_shard <= 0:
         raise ValueError(f"seqs_per_shard must be positive, got {seqs_per_shard}")
+    keys = [group_col, "shard"] if group_col else ["shard"]
     with_shard = packed.withColumn(
         "shard", F.floor(F.col("seq_id") / seqs_per_shard).cast("long")
     )
     (
-        with_shard.repartition("shard")
-        .sortWithinPartitions("start_offset")
+        with_shard.repartition(*keys)
+        .sortWithinPartitions(*keys, "start_offset")
         .write.mode("overwrite")
-        .partitionBy("shard")
+        .partitionBy(*keys)
         .parquet(path)
     )
 

@@ -50,58 +50,19 @@ def tier_cutoffs(
     max_distinct_scores: int = 2_000_000,
 ) -> list:
     """Exact tier boundaries [c_1..c_{T-1}] (ascending ranks) of
-    ``score_col`` via the bounded-histogram two-phase plan. Driver
+    ``score_col`` via the bounded-histogram two-phase plan: the
+    :func:`grouped_tier_cutoffs` engine over one constant group. Driver
     memory is O(distinct scores), ENFORCED <= ``max_distinct_scores``.
-    NULL scores are rejected — a NULL has no rank; filter or impute
-    upstream (the documents corpus pins NULL text to score-able empty
-    stats, so NULLs here mean a broken upstream)."""
-    if n_tiers < 2:
-        raise ValueError(f"n_tiers must be >= 2, got {n_tiers}")
-    hist = (
-        df.select(F.col(score_col).alias("s"))
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).alias("c"))
+    NULL and NaN scores are rejected — neither has a rank; filter or
+    impute upstream (the documents corpus pins NULL text to score-able
+    empty stats, so NULLs here mean a broken upstream)."""
+    cutoffs = grouped_tier_cutoffs(
+        df.select(F.col(score_col), F.lit("").alias("_one_group")),
+        score_col, "_one_group", n_tiers, max_distinct_scores,
     )
-    # +1 sentinel: detect overflow without collecting the overflow
-    rows = hist.limit(max_distinct_scores + 1).collect()
-    if len(rows) > max_distinct_scores:
-        raise ValueError(
-            f"tier_cutoffs: more than {max_distinct_scores} distinct "
-            f"scores in {score_col!r} — quantize the score (round) "
-            "before tiering; an unquantized float column would "
-            "materialize corpus-cardinality rows on the driver"
-        )
-    for r in rows:
-        if r["s"] is None:
-            raise ValueError(
-                f"tier_cutoffs: NULL values in {score_col!r}; a NULL "
-                "has no rank — filter or impute upstream"
-            )
-        if isinstance(r["s"], float) and math.isnan(r["s"]):
-            raise ValueError(
-                f"tier_cutoffs: NaN values in {score_col!r}; NaN "
-                "compares false against everything, so sorting it "
-                "would silently corrupt every cutoff — fail instead"
-            )
-    rows.sort(key=lambda r: r["s"])
-    n = sum(r["c"] for r in rows)
-    if n == 0:
+    if not cutoffs:
         raise ValueError("tier_cutoffs: empty input")
-    # DISTINCT ranks: for n < n_tiers several targets collide on one
-    # rank; the pinned definition counts each rank once (matching a
-    # SQL "rk IN (...)" oracle, where an IN-list matches a row once),
-    # so a 2-doc 4-tier corpus has 2 cutoffs, not 3
-    targets = _rank_targets(n, n_tiers)
-    cutoffs = []
-    it = iter(rows)
-    row = next(it)
-    cum = row["c"]
-    for rank in targets:  # targets ascend, so one forward sweep
-        while cum < rank:
-            row = next(it)
-            cum += row["c"]
-        cutoffs.append(row["s"])
-    return cutoffs
+    return cutoffs[""]
 
 
 def _rank_targets(n: int, n_tiers: int) -> list:
@@ -322,12 +283,12 @@ def grouped_tier_cutoffs(
     collect, then a per-group forward sweep over sorted (score, count)
     rows. The shuffle carries |distinct (group, score)| rows, never
     corpus rows, and the collect is ENFORCED <= ``max_distinct_scores``
-    TOTAL across groups (the :func:`tier_cutoffs` sentinel-limit
-    pattern) — quantize the score (round) before calling, exactly as
-    :func:`tier_cutoffs` requires. Unbounded continuous scores should
-    go through :func:`tier_cutoffs_continuous` per group instead (k
-    bounded range-refinement jobs); this engine fails fast rather
-    than guessing.
+    TOTAL across groups (a +1 sentinel limit detects overflow without
+    collecting it) — quantize the score (round) before calling.
+    Unbounded continuous scores should go through
+    :func:`tier_cutoffs_continuous` per group instead (k bounded
+    range-refinement jobs); this engine fails fast rather than
+    guessing.
 
     Returns ``{group_value: [c_1..c_{T-1}]}`` with the same pinned
     DISTINCT integer-ceil rank targets as the global engines

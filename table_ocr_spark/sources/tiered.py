@@ -10,9 +10,11 @@ alone read) — at 100 TB the difference between reading one tier and
 filtering the whole corpus IS the job. Plan-asserted in
 ``tests/test_tiered_layout.py``.
 
-Per-tier sequence packing composes on top: ``read_tier(...)`` →
-``pack_sequences`` → ``write_training_shards`` packs one tier into its
-own shard set without any tier ever shuffling against another.
+Sequence packing composes on top in one grouped plan for every tier:
+``pack_sequences(group_col="tier")`` → ``write_training_shards(
+group_col="tier")`` gives each tier its own token stream and shard
+set (``pipelines.materialize_tiered_corpus``); ``read_tier`` is the
+reader for consuming one tier.
 """
 
 from __future__ import annotations

@@ -53,7 +53,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from table_ocr_spark.operators.dedup import _fs_exists
+from table_ocr_spark.sources.catalog import fs_exists
 
 
 def streaming_frontier(
@@ -98,7 +98,7 @@ def streaming_frontier(
             # multi-file batch (e.g. the bootstrap drain of a full
             # bucket) must not plan pages it just ingested
             seen = fetched
-            if _fs_exists(sess, seen_root):
+            if fs_exists(sess, seen_root):
                 # batch=N dirs partition-discover a `batch` column;
                 # a RETRYING batch must not read its own crashed
                 # attempt's claims (it would anti-join away its

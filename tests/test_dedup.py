@@ -95,7 +95,7 @@ def test_dedup_plans_are_equi_joins(spark, docs):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_exact_dedup_hash_and_text_paths_agree(spark):
+def test_exact_dedup_normalized_groups(spark):
     from table_ocr_spark.operators.dedup import exact_dedup
 
     df = spark.createDataFrame(
@@ -112,16 +112,11 @@ def test_exact_dedup_hash_and_text_paths_agree(spark):
         (1, 1, 3, False), (2, 1, 3, True), (4, 1, 3, True),
         (3, 3, 2, False), (5, 3, 2, True),
     }
-    for key in ("hash", "text"):
-        got = {
-            (r["doc_id"], r["canonical_id"], r["n_copies"], r["is_dup"])
-            for r in exact_dedup(df, key=key).collect()
-        }
-        assert got == want, key
-
-    import pytest
-    with pytest.raises(ValueError):
-        exact_dedup(df, key="bogus")
+    got = {
+        (r["doc_id"], r["canonical_id"], r["n_copies"], r["is_dup"])
+        for r in exact_dedup(df).collect()
+    }
+    assert got == want
 
 
 def test_exact_dedup_hash_path_shuffles_narrow_keys(spark):

@@ -227,6 +227,55 @@ def test_full_tier_chain_to_shards(spark, tmp_path):
             # parquet row order within the shard file IS offset order
             assert offs == sorted(offs)
 
+    # the one grouped pass writes, for every tier, the rows a per-tier
+    # loop writes: read_tier, pack at the default bucket width, then
+    # re-attach the url
+    from table_ocr_spark.operators.packing import pack_sequences
+
+    cols = ["url", "n_tokens", "start_offset", "seq_id"]
+    for t in report:
+        keyed = read_tier(spark, f"{out}/corpus", t).withColumn(
+            "_pack_id", F.xxhash64("url")
+        )
+        ref = pack_sequences(
+            keyed, 64, id_col="_pack_id", weight_col="n_tokens"
+        ).join(keyed.select("_pack_id", "url"), "_pack_id")
+        want = {tuple(r) for r in ref.select(*cols).collect()}
+        shards = spark.read.parquet(f"{out}/shards/tier={t}")
+        assert {tuple(r) for r in shards.select(*cols).collect()} == want
+        assert shards.filter(F.col("shard") != F.floor(
+            F.col("seq_id") / 4)).count() == 0
+
+
+def test_shard_tail_job_count_does_not_grow_with_tiers(spark, tmp_path):
+    # materialize_tiered_corpus packs, writes and reports every tier in
+    # one grouped plan, so 4 tiers cost the jobs 2 tiers cost
+    from table_ocr_spark.local_frames import local_frame
+    from table_ocr_spark.pipelines import materialize_tiered_corpus
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n_tiers in (2, 4):
+        corpus = local_frame(
+            spark,
+            [(f"https://t.example/{i}", f"doc {i}", i % 17 + 1, i % n_tiers)
+             for i in range(200)],
+            "url string, text string, n_tokens long, tier long",
+        )
+        group = f"shard-tail-{n_tiers}"
+        sc.setJobGroup(group, group)
+        try:
+            report = materialize_tiered_corpus(
+                corpus, str(tmp_path / group), capacity=64, seqs_per_shard=4
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sorted(report) == list(range(n_tiers))
+        jobs[n_tiers] = len(sc.statusTracker().getJobIdsForGroup(group))
+    # 13 on Spark 4.1; a per-tier loop would run 4 + 12 per tier
+    assert jobs[2] == jobs[4] <= 14, jobs
+
 
 class TestIngestCrawl:
     def test_warc_to_corpus_end_to_end(self, spark, tmp_path):

@@ -128,6 +128,35 @@ def test_pack_sequences_matches_naive_and_bucket_invariant(spark, docs):
         pack_sequences(docs, 0)
 
 
+@pytest.mark.parametrize("width", [1, 7, 1 << 46])
+def test_grouped_pack_equals_each_group_packed_alone(spark, width):
+    # ids interleave across groups and straddle bucket edges at every
+    # width: dense small ids, both sides of multiples of 2^46, and
+    # three ids near 2^62 that one double rounds together
+    edges = [k * (1 << 46) + d for k in (-2, 1, 3) for d in (-1, 0, 1)]
+    ids = list(range(40)) + edges + [(1 << 62) + d for d in (-1, 0, 1)]
+    rows = [(i, ["a", "b", "c"][i % 3], (i % 11) + 1) for i in ids]
+    df = spark.createDataFrame(rows, "doc_id long, g string, w long")
+    cols = ["doc_id", "n_tokens", "start_offset", "seq_id"]
+    grouped = pack_sequences(
+        df, 8, weight_col="w", bucket_width=width, group_col="g"
+    )
+    assert grouped.columns == ["g"] + cols
+    for g in ("a", "b", "c"):
+        alone = pack_sequences(
+            df.filter(F.col("g") == g), 8, weight_col="w", bucket_width=width
+        )
+        got = {tuple(r) for r in grouped.filter(F.col("g") == g)
+               .select(*cols).collect()}
+        assert got == {tuple(r) for r in alone.collect()}
+        # and both are the group's own exclusive prefix sum from 0
+        run, want = 0, set()
+        for i, _, w in sorted(r for r in rows if r[1] == g):
+            want.add((i, w, run, run // 8))
+            run += w
+        assert got == want
+
+
 def test_write_training_shards_order_and_assignment(spark, docs, tmp_path):
     from table_ocr_spark.operators.packing import write_training_shards
 

@@ -224,13 +224,11 @@ def test_encode_results_payload_span_guard(spark):
 
 def test_fs_exists_probe(spark, tmp_path):
     """The shared Hadoop-FS existence probe (sources/catalog.fs_exists
-    — also reached as operators/dedup._fs_exists and from
-    streaming/crawl.py): plain bool, no error-text matching."""
-    from table_ocr_spark.operators.dedup import _fs_exists
+    — called by operators/dedup.py and streaming/crawl.py): plain
+    bool, no error-text matching."""
     from table_ocr_spark.sources.catalog import fs_exists
 
     there = tmp_path / "yes"
     there.mkdir()
     assert fs_exists(spark, str(there)) is True
     assert fs_exists(spark, str(tmp_path / "no")) is False
-    assert _fs_exists(spark, str(there)) is True  # alias stays wired
