@@ -459,16 +459,14 @@ def q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hyperplane_near_dup_pairs(_emb_corpus(spark, sf_dir), threshold=NEAR_DUP_T)
 
 
-def q_semantic_dedup_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (operators/similarity.py): md5-pinned centroids (the
     engine-independent seeding — NOT a quality claim, train_kmeans is
-    the production trainer) → nearest-centroid assignment (expr twin:
-    JVM left-fold cosines, bit-identical to DuckDB; the matmul kernel
-    is pinned equal by the pytest differential) → within-cluster pairs
-    ≥ NEAR_DUP_T → connected components → keep the LEAST-central
-    member per group. One row per corpus vector: id_a=vec_id,
-    id_b=dup-group label, cosine=centroid_sim, cluster=centroid index,
-    keep=survivor flag."""
+    the production trainer) → nearest-centroid assignment → within-
+    cluster pairs ≥ NEAR_DUP_T → connected components → keep the
+    LEAST-central member per group. Both matmul kernels decide in the
+    oracle's left-fold arithmetic, so this scale path is also the
+    contract leg. One row per corpus vector."""
     from table_ocr_spark.operators.similarity import (
         pinned_centroids,
         semantic_dedup,
@@ -476,33 +474,7 @@ def q_semantic_dedup_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb_corpus(spark, sf_dir)
     cents = pinned_centroids(emb, k=SEMDEDUP_K)
-    out = semantic_dedup(
-        emb, centroids=cents, threshold=NEAR_DUP_T, method="expr"
-    )
-    return out.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("group_id").alias("id_b"),
-        F.col("centroid_sim").alias("cosine"),
-        F.col("cluster").cast("long").alias("cluster"),
-        "keep",
-    )
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench component: SemDeDup on the matmul assignment kernel — the
-    scale path (one Arrow batch matmul vs k JVM folds per row). The
-    contract leg (q_semantic_dedup_expr) runs the bit-exact expr twin;
-    the pytest differential pins the two engines equal at 6 dp."""
-    from table_ocr_spark.operators.similarity import (
-        pinned_centroids,
-        semantic_dedup,
-    )
-
-    emb = _emb_corpus(spark, sf_dir)
-    cents = pinned_centroids(emb, k=SEMDEDUP_K)
-    return semantic_dedup(
-        emb, centroids=cents, threshold=NEAR_DUP_T, method="kernel"
-    )
+    return semantic_dedup(emb, centroids=cents, threshold=NEAR_DUP_T)
 
 
 def _budget_tiers(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
@@ -2322,7 +2294,15 @@ CONTRACT: tuple[Row, ...] = (
         "embedding_near_dup",
         _leg(q_embedding_near_dup, *_PAIR_PAD, tag="exact"),
         _leg(q_embedding_near_dup_lsh, *_PAIR_PAD, tag="lsh"),
-        _leg(q_semantic_dedup_expr, tag="semdedup"),
+        _leg(
+            q_semantic_dedup,
+            "vec_id AS id_a",
+            "group_id AS id_b",
+            "centroid_sim AS cosine",
+            "CAST(cluster AS BIGINT) AS cluster",
+            "keep",
+            tag="semdedup",
+        ),
         tag_col="method",
     ),
     _row("quality_pii", q_quality_filter, q_pii_redact),
@@ -2803,7 +2783,7 @@ def _semdedup_sql() -> str:
     legs; centroids = the SEMDEDUP_K corpus vectors with the smallest
     (md5(vec_id), vec_id) (the engine-independent pin pinned_centroids
     applies); assignment = argmax of 6-dp-rounded cosines (ties ->
-    lowest centroid index, mirroring the expr twin's array_position);
+    lowest centroid index, the kernel's first-maximum argmax);
     dup groups = recursive min-label reachability over within-cluster
     pairs >= NEAR_DUP_T (threshold on the UNROUNDED left-fold cosine,
     like cosine_near_dup_pairs); survivor = lowest centroid_sim, ties
@@ -2854,8 +2834,8 @@ def _semdedup_sql() -> str:
                       PARTITION BY lab.gid
                       ORDER BY asg.centroid_sim ASC, lab.id ASC) AS rn
              FROM lab JOIN asg ON asg.vec_id = lab.id)
-      SELECT id AS id_a, gid AS id_b, centroid_sim AS cosine,
-             CAST(cluster AS BIGINT) AS cluster, rn = 1 AS keep
+      SELECT id AS vec_id, gid AS group_id, centroid_sim, cluster,
+             rn = 1 AS keep
       FROM rk
     """
 
@@ -4558,7 +4538,7 @@ def component_sql() -> dict[str, str]:
     """
     sql["trigram_logprob"] = _ngram_logprob_sql()
     sql["gopher_repetition"] = _gopher_repetition_sql()
-    sql["semantic_dedup_expr"] = _semdedup_sql()
+    sql["semantic_dedup"] = _semdedup_sql()
     sql["corpus_report"] = _corpus_report_sql()
     # the WARC leg: parse(build(doc)) == id, extraction == text
     sql["warc_extract"] = """

@@ -807,6 +807,18 @@ def _truncate_plan(df: DataFrame):
     return df.localCheckpoint(eager=False), None
 
 
+def _stage_leaf(df: DataFrame) -> tuple[DataFrame, int]:
+    """A stage output as a checkpointed plan leaf, and its row count.
+    The count is the action that materializes the checkpoint; on the
+    reliable path the persisted copy that fed the checkpoint write is
+    released right after it."""
+    leaf, cached = _truncate_plan(df)
+    n = leaf.count()
+    if cached is not None:
+        cached.unpersist()
+    return leaf, n
+
+
 def _cc_round_path(state_dir: str, rnd: int) -> str:
     return f"{state_dir}/labels/round={rnd}"
 

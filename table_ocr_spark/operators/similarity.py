@@ -8,9 +8,12 @@ data. Here the coarse quantizer is the pre-assigned ``label`` column
 (at real scale: k-means centroid ids); the *plan shape* — prune, then
 exact re-rank inside the cell — is the point.
 
-All math is JVM-side higher-order functions (``zip_with``/``aggregate``
-— a sequential left-fold dot product, the same evaluation order DuckDB
-uses, so oracle doubles agree). Scores are rounded to 6 dp in outputs.
+Exact scores are sequential left-fold dot products, the same evaluation
+order DuckDB uses, so oracle doubles agree: JVM-side higher-order
+functions (``zip_with``/``aggregate``) in the join operators, and
+:func:`_fold_cosine` in the SemDeDup matmul kernels, which screen with
+BLAS and refold wherever its error bound leaves a decision open. Scores
+are rounded to 6 dp in outputs.
 """
 
 from __future__ import annotations
@@ -877,22 +880,74 @@ def pinned_centroids(emb: DataFrame, k: int = 8, vec_col: str = "embedding"):
     return np.asarray([r["vec"] for r in rows], dtype=np.float64)
 
 
+# Screen slack of the matmul kernels. Folded in any order, a d-term dot
+# product is within gamma_d * sum|a_j b_j| <= gamma_d * |a||b| of the
+# exact one (gamma_d ~ d*u, u = 2^-53; Higham, Accuracy and Stability
+# of Numerical Algorithms, sec. 3.1), and the norms, the normalization
+# and the division add a few u more. So the normalize-then-BLAS cosine
+# and the left-fold cosine each sit within (2d + 4)u of the true
+# cosine, and within g = (4d + 8)u of each other. The argmax screen
+# compares two such values (2g); at d = 2^19 that is 4.7e-10, at 768
+# dims 7e-13. A wider screen only costs exact recomputes, never a
+# different result.
+_SCREEN_SLACK = 1e-9
+
+
+def _round6(x):
+    """6-dp HALF_UP (half away from zero), DuckDB's ``round(x, 6)``;
+    np.round's half-to-even would diverge on .5e-6 edges. Monotone in
+    ``x`` (each rounded step keeps order), which :func:`_cell_pairs`
+    relies on."""
+    import numpy as np
+
+    return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
+
+
+def _fold_norms(X):
+    """Row norms of an (n, d) float64 matrix as the SQL engines take
+    them: ``sqrt`` of a left-fold self dot product."""
+    import numpy as np
+
+    ss = np.zeros(len(X))
+    for j in range(X.shape[1]):
+        ss += X[:, j] * X[:, j]
+    return np.sqrt(ss)
+
+
+def _fold_cosine(A, B, r, c, na, nb):
+    """Cosines of the row pairs ``(A[r[i]], B[c[i]])`` in the SQL
+    engines' arithmetic: each dot product a left fold over the
+    dimensions (``acc += a_j * b_j``, the order of ``sqlfuncs.dot`` and
+    DuckDB's ``list_dot_product``), then ``ab / (sqrt(aa) * sqrt(bb))``
+    with ``na``/``nb`` the rows' :func:`_fold_norms`. Its doubles equal
+    the oracle's bit for bit. It folds one dimension at a time, so its
+    memory is a few ``len(r)`` arrays, never pairs x d."""
+    import numpy as np
+
+    ab = np.zeros(len(r))
+    for j in range(A.shape[1]):
+        ab += A[r, j] * B[c, j]
+    return ab / (na[r] * nb[c])
+
+
 def _assign_udf(centroids):
-    """vec -> (cluster, centroid_sim): nearest centroid under cosine,
-    one batched matmul per Arrow batch. Similarities are rounded to
-    6 dp BEFORE the argmax (ties -> lowest centroid index), so the
-    assignment is a function of the same 6-dp values an oracle engine
-    computes — a raw-float argmax would hinge on summation order.
-    NULL/empty/zero-norm vectors -> NULL (they have no cosine
-    direction and must not alias cluster 0)."""
+    """vec -> (cluster, centroid_sim): nearest centroid under cosine.
+    One matmul per Arrow batch screens each row's candidates — the
+    centroids within 1e-6 + slack of its best BLAS similarity, i.e. every
+    centroid whose 6-dp value could equal the best one. The candidates
+    are recomputed by :func:`_fold_cosine` and rounded to 6 dp BEFORE the
+    argmax (ties -> lowest centroid index), so cluster and centroid_sim
+    are the oracle's values, not a function of BLAS summation order.
+    NULL/empty/zero-norm vectors -> NULL (they have no cosine direction
+    and must not alias cluster 0)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    norms = np.linalg.norm(centroids, axis=1)
-    if (norms == 0).any():
+    c_norms = _fold_norms(centroids)
+    if (c_norms == 0).any():
         raise ValueError("assign_clusters: zero-norm centroid")
-    c_unit = centroids / norms[:, None]
+    c_unit = centroids / c_norms[:, None]
     dim = centroids.shape[1]
     out_t = T.StructType(
         [
@@ -923,20 +978,20 @@ def _assign_udf(centroids):
             V = np.asarray(
                 [np.asarray(vecs.iloc[i], dtype=np.float64) for i in ok_idx]
             )
-            vn = np.linalg.norm(V, axis=1)
+            vn = _fold_norms(V)
             nz = vn > 0
             if nz.any():
-                raw = (V[nz] / vn[nz, None]) @ c_unit.T
-                # HALF_UP (away from zero), the convention F.round and
-                # DuckDB round() share — np.round's half-to-even would
-                # diverge from the expr twin exactly on .5e-6 edges
-                sims = np.copysign(
-                    np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw
-                )
-                a = sims.argmax(axis=1)
+                V, vn = V[nz], vn[nz]
+                S = (V / vn[:, None]) @ c_unit.T
+                near = S >= S.max(axis=1)[:, None] - (1e-6 + _SCREEN_SLACK)
+                r, c = np.nonzero(near)
+                exact = _fold_cosine(V, centroids, r, c, vn, c_norms)
+                E = np.full(S.shape, -np.inf)
+                E[r, c] = _round6(exact)
+                a = E.argmax(axis=1)  # first maximum: lowest index
                 rows = np.asarray(ok_idx)[nz]
                 cluster[rows] = a
-                sim[rows] = sims[np.arange(len(a)), a]
+                sim[rows] = E[np.arange(len(a)), a]
         return pd.DataFrame(
             {
                 "cluster": pd.array(
@@ -951,28 +1006,20 @@ def _assign_udf(centroids):
 
 
 def assign_clusters(
-    emb: DataFrame, centroids, vec_col: str = "embedding",
-    method: str = "kernel",
+    emb: DataFrame, centroids, vec_col: str = "embedding"
 ) -> DataFrame:
     """Map-only nearest-centroid assignment under cosine: appends
     ``cluster`` (int, NULL for empty/zero-norm vectors) and
-    ``centroid_sim`` (double, 6 dp) to ``emb``. Similarities are
-    rounded to 6 dp BEFORE the argmax (ties -> lowest centroid index)
-    so the assignment is a function of oracle-visible values, not of
-    float summation order. No shuffle, no join — the canonical
-    coarse-quantizer stage IVF/PQ also use.
+    ``centroid_sim`` (double, 6 dp) to ``emb``. No shuffle, no join —
+    the canonical coarse-quantizer stage IVF/PQ also use.
 
-    Two engines, pinned equal at 6 dp by a differential test:
-
-    - ``kernel`` (default, the scale path): one Arrow-batched numpy
-      matmul per batch; centroids ship as closure state (k x dim
-      float64 — SemDeDup-scale k is 10^2..10^4, i.e. <= ~60 MB at
-      768 dims, the broadcast-table regime).
-    - ``expr``: k JVM left-fold cosines per row (codegen, the same
-      evaluation order as DuckDB's list_dot_product), so every double
-      matches an independent SQL engine BIT-FOR-BIT — the cross-engine
-      contract twin. Right at small k; at k=10^3+ the k-fold expression
-      loses to one matmul, which is why it is not the default.
+    One Arrow-batched numpy matmul per batch screens the candidates and
+    a left-fold recompute decides (:func:`_assign_udf`), so every value
+    equals DuckDB's ``round(list_dot_product(...) / (sqrt(...) *
+    sqrt(...)), 6)`` and its argmax (ties -> lowest centroid index).
+    Centroids ship as closure state (k x dim float64 — SemDeDup-scale
+    k is 10^2..10^4, i.e. <= ~60 MB at 768 dims, the broadcast-table
+    regime).
     """
     import numpy as np
 
@@ -981,60 +1028,53 @@ def assign_clusters(
         raise ValueError(
             f"assign_clusters: centroids must be (k, dim), got {c.shape}"
         )
-    if method == "kernel":
-        udf = _assign_udf(c)
-        assigned = emb.withColumn("_as", udf(as_double_array(vec_col)))
-        return assigned.select(
-            *[F.col(x) for x in emb.columns],
-            F.col("_as.cluster").alias("cluster"),
-            F.col("_as.centroid_sim").alias("centroid_sim"),
-        )
-    if method != "expr":
-        raise ValueError(f"assign_clusters: unknown method {method!r}")
-    vec = as_double_array(vec_col)
-    # mirror the kernel's loud dim-mismatch: without this, zip_with
-    # null-pads a wrong-width vector, the fold goes NULL, and the
-    # corrupt row silently rides through as a never-dedup-checked
-    # NULL-cluster singleton — the exact silent-shrink the kernel
-    # refuses (engines must agree on corrupt input too)
-    dim = c.shape[1]
-    width_ok = (
-        F.size(vec).isNull() | (F.size(vec) == 0) | (F.size(vec) == dim)
-    )
-    vec = F.when(
-        ~width_ok,
-        F.raise_error(
-            F.concat(
-                F.lit("assign_clusters: vector of dim "),
-                F.size(vec).cast("string"),
-                F.lit(f" vs centroid dim {dim}"),
-            )
-        ).cast("array<double>"),
-    ).otherwise(vec)
-    sims = F.array(
-        *[
-            F.round(
-                cosine(
-                    vec,
-                    F.array(*[F.lit(float(x)) for x in row]),
-                ),
-                6,
-            )
-            for row in c
-        ]
-    )
-    # array_position returns the FIRST index of the max (1-based) —
-    # the same lowest-index tiebreak the kernel's argmax applies; a
-    # zero-norm/empty vector yields NULL sims -> NULL max -> NULL
-    # position -> NULL cluster
-    bound = emb.withColumn("_sims", sims)
-    best = F.array_max(F.col("_sims"))
-    pos = F.array_position(F.col("_sims"), best)
-    return bound.select(
+    udf = _assign_udf(c)
+    assigned = emb.withColumn("_as", udf(as_double_array(vec_col)))
+    return assigned.select(
         *[F.col(x) for x in emb.columns],
-        F.when(pos.isNotNull(), (pos - 1).cast("int")).alias("cluster"),
-        best.alias("centroid_sim"),
+        F.col("_as.cluster").alias("cluster"),
+        F.col("_as.centroid_sim").alias("centroid_sim"),
     )
+
+
+def _cell_pairs(V, threshold, block_rows):
+    """Row pairs ``r < c`` of one cell's (n, d) float64 matrix whose
+    left-fold cosine is >= ``threshold``, with that cosine rounded to
+    6 dp: arrays ``(r, c, cosine)``. Zero-norm rows pair with nothing.
+
+    The matmul screens one ``block_rows``-row block at a time at
+    ``threshold - _SCREEN_SLACK``. The fold cosine of a screened pair
+    lies within the slack of its BLAS value ``s``, and ``>=`` and
+    :func:`_round6` are monotone, so where ``s - slack`` and ``s +
+    slack`` give the same answers ``s`` decides like the fold. Only the
+    pairs whose window straddles the threshold or a 6-dp rounding edge
+    (about 2e-3 of them) are refolded with :func:`_fold_cosine`. Every
+    array is O(screened pairs) <= ``block_rows * n``, whatever d is."""
+    import numpy as np
+
+    norms = _fold_norms(V)
+    live = np.flatnonzero(norms > 0)
+    V, norms = V[live], norms[live]
+    Vn = V / norms[:, None]
+    n = len(live)
+    r_parts, c_parts, cos_parts = [live[:0]], [live[:0]], [np.zeros(0)]
+    for i0 in range(0, n, block_rows):
+        i1 = min(i0 + block_rows, n)
+        S = Vn[i0:i1] @ Vn.T
+        mask = S >= threshold - _SCREEN_SLACK
+        # keep the strict upper triangle in GLOBAL coordinates
+        mask &= np.arange(n)[None, :] > np.arange(i0, i1)[:, None]
+        r, c = np.nonzero(mask)
+        s = S[r, c]
+        r += i0
+        lo, hi = s - _SCREEN_SLACK, s + _SCREEN_SLACK
+        redo = (lo < threshold) | (_round6(lo) != _round6(hi))
+        s[redo] = _fold_cosine(V, V, r[redo], c[redo], norms, norms)
+        hit = s >= threshold
+        r_parts.append(live[r[hit]])
+        c_parts.append(live[c[hit]])
+        cos_parts.append(_round6(s[hit]))
+    return tuple(map(np.concatenate, (r_parts, c_parts, cos_parts)))
 
 
 def cluster_pairs_kernel(
@@ -1050,10 +1090,11 @@ def cluster_pairs_kernel(
     fold per candidate pair — the SemDeDup-paper shape (pairwise
     similarity matrix inside each cluster). One shuffle lands each
     cell on a task; ``applyInPandas`` then walks the cell's similarity
-    matrix in ``block_rows``-row blocks, so peak memory is
-    ``block_rows * |cell|`` doubles (~0.8 GB for a 100k cell at the
-    default — and ``max_cell_size`` fail-fasts beyond that, same
-    contract as :func:`cosine_near_dup_pairs`). Measured on the sf0.1
+    matrix in ``block_rows``-row blocks (:func:`_cell_pairs`), so peak
+    memory is a few ``block_rows * |cell|`` arrays at any dimension
+    (~0.8 GB each for a 100k cell at the default — and
+    ``max_cell_size`` fail-fasts beyond that, same contract as
+    :func:`cosine_near_dup_pairs`). Measured on the sf0.1
     contract corpus (2100 x 64-dim, 4 cells): the label-equi fold join
     spends ~9 s on ~550k candidate folds; the matmul kernel returns in
     well under a second — the gap widens with cell size since folds
@@ -1061,10 +1102,13 @@ def cluster_pairs_kernel(
 
     Emits the same columns/values as :func:`cosine_near_dup_pairs`
     (cosine rounded 6 dp HALF_UP; threshold applied to the unrounded
-    value). Rows whose ``cell_col`` is NULL are dropped (an equi-join
-    would never match them; :func:`semantic_dedup` NULLs the cell of
-    zero-norm vectors upstream); zero-norm vectors inside a cell are
-    dropped for the same reason. Ids order identically in the kernel
+    value): the matmul screens at ``threshold`` minus the BLAS-vs-fold
+    error bound, and each surviving pair's threshold test and rounded
+    cosine equal the left fold's (:func:`_fold_cosine`). Rows whose ``cell_col`` is
+    NULL are dropped (an equi-join would never match them;
+    :func:`semantic_dedup` NULLs the cell of zero-norm vectors
+    upstream); zero-norm vectors inside a cell are dropped for the
+    same reason. Ids order identically in the kernel
     and in Spark, strings included: Python compares ``str`` by code
     point, Spark compares ``UTF8String`` by its UTF-8 bytes, and UTF-8
     was designed so that byte order IS code-point order (only UTF-16
@@ -1117,41 +1161,8 @@ def cluster_pairs_kernel(
         V = np.asarray(
             [np.asarray(v, dtype=np.float64) for v in pdf["_vec"]]
         )
-        norms = np.linalg.norm(V, axis=1)
-        nz = norms > 0
-        ids, V, norms = ids[nz], V[nz], norms[nz]
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        Vn = V / norms[:, None]
-        a_parts, b_parts, c_parts = [], [], []
-        for i0 in range(0, n, block_rows):
-            i1 = min(i0 + block_rows, n)
-            S = Vn[i0:i1] @ Vn.T
-            mask = S >= threshold
-            # keep the strict upper triangle in GLOBAL coordinates
-            cols = np.arange(n)[None, :]
-            rows = np.arange(i0, i1)[:, None]
-            mask &= cols > rows
-            r, c = np.nonzero(mask)
-            if len(r):
-                a_parts.append(ids[i0 + r])
-                b_parts.append(ids[c])
-                raw = S[r, c]
-                c_parts.append(
-                    np.copysign(
-                        np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6, raw
-                    )
-                )
-        if not a_parts:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(a_parts),
-                "id_b": np.concatenate(b_parts),
-                "cosine": np.concatenate(c_parts),
-            }
-        )
+        r, c, cos = _cell_pairs(V, threshold, block_rows)
+        return pd.DataFrame({"id_a": ids[r], "id_b": ids[c], "cosine": cos})
 
     return narrow.groupBy(cell_col).applyInPandas(cell_pairs, out_schema)
 
@@ -1164,7 +1175,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     max_cell_size: Optional[int] = 100_000,
     max_iters: int = 25,
-    method: str = "kernel",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embedding space with k-means, find cosine-duplicate groups WITHIN
@@ -1179,16 +1189,19 @@ def semantic_dedup(
 
     Stages (every one an already-measured primitive):
     nearest-centroid assignment (:func:`assign_clusters`) ->
-    within-cluster pairs >= ``threshold`` (``kernel``: one dense
-    matmul per cell, :func:`cluster_pairs_kernel`; ``expr``: the
-    cluster-blocked fold join :func:`cosine_near_dup_pairs`, the
-    bit-exact oracle twin) -> connected components (pointer jumping
-    over the edge-induced subgraph, ``dedup.duplicate_clusters``) ->
-    survivor argmax (map-side-combinable ``min(struct)``,
-    ``dedup.cluster_survivors`` on NEGATED centroid_sim). The assigned
-    frame is persisted once — four narrow consumers (pair sides,
+    within-cluster pairs >= ``threshold`` (one dense matmul per cell,
+    :func:`cluster_pairs_kernel`) -> connected components (pointer
+    jumping over the edge-induced subgraph,
+    ``dedup.duplicate_clusters``) -> survivor argmax
+    (map-side-combinable ``min(struct)``, ``dedup.cluster_survivors``
+    on NEGATED centroid_sim). Both matmul kernels decide in the
+    left-fold arithmetic of the SQL oracle (:func:`_fold_cosine`), so
+    every output row equals an independent DuckDB run. The assignment
+    and the groups are checkpointed plan leaves
+    (``dedup._stage_leaf``): four narrow consumers (pair sides,
     component seed, survivor scores) would otherwise re-run the
-    assignment kernel each.
+    assignment kernel each, and two the corpus-wide label join that
+    closes the components.
 
     Returns one row per input vector: (``vec_id``, ``cluster``,
     ``centroid_sim``, ``group_id``, ``group_size``, ``is_dup``,
@@ -1197,49 +1210,33 @@ def semantic_dedup(
     never pair and ride through as keep=true singletons.
 
     ``centroids=None`` trains ``k`` of them (:func:`train_kmeans`);
-    pass an array to reuse a trained/pinned codebook. ``method``
-    selects the assignment engine (:func:`assign_clusters`): ``kernel``
-    for scale, ``expr`` for bit-exact cross-engine oracle runs.
+    pass an array to reuse a trained/pinned codebook.
     """
     from table_ocr_spark.operators.dedup import (
+        _stage_leaf,
         cluster_survivors,
         duplicate_clusters,
     )
 
     if centroids is None:
         centroids = train_kmeans(emb, k=k, vec_col=vec_col)
-    assigned = assign_clusters(
-        emb.select("vec_id", vec_col), centroids, vec_col, method=method
-    ).persist()
-    if method == "kernel":
-        pairs = cluster_pairs_kernel(
-            assigned.filter(F.col("cluster").isNotNull()),
-            threshold=threshold,
-            vec_col=vec_col,
-            cell_col="cluster",
-            max_cell_size=max_cell_size,
+    # each leaf's count materializes it, so unlike a persist no
+    # cache-manager entry outlives the call
+    assigned, _ = _stage_leaf(
+        assign_clusters(emb.select("vec_id", vec_col), centroids, vec_col)
+    )
+    pairs = cluster_pairs_kernel(
+        assigned,
+        threshold=threshold,
+        vec_col=vec_col,
+        cell_col="cluster",
+        max_cell_size=max_cell_size,
+    )
+    groups, _ = _stage_leaf(
+        duplicate_clusters(
+            assigned, pairs, id_col="vec_id", max_iters=max_iters
         )
-    else:
-        # NULL clusters (zero-norm vectors) can never equi-join into a
-        # pair, but the hot-cell guard inside cosine_near_dup_pairs
-        # counts label cells INCLUDING the NULL cell — filter first so
-        # a corpus with many empty vectors doesn't trip a spurious
-        # max_cell_size failure the kernel path wouldn't hit
-        pairs = cosine_near_dup_pairs(
-            assigned.filter(F.col("cluster").isNotNull()).select(
-                "vec_id", vec_col, F.col("cluster").alias("label")
-            ),
-            threshold=threshold,
-            vec_col=vec_col,
-            max_cell_size=max_cell_size,
-        )
-    # persisted: TWO consumers (survivor scores, final audit join)
-    # would otherwise each re-run the corpus-wide label join that
-    # closes the CC output — narrow rows (id + 2 longs + bool), so
-    # the cache is id-cardinality, never payload-cardinality
-    groups = duplicate_clusters(
-        assigned, pairs, id_col="vec_id", max_iters=max_iters
-    ).persist()
+    )
     surv = cluster_survivors(
         groups,
         assigned.select("vec_id", (-F.col("centroid_sim")).alias("_neg")),

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from table_ocr_spark.operators.dedup import (
-    _truncate_plan,
+    _stage_leaf,
     cluster_survivors,
     duplicate_clusters,
     exact_dedup,
@@ -506,18 +506,6 @@ def next_frontier(
         if robots_combined is not None:
             robots_combined.unpersist()
     return plan, report
-
-
-def _stage_leaf(df: DataFrame) -> tuple[DataFrame, int]:
-    """A stage output as a checkpointed plan leaf, and its row count.
-    The count is the action that materializes the checkpoint; on the
-    reliable path the persisted copy that fed the checkpoint write is
-    released right after it."""
-    leaf, cached = _truncate_plan(df)
-    n = leaf.count()
-    if cached is not None:
-        cached.unpersist()
-    return leaf, n
 
 
 def build_training_corpus(

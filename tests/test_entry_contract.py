@@ -14,7 +14,7 @@ TABLES = [
 ]
 
 SPOT = ["extract_html_pdf", "majority_vote", "dedup_exact",
-        "fingerprint_logprob"]
+        "fingerprint_logprob", "embedding_near_dup"]
 
 
 @pytest.fixture(scope="module")

@@ -431,34 +431,6 @@ def test_pinned_centroids_md5_rule(spark):
         pinned_centroids(df, k=99)
 
 
-def test_assign_clusters_kernel_expr_differential(spark):
-    """The matmul kernel (scale path) and the JVM-fold expression twin
-    (oracle path) must agree on every (cluster, centroid_sim) over the
-    REAL embeddings table — the guarantee that lets the contract row
-    run expr while bench runs kernel."""
-    import os
-    from table_ocr_spark.operators.similarity import (
-        assign_clusters,
-        pinned_centroids,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    cents = pinned_centroids(emb, k=4)
-    a = assign_clusters(emb, cents, method="kernel")
-    b = assign_clusters(emb, cents, method="expr")
-    diff = (
-        a.select("vec_id", "cluster", "centroid_sim")
-        .exceptAll(b.select("vec_id", "cluster", "centroid_sim"))
-        .count()
-    )
-    assert diff == 0
-    with pytest.raises(ValueError, match="method"):
-        assign_clusters(emb, cents, method="nope")
-
-
 def test_cluster_pairs_kernel_matches_fold_join(spark):
     """The dense-matmul pair kernel and the JVM fold join must emit
     identical (id_a, id_b, cosine) rows over the real embeddings."""
@@ -544,32 +516,235 @@ def test_cluster_pairs_kernel_cell_guard(spark):
     assert cluster_pairs_kernel(weird, threshold=0.0).count() == 0
 
 
-def test_semantic_dedup_kernel_expr_differential(spark):
-    """Full-pipeline differential: semantic_dedup on the matmul kernel
-    vs the expr oracle twin over the real embeddings — every output
-    row (assignment, grouping, survivor) identical."""
-    import os
+# Boundary vectors, each found by bisecting one coordinate of a random
+# 16-dim vector until the left-fold cosine sits on an edge where the
+# normalize-then-matmul cosine lands on the other side:
+# - every BOUNDARY_ROWS row's cosine to centroid 1 sits on a 6-dp
+#   rounding edge about 1.5e-6 above its cosine to centroid 0, so the
+#   side of the edge decides whether the two round apart or tie: it
+#   decides both centroid_sim and cluster;
+# - in BOUNDARY_CELL, pair (0, 1) sits on a 6-dp rounding edge, and
+#   (0, 2) and (3, 4) on the BOUNDARY_T threshold edge, one on each side.
+BOUNDARY_T = 0.5
+
+BOUNDARY_CENTS = [
+    [
+        0.0012301533574825742, 0.2987455375084699, -0.2741378553622176,
+        -0.8905918387572742, -0.45467078517172255, -0.9916465549964624,
+        0.060143602597438485, 1.3402152455545335, -0.49220651855132963,
+        -0.6204748998199404, 0.4898420501851982, 0.35688700816006075,
+        0.10541424899789856, -0.9304680447082047, -0.02925182246327349,
+        0.6953031944582878
+    ],
+    [
+        -0.06598057400677153, 0.275864749456459, -0.3691989923522598,
+        -0.955068725746523, -0.5467575370613091, -1.0034011115501964,
+        -0.0032287214747466833, 1.3537784634956187, -0.4843689642201184,
+        -0.6298214470514382, 0.36400406464417256, 0.32995236336772893,
+        0.10298920172784495, -0.9248025954080393, -0.10575861073854317,
+        0.6714155306565913
+    ],
+]
+
+BOUNDARY_ROWS = [
+    [
+        3.2083126276958276, 0.9457951030876708, -0.36924928263865886,
+        -2.422484577158035, -0.7350851450282283, -1.472055562213194,
+        0.6849556282081609, 3.3299027288711582, -0.1768347268864079,
+        -1.2756910478880692, -0.7786778901550615, 0.22941532575977602,
+        -0.09246179431526898, -1.8958935952940354, 0.0929537777215654,
+        -0.5946709657442314
+    ],
+    [
+        0.32979763185887206, 0.7725306747560357, -1.80984683545569,
+        0.374419984126535, -0.8926903698288082, -1.2603652902008489,
+        1.7755436251651155, 1.9927308043243483, -0.7319507677839643,
+        -2.352772060596405, 0.5535109107444247, 0.8241654283834408,
+        0.0037958903521198156, -1.9904134952233994, -0.8140894233230834,
+        -0.6989785504323759
+    ],
+    [
+        2.5259492185922605, 1.0888894695416729, -1.6395420379939307,
+        -0.7419700829368955, -0.27956651280898437, -0.0953640933393628,
+        -0.19834464253780398, 0.4027715912093902, -0.8767843491520189,
+        -2.300228023807776, 0.33971961927418903, -0.338517130947729,
+        0.522665270162637, -1.7996258507650813, -0.4892141766296181,
+        -0.4529965575203371
+    ],
+]
+
+BOUNDARY_CELL = [
+    [
+        0.6002051789517008, 0.10952873030031034, -1.9678300933080035,
+        -1.1153901137206008, 0.16403671220963315, 0.6565514614119844,
+        -1.0293215812897065, -0.6185070470229277, 0.45181806089131993,
+        -1.9023181109497542, -1.938689583088141, -0.2405169766673197,
+        0.23658649075934055, -0.4867726271424162, -2.2824043645743286,
+        0.010165667142568613
+    ],
+    [
+        -0.3034819362390946, 0.3829096545033836, -1.2369624086653082,
+        -0.5447032869206443, 0.4095056767060095, 0.12716514439419513,
+        -0.21446344925761474, 0.23797564261345067, 0.461220033536236,
+        -0.4894797667048898, -1.4794345779301594, 0.3029179841350127,
+        0.2690963269227699, -0.7863926511362703, -1.4142203101534345,
+        -0.2621866412499324
+    ],
+    [
+        -1.2463068997624014, 0.06988951896177122, -0.07066377322770612,
+        -0.4976246340076892, 0.10514656657422473, -0.5354600608519051,
+        -0.26171167481990804, 0.3798035288940037, 0.5307923549397454,
+        -0.34142920925606857, -0.8479769850827621, -0.5604063572764301,
+        0.018849769443493043, -0.8141533668059329, -1.3012661094038123,
+        0.4639378156037296
+    ],
+    [
+        -0.9196489375247653, 1.7669664632882882, -1.4262682900146264,
+        0.4145646536397024, -1.171543619517504, 0.1614869231873794,
+        -1.0414280304834538, 0.029015909422147896, -0.16609241522145377,
+        -0.4585038709805054, 0.4955278359337512, 1.4830445083360912,
+        -0.5969783945493474, 0.8645401634857397, 0.07233358749960106,
+        -0.04124659826311982
+    ],
+    [
+        -0.4475522232126194, 0.12190426485917955, -0.2670202290849423,
+        0.3887293553118878, -0.8125013532792065, -0.11771703642442971,
+        -0.3793268913845123, -0.07241952886838267, 0.28751007775961396,
+        -0.09109393334937699, 0.2245366144461633, -0.26252198699353074,
+        -0.7075617931390991, 0.4121673460663863, -0.7750880609294835,
+        0.11442429097533303
+    ],
+]
+
+
+def test_kernels_match_duckdb_on_fold_boundaries(spark):
+    """assign_clusters' (cluster, centroid_sim) and cluster_pairs_kernel's
+    pairs and cosines equal DuckDB's round(list_dot_product(a, c) /
+    (sqrt(list_dot_product(a, a)) * sqrt(list_dot_product(c, c))), 6) —
+    the contract oracle's arithmetic — on vectors where the matmul
+    cosine alone rounds (or thresholds) the other way."""
+    import duckdb
+    import numpy as np
     from table_ocr_spark.operators.similarity import (
-        pinned_centroids,
-        semantic_dedup,
+        assign_clusters,
+        cluster_pairs_kernel,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
+    con = duckdb.connect()
+    cos = (
+        "list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a))"
+        " * sqrt(list_dot_product($b, $b)))"
     )
-    dup = emb.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
+
+    def duck(a, b):  # (rounded, unrounded) oracle cosine
+        return con.execute(
+            f"SELECT round({cos}, 6), {cos}", {"a": a, "b": b}
+        ).fetchone()
+
+    rows = spark.createDataFrame(
+        list(enumerate(BOUNDARY_ROWS)), "vec_id long, embedding array<double>"
     )
-    corpus = emb.unionByName(dup)
-    cents = pinned_centroids(corpus, k=3)
-    a = semantic_dedup(corpus, centroids=cents, threshold=0.99, method="kernel")
-    b = semantic_dedup(corpus, centroids=cents, threshold=0.99, method="expr")
-    assert a.count() == corpus.count()
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    # the planted copies actually deduplicated
-    assert a.filter(~F.col("keep")).count() > 0
+    got = {
+        r["vec_id"]: (r["cluster"], r["centroid_sim"])
+        for r in assign_clusters(rows, np.array(BOUNDARY_CENTS)).collect()
+    }
+    for i, v in enumerate(BOUNDARY_ROWS):
+        sims = [duck(v, c)[0] for c in BOUNDARY_CENTS]
+        assert got[i] == (sims.index(max(sims)), max(sims)), (i, sims)
+
+    cell = spark.createDataFrame(
+        [(i, v, 0) for i, v in enumerate(BOUNDARY_CELL)],
+        "vec_id long, embedding array<double>, cluster int",
+    )
+    got_pairs = sorted(
+        map(tuple, cluster_pairs_kernel(cell, threshold=BOUNDARY_T).collect())
+    )
+    want = []
+    for i in range(len(BOUNDARY_CELL)):
+        for j in range(i + 1, len(BOUNDARY_CELL)):
+            rounded, raw = duck(BOUNDARY_CELL[i], BOUNDARY_CELL[j])
+            if raw >= BOUNDARY_T:
+                want.append((i, j, rounded))
+    assert got_pairs == want
+
+
+def test_semantic_dedup_leaves_no_cache_entry(spark):
+    import numpy as np
+    from table_ocr_spark.operators.similarity import semantic_dedup
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    df = spark.createDataFrame(
+        [(i, v) for i, v, _ in VECS], "vec_id long, embedding array<float>"
+    )
+    cents = np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]])
+    assert semantic_dedup(df, centroids=cents, threshold=0.95).count() == 7
+    assert cache.isEmpty()
+
+
+def _dense_cell(n, d, seed):
+    """n near-identical d-dim vectors (pairwise cosines about 0.997 at
+    64 dims): one dense duplicate cell."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    return rng.normal(0, 1, d) + rng.normal(0, 0.05, (n, d))
+
+
+def test_cluster_pairs_kernel_dense_cell_matches_duckdb(spark):
+    """A cell of near-duplicates, thresholded exactly at the oracle
+    cosine of a pair whose BLAS cosine falls below it: every pair,
+    every 6-dp cosine and the pair ON the threshold equal DuckDB's."""
+    import duckdb
+    import numpy as np
+    from table_ocr_spark.operators.similarity import cluster_pairs_kernel
+
+    M = _dense_cell(150, 64, 5)
+    U = M / np.linalg.norm(M, axis=1)[:, None]
+    blas = U @ U.T
+    V = M.tolist()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE v (i BIGINT, e DOUBLE[])")
+    con.executemany("INSERT INTO v VALUES (?, ?)", list(enumerate(V)))
+    rows = con.execute(
+        "SELECT a.i, b.i, list_dot_product(a.e, b.e)"
+        " / (sqrt(list_dot_product(a.e, a.e))"
+        " * sqrt(list_dot_product(b.e, b.e))) AS raw"
+        " FROM v a JOIN v b ON a.i < b.i ORDER BY raw"
+    ).fetchall()
+    t = [raw for i, j, raw in rows if blas[i, j] < raw][len(rows) // 8]
+    want = sorted(
+        (i, j, con.execute("SELECT round(?, 6)", [raw]).fetchone()[0])
+        for i, j, raw in rows
+        if raw >= t
+    )
+    cell = spark.createDataFrame(
+        [(i, v, 0) for i, v in enumerate(V)],
+        "vec_id long, embedding array<double>, cluster int",
+    )
+    got = sorted(map(tuple, cluster_pairs_kernel(cell, threshold=t).collect()))
+    assert got == want
+
+
+def test_cell_pairs_memory_does_not_scale_with_dimension():
+    """Peak memory of one dense cell stays O(block_rows * |cell|): at
+    1000 x 256 dims with 128-row blocks every pair is screened in, and
+    gathering both sides of each block's pairs would need ~0.5 GB."""
+    import tracemalloc
+
+    import numpy as np
+    from table_ocr_spark.operators.similarity import _cell_pairs
+
+    V = _dense_cell(1000, 256, 6)
+    tracemalloc.start()
+    try:
+        r, c, cos = _cell_pairs(V, 0.0, 128)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert len(r) == 1000 * 999 // 2 and (r < c).all()
+    assert (cos > 0.99).all() and np.isfinite(cos).all()
+    assert peak < 64 * 2**20, peak
 
 
 # ---------------------------------------------------------------------------
@@ -678,27 +853,6 @@ def test_ngram_logprob_validation(spark):
         ngram_logprob(df, min_count=0)
     with pytest.raises(ValueError, match="alpha"):
         ngram_logprob(df, alpha=0.0)
-
-
-def test_assign_clusters_expr_dim_mismatch_fails_loud(spark):
-    """The expr twin must refuse corrupt-width vectors like the kernel
-    does — zip_with's null padding would otherwise silently shrink
-    the dedup universe (review r5)."""
-    import numpy as np
-    from table_ocr_spark.operators.similarity import assign_clusters
-
-    cents = np.array([[1.0, 0.0, 0.0]])
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(Exception, match="dim"):
-        assign_clusters(df, cents, method="expr").collect()
-    # NULL / empty vectors still pass through as NULL, not an error
-    ok = spark.createDataFrame(
-        [(0, None), (1, [])], "vec_id long, embedding array<float>"
-    )
-    got = assign_clusters(ok, cents, method="expr").collect()
-    assert all(r["cluster"] is None for r in got)
 
 
 def test_cluster_pairs_kernel_mixed_width_fails_loud(spark):
@@ -899,14 +1053,20 @@ def test_semantic_dedup_randomized_vs_python_reference(spark):
                 math.floor(abs(x) * 1e6 + 0.5) / 1e6, x
             )
 
-        cu = [c / np.linalg.norm(c) for c in cents]
+        def fold_cos(a, b):  # left folds, as the SQL oracle
+            ab = aa = bb = 0.0
+            for x, y in zip(map(float, a), map(float, b)):
+                ab += x * y
+                aa += x * x
+                bb += y * y
+            return ab / (math.sqrt(aa) * math.sqrt(bb))
+
         assign, sim = {}, {}
         for i, v in vecs.items():
-            nv = np.linalg.norm(v)
-            if nv == 0:
+            if not any(v):
                 continue
-            sims = [half_up6(float(np.dot(v / nv, c))) for c in cu]
-            best = max(range(len(cu)), key=lambda j: (sims[j], -j))
+            sims = [half_up6(fold_cos(v, c)) for c in cents]
+            best = max(range(len(cents)), key=lambda j: (sims[j], -j))
             assign[i], sim[i] = best, sims[best]
         # within-cluster pairs on the unrounded cosine
         ids = sorted(vecs)
@@ -916,12 +1076,7 @@ def test_semantic_dedup_randomized_vs_python_reference(spark):
                 a, b = ids[x], ids[y]
                 if assign.get(a) is None or assign.get(a) != assign.get(b):
                     continue
-                va, vb = vecs[a], vecs[b]
-                cos = float(
-                    np.dot(va, vb)
-                    / (np.linalg.norm(va) * np.linalg.norm(vb))
-                )
-                if cos >= threshold:
+                if fold_cos(vecs[a], vecs[b]) >= threshold:
                     adj[a].add(b)
                     adj[b].add(a)
         # components + survivor
