@@ -105,6 +105,26 @@ def exact_dedup(
     )
 
 
+def _exact_dedup_survivors(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """``df`` restricted to the rows :func:`exact_dedup` marks
+    ``is_dup = false``: the min-id row of each content-key group, in
+    one window (one exchange of ``df``'s rows by the key) instead of
+    the operator's groupBy, join back and id semi-join. Equal ids in
+    one group tie-break on the text, so the survivor is deterministic
+    even then."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("_h64", "_h128").orderBy(id_col, text_col)
+    return (
+        df.select(*df.columns, *content_key_cols(text_col))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select(*df.columns)
+    )
+
+
 def exact_dedup_audit(
     df: DataFrame,
     text_col: str = "text",
@@ -807,16 +827,23 @@ def _truncate_plan(df: DataFrame):
     return df.localCheckpoint(eager=False), None
 
 
-def _stage_leaf(df: DataFrame) -> tuple[DataFrame, int]:
-    """A stage output as a checkpointed plan leaf, and its row count.
-    The count is the action that materializes the checkpoint; on the
-    reliable path the persisted copy that fed the checkpoint write is
-    released right after it."""
+def _stage_leaf(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """A stage output as a checkpointed plan leaf, and its counts:
+    ``{"n": rows, name: value for each of aggs}``. One global aggregate
+    (the row count plus ``aggs``, evaluated over the leaf's rows) is the
+    action that materializes the checkpoint, so a stage's report counts
+    cost no pass of their own; on the reliable path the persisted copy
+    that fed the checkpoint write is released right after it. An
+    aggregate over zero rows must still give a number (``count_if``,
+    or ``coalesce(sum(...), 0)``)."""
     leaf, cached = _truncate_plan(df)
-    n = leaf.count()
+    row = leaf.agg(
+        F.count(F.lit(1)).alias("n"),
+        *(c.alias(name) for name, c in aggs.items()),
+    ).collect()[0]
     if cached is not None:
         cached.unpersist()
-    return leaf, n
+    return leaf, row.asDict()
 
 
 def _cc_round_path(state_dir: str, rnd: int) -> str:

@@ -9,8 +9,10 @@ Here the whole corpus flows as Arrow record batches through ONE
 the partition count, not a semaphore (reference `direct.py:312`).
 
 Scale notes (100 TB / 10^12 docs):
-- ``html`` is projected away immediately after the kernel stage — it
-  never crosses a shuffle.
+- ``html`` is projected away immediately after the kernel stage, and
+  extraction itself never shuffles it; a url window placed BEFORE the
+  kernel (``latest_capture`` in the corpus builder) does (see
+  :func:`extract_documents`).
 - Extraction is map-only: url-hash repartition is used only to level
   partition sizes; host-skew salting matters for host-keyed stages and
   is provided by :func:`salted_repartition` / two-phase aggregation in
@@ -260,6 +262,16 @@ def extract_documents(
     zero-copy passthrough arrays — never a post-hoc join of two
     corpus-sized tables by url (the previous shape: a full shuffle join
     just to recover columns the map stage already had in hand).
+
+    The html crosses no exchange HERE, but a caller's upstream window
+    can still move it: ``build_training_corpus`` runs
+    :func:`latest_capture` first, and that url window shuffles the
+    whole pages row, html included, once. Extracting ahead of the
+    window would shuffle only the text, but it fuses the WARC parse and
+    the kernel into one task: on perfbench's ``crawl`` workload (4
+    CPUs, ``local[4]``) that started 12 Python workers instead of 8,
+    about +0.5 GB summed RSS, for about +2% docs/s — so the window
+    stays first.
     """
     keep = tuple(
         c for c in (keep_columns or []) if c not in ("url", "html")
@@ -289,19 +301,30 @@ def extract_documents(
     return df.mapInArrow(_kernel_batches("html", keep), schema)
 
 
-def latest_capture(pages: DataFrame) -> DataFrame:
+def latest_capture(pages: DataFrame, count_col: Optional[str] = None) -> DataFrame:
     """Latest capture per url (W3 pattern, SURVEY.md §2.5): dedup
     re-crawled urls keeping max ``warc_ts``; equal-ts redeliveries
     (at-least-once upstream) tie-break on the greatest html hash so
     the survivor — and therefore downstream extracted text — is
-    byte-identical across runs and partitionings."""
+    byte-identical across runs and partitionings. ``count_col`` also
+    appends the url's capture count, taken over the same partition and
+    order (a whole-partition frame), so it costs no extra exchange or
+    sort: the sum of that column over the output is the input row
+    count. With it, Spark no longer plans its partial per-url top-1
+    (``WindowGroupLimit``) ahead of the exchange, which only a window
+    of rank functions gets: every capture crosses the exchange, and the
+    map side skips its sort of the html rows. So the exchange grows by
+    the re-crawled rows: on ``generate_pages`` input (12k urls, 4
+    CPUs) this window alone wrote +3%, +13% and +23% shuffle bytes at
+    0%, 33% and 50% re-crawled rows, at equal wall time."""
     from pyspark.sql import Window as W
 
     w = W.partitionBy("url").orderBy(
         F.desc("warc_ts"), F.desc(F.xxhash64("html"))
     )
-    return (
-        pages.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    cols = [F.row_number().over(w).alias("_rn")]
+    if count_col is not None:
+        whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        cols.append(F.count(F.lit(1)).over(whole).alias(count_col))
+    # one select: both window columns land in ONE Window operator
+    return pages.select("*", *cols).filter(F.col("_rn") == 1).drop("_rn")

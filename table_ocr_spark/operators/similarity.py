@@ -13,7 +13,8 @@ order DuckDB uses, so oracle doubles agree: JVM-side higher-order
 functions (``zip_with``/``aggregate``) in the join operators, and
 :func:`_fold_cosine` in the SemDeDup matmul kernels, which screen with
 BLAS and refold wherever its error bound leaves a decision open. Scores
-are rounded to 6 dp in outputs.
+are rounded to 6 dp in outputs by DuckDB's rule (:func:`_round6`,
+:func:`_round6_col`), not Spark's ``round``.
 """
 
 from __future__ import annotations
@@ -28,6 +29,17 @@ from table_ocr_spark.local_frames import local_frame
 
 # empty pq_topk / ivf_pq_topk result (no usable query vector)
 _TOPK_SCHEMA = "query_id long, neighbor_id long, rank int, score double"
+
+
+def _round6_col(x) -> Column:
+    """Spark twin of :func:`_round6`, DuckDB's ``round(x, 6)``:
+    ``signum(x) * floor(|x| * 1e6 + 0.5) / 1e6`` in double arithmetic.
+    ``F.round(x, 6)`` rounds HALF_UP on the double's shortest decimal
+    string instead, which differs within about an ulp of a .5e-6 edge
+    (0.2600975: Spark 0.260098, DuckDB 0.260097). Exact for
+    ``|x| < 2^63 / 1e6`` (the floor is a long), so for every score."""
+    x = F.col(x) if isinstance(x, str) else x
+    return F.signum(x) * (F.floor(F.abs(x) * 1e6 + 0.5) / 1e6)
 
 
 def _with_vec(
@@ -69,7 +81,7 @@ def brute_force_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("_score", 6).alias("score"))
+        .select("query_id", "neighbor_id", "rank", _round6_col("_score").alias("score"))
     )
 
 
@@ -103,7 +115,7 @@ def ivf_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("_score", 6).alias("score"))
+        .select("query_id", "neighbor_id", "rank", _round6_col("_score").alias("score"))
     )
 
 
@@ -214,7 +226,7 @@ def hyperplane_near_dup_pairs(
     sim = cosine(F.col("_va"), F.col("_vb"))
     return (
         pairs.filter(sim >= threshold)
-        .select("id_a", "id_b", F.round(sim, 6).alias("cosine"))
+        .select("id_a", "id_b", _round6_col(sim).alias("cosine"))
     )
 
 
@@ -702,7 +714,7 @@ def pq_topk(
             "query_id",
             "neighbor_id",
             F.col("rank").cast("int").alias("rank"),
-            F.round("_score", 6).alias("score"),
+            _round6_col("_score").alias("score"),
         )
     )
 
@@ -809,7 +821,7 @@ def cosine_near_dup_pairs(
         a.join(b, "label")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(sim >= threshold)  # threshold on the unrounded value
-        .select("id_a", "id_b", F.round(sim, 6).alias("cosine"))
+        .select("id_a", "id_b", _round6_col(sim).alias("cosine"))
     )
 
 

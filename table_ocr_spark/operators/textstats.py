@@ -53,23 +53,22 @@ def stopword_hits(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda w: w.isin(*sw))).cast("long")
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document token/quality statistics.
-
-    Output: (id, n_tokens, n_chars_obs, avg_token_len, punct_ratio,
-    stopword_ratio, quality_score) — quality is the pinned blend
-    ``0.4*min(n_tokens/100,1) + 0.3*(1-punct_ratio) + 0.3*stopword_ratio``
-    rounded to 6 dp. Map-only: no shuffle; scales linearly.
-    """
-    # bind tokens to a column first: several expressions below read the
-    # token array, and interpreted HOF evaluation would re-run the
-    # split+filter once per reference against a raw expression
-    toked = df.select(
-        F.col(id_col),
-        # NULL text == empty text (same pin as tokens())
+def _bound_tokens(text_col: str) -> list:
+    """``_t`` (text, NULL as empty — the same pin as :func:`tokens`)
+    and ``_toks``, to be SELECTED before the per-document terms read
+    them: several terms read the token array, and interpreted HOF
+    evaluation would re-run the split+filter once per reference
+    against a raw expression."""
+    return [
         F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
         tokens(F.col(text_col)).alias("_toks"),
-    )
+    ]
+
+
+def _token_stat_terms() -> dict:
+    """The :func:`token_stats` columns as expressions over the bound
+    ``_t`` / ``_toks`` (:func:`_bound_tokens`) — one definition for the
+    operator and for pipelines that add the stats in place."""
     toks = F.col("_toks")
     n_tok = F.size(toks).cast("long")
     n_chars = F.length("_t").cast("long")
@@ -88,14 +87,28 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         + stop_ratio * 0.3,
         6,
     )
+    return {
+        "n_tokens": n_tok,
+        "n_chars_obs": n_chars,
+        "avg_token_len": F.round(tok_chars / F.greatest(n_tok, F.lit(1)), 6),
+        "punct_ratio": F.round(punct_ratio, 6),
+        "stopword_ratio": F.round(stop_ratio, 6),
+        "quality_score": quality,
+    }
+
+
+def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Per-document token/quality statistics.
+
+    Output: (id, n_tokens, n_chars_obs, avg_token_len, punct_ratio,
+    stopword_ratio, quality_score) — quality is the pinned blend
+    ``0.4*min(n_tokens/100,1) + 0.3*(1-punct_ratio) + 0.3*stopword_ratio``
+    rounded to 6 dp. Map-only: no shuffle; scales linearly.
+    """
+    toked = df.select(F.col(id_col), *_bound_tokens(text_col))
     return toked.select(
         F.col(id_col),
-        n_tok.alias("n_tokens"),
-        n_chars.alias("n_chars_obs"),
-        F.round(tok_chars / F.greatest(n_tok, F.lit(1)), 6).alias("avg_token_len"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        quality.alias("quality_score"),
+        *(c.alias(name) for name, c in _token_stat_terms().items()),
     )
 
 
@@ -130,17 +143,12 @@ QF_MIN_AVG_LEN, QF_MAX_AVG_LEN = 2.0, 12.0
 QF_MAX_SYMBOL_RATIO = 0.1
 
 
-def gopher_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Rule-based document quality filter (the Gopher-rules shape):
-    token-count bounds, mean-word-length bounds, symbol-character
-    ratio. Emits per-rule flags plus the conjunction — filters should
-    be auditable columns, not silent drops. Map-only, codegen'd."""
-    toked = df.select(
-        F.col(id_col),
-        # NULL text == empty text (same pin as tokens())
-        F.coalesce(F.col(text_col), F.lit("")).alias("_t"),
-        tokens(F.col(text_col)).alias("_toks"),
-    )
+def _gopher_terms() -> dict:
+    """The Gopher rule terms over the bound ``_t`` / ``_toks``
+    (:func:`_bound_tokens`): the operator's columns and, as
+    ``quality_pass``, the conjunction. The one definition of the rule —
+    :func:`gopher_quality` projects it, and the corpus builder takes
+    the pass flag in place instead of joining the operator back."""
     n_tok = F.size("_toks").cast("long")
     tok_chars = F.aggregate(
         F.transform(F.col("_toks"), lambda w: F.length(w).cast("long")),
@@ -154,15 +162,26 @@ def gopher_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     p_len = (n_tok >= QF_MIN_TOKENS) & (n_tok <= QF_MAX_TOKENS)
     p_avg = (avg_len >= QF_MIN_AVG_LEN) & (avg_len <= QF_MAX_AVG_LEN)
     p_sym = sym_ratio <= QF_MAX_SYMBOL_RATIO
+    return {
+        "n_tokens": n_tok,
+        "avg_token_len": F.round(avg_len, 6),
+        "symbol_ratio": F.round(sym_ratio, 6),
+        "passes_length": p_len,
+        "passes_word_len": p_avg,
+        "passes_symbol": p_sym,
+        "quality_pass": p_len & p_avg & p_sym,
+    }
+
+
+def gopher_quality(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """Rule-based document quality filter (the Gopher-rules shape):
+    token-count bounds, mean-word-length bounds, symbol-character
+    ratio. Emits per-rule flags plus the conjunction — filters should
+    be auditable columns, not silent drops. Map-only, codegen'd."""
+    toked = df.select(F.col(id_col), *_bound_tokens(text_col))
     return toked.select(
         F.col(id_col),
-        n_tok.alias("n_tokens"),
-        F.round(avg_len, 6).alias("avg_token_len"),
-        F.round(sym_ratio, 6).alias("symbol_ratio"),
-        p_len.alias("passes_length"),
-        p_avg.alias("passes_word_len"),
-        p_sym.alias("passes_symbol"),
-        (p_len & p_avg & p_sym).alias("quality_pass"),
+        *(c.alias(name) for name, c in _gopher_terms().items()),
     )
 
 

@@ -3,29 +3,43 @@ operators exist for. One call takes a raw Common-Crawl-style pages
 table to a deduplicated, quality-filtered, PII-scrubbed text corpus
 with per-stage audit counts.
 
-Stage order (each stage is a DataFrame → DataFrame transform; each
-stage output is checkpointed into a plan leaf by the count that fills
-its report field, so no stage's plan carries its upstream stages):
+Stage order. Each stage is a DataFrame → DataFrame transform, and each
+stage LEAF is checkpointed (``dedup._stage_leaf``) by ONE global
+aggregate that also fills every report count of that leaf, so no
+count re-runs a stage and no stage's plan carries its upstream
+stages. Stages that share a leaf are bracketed together:
 
-1. latest-capture dedup (re-crawled urls: newest wins — W3)
-2. kernel extraction (map-only mapInArrow; html never shuffles)
-3. drop empty extractions
-4. Gopher-style quality filter (auditable rule flags)
-5. exact dedup on normalized text (canonical = min url)
+[leaf 1: extraction — n_input, n_extracted, n_quality_pass]
+1. latest-capture dedup (re-crawled urls: newest wins — W3); the same
+   url window counts each url's captures, whose sum is n_input
+2. kernel extraction (map-only mapInArrow; html crosses one exchange,
+   the latest-capture window's — see ``extract_documents``)
+3. empty extractions stay in the leaf (they count toward n_input, not
+   n_extracted) and drop out with the quality flag
+4. Gopher-style quality flag, computed in place (the
+   ``gopher_quality`` rule terms); the passing rows are a filter
+[leaf 2: exact dedup — n_after_exact_dedup]
+5. exact dedup on normalized text (canonical = min url): one window
+   over the content key
+[leaf 3: near dedup + PII — n_after_near_dedup, n_had_pii]
 6. MinHash+LSH near-dup removal at the given Jaccard threshold
    (exact-verified pairs → connected-component closure → longest-text
    survivor per cluster; the CC convergence jobs run eagerly at this
    stage)
-7. PII redaction (emails/phones → typed placeholders)
+7. PII redaction (emails/phones → typed placeholders) of the survivors
+[leaf: the clean rows; n_contaminated = the rows it drops]
 8. (optional) benchmark decontamination — drop docs whose k-shingle
    overlap with a benchmark set crosses the threshold
+[leaf: n_after_sample]
 9. (optional) deterministic down-sampling — md5-threshold membership,
    reproducible from the recipe alone
 10. (optional) sequence packing — per-doc global start_offset + seq_id
     via the two-phase distributed prefix sum (needs a numeric doc key)
+[leaf: the corpus rows with their token stats, no count]
 11. (optional) global quality tiers — exact order-statistic cutoffs
     over the pinned 6-dp quality score (bounded histogram, two
-    map-only passes), tier column appended
+    map-only passes), tier column appended in place
+[leaf: n_after_budget]
 12. (optional) token-budget down-sampling per tier — the exact-integer
     membership rule (u64(md5(url))·T_s < B_s·2^64), expected kept
     tokens = the budget
@@ -45,27 +59,46 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from table_ocr_spark.operators.dedup import (
+    _exact_dedup_survivors,
     _stage_leaf,
     cluster_survivors,
     duplicate_clusters,
-    exact_dedup,
     minhash_lsh_pairs,
 )
 from table_ocr_spark.operators.extract import extract_documents, latest_capture
-from table_ocr_spark.operators.textstats import gopher_quality, redact_pii
+from table_ocr_spark.operators.textstats import (
+    _bound_tokens,
+    _gopher_terms,
+    _token_stat_terms,
+    redact_pii,
+)
 
 
 @dataclass
 class CorpusReport:
+    """Row counts of one :func:`build_training_corpus` call, each read
+    from the aggregate that materializes its stage leaf."""
+
+    #: input rows: every capture, re-crawls and empty payloads included
     n_input: int
+    #: latest captures per url (every row without ``warc_ts``) whose
+    #: extracted text is non-empty
     n_extracted: int
+    #: of those, the docs passing the Gopher quality rules
     n_quality_pass: int
+    #: of those, one doc per normalized text (the min url)
     n_after_exact_dedup: int
+    #: of those, one survivor per MinHash near-dup cluster
     n_after_near_dedup: int
+    #: of those, the docs with at least one email or phone redacted
     n_had_pii: int
+    #: docs the benchmark decontamination dropped (0: stage skipped)
     n_contaminated: int = 0
-    n_after_sample: int = -1  # -1: stage skipped
-    n_after_budget: int = -1  # -1: stage skipped
+    #: docs the deterministic sample kept (-1: stage skipped)
+    n_after_sample: int = -1
+    #: rows the token budget kept, repeats included when upsampling
+    #: (-1: stage skipped)
+    n_after_budget: int = -1
 
 
 def ingest_crawl(
@@ -524,8 +557,9 @@ def build_training_corpus(
     n_phones), per-stage counts). Each stage output is a checkpointed
     plan leaf (``_truncate_plan``: localCheckpoint, or the reliable
     checkpoint when the session has a checkpoint dir), materialized by
-    the one count per stage that fills the report; the returned
-    DataFrame is a small lazy plan over the last leaf. Pass
+    the one aggregate per leaf that fills that stage's report counts
+    (see the module docstring for which stages share a leaf); the
+    returned DataFrame is a small lazy plan over the last leaf. Pass
     ``benchmark`` (a (doc_id-or-any, text) frame) to drop contaminated
     docs, and ``sample_fraction`` for a deterministic final
     down-sample. ``n_tiers`` appends a global quality-tier column
@@ -548,24 +582,30 @@ def build_training_corpus(
             "there is no upsampling stage to route through (this would "
             "otherwise no-op silently after the full pipeline ran)"
         )
-    n_input = pages.count()
-
-    deduped_pages = latest_capture(pages) if "warc_ts" in pages.columns else pages
-    extracted, n_extracted = _stage_leaf(
-        extract_documents(deduped_pages)
-        .select("url", F.col("extracted_text").alias("text"))
-        .filter(F.length("text") > 0)
+    if "warc_ts" in pages.columns:
+        captures = latest_capture(pages, count_col="_n")
+    else:
+        captures = pages.withColumn("_n", F.lit(1).cast("long"))
+    # extraction + quality: one leaf of every latest capture, empty
+    # extractions included, so its one aggregate counts the input (the
+    # url window's capture counts), the extractions and the passes
+    extracted = extract_documents(captures, keep_columns=["_n"]).select(
+        "url", F.col("extracted_text").alias("text"), "_n"
     )
-
-    quality = gopher_quality(extracted, text_col="text", id_col="url")
-    keep_urls = quality.filter(F.col("quality_pass")).select("url")
-    passed, n_quality = _stage_leaf(
-        extracted.join(keep_urls, "url", "left_semi")
+    # empty text has no tokens, so it fails the Gopher length rule
+    flagged, c_extract = _stage_leaf(
+        extracted.select("url", "text", "_n", *_bound_tokens("text")).select(
+            "url", "text", "_n", _gopher_terms()["quality_pass"].alias("_q")
+        ),
+        n_input=F.coalesce(F.sum("_n"), F.lit(0)),
+        n_extracted=F.count_if(F.length("text") > 0),
+        n_quality=F.count_if("_q"),
     )
+    passed = flagged.filter("_q").select("url", "text")
 
-    exact = exact_dedup(passed, text_col="text", id_col="url")
-    canonical = exact.filter(~F.col("is_dup")).select("url")
-    uniq, n_exact = _stage_leaf(passed.join(canonical, "url", "left_semi"))
+    uniq, c_exact = _stage_leaf(
+        _exact_dedup_survivors(passed, text_col="text", id_col="url")
+    )
 
     pairs = minhash_lsh_pairs(
         uniq, text_col="text", id_col="url", k=shingle_k,
@@ -583,10 +623,13 @@ def build_training_corpus(
         .filter(F.col("keep"))
         .select("url")
     )
-    near_uniq, n_near = _stage_leaf(uniq.join(keep, "url", "left_semi"))
-
-    clean = redact_pii(near_uniq, text_col="text", id_col="url")
-    n_pii = clean.filter(F.col("had_pii")).count()
+    # the survivors and their redaction share one leaf
+    clean, c_near = _stage_leaf(
+        redact_pii(
+            uniq.join(keep, "url", "left_semi"), text_col="text", id_col="url"
+        ),
+        n_had_pii=F.count_if("had_pii"),
+    )
     corpus = clean.select(
         "url", F.col("redacted_text").alias("text"), "n_emails", "n_phones"
     )
@@ -600,28 +643,34 @@ def build_training_corpus(
             threshold=contamination_threshold,
         )
         dirty = stats.filter(F.col("is_contaminated")).select("url")
-        corpus, n_clean = _stage_leaf(corpus.join(dirty, "url", "left_anti"))
-        n_contaminated = n_near - n_clean
+        corpus, c_clean = _stage_leaf(corpus.join(dirty, "url", "left_anti"))
+        n_contaminated = c_near["n"] - c_clean["n"]
 
     n_after_sample = -1
     if sample_fraction is not None:
         from table_ocr_spark.operators.sampling import deterministic_sample
 
-        corpus = deterministic_sample(corpus, sample_fraction, key="url")
-        n_after_sample = corpus.count()
+        corpus, c_sample = _stage_leaf(
+            deterministic_sample(corpus, sample_fraction, key="url")
+        )
+        n_after_sample = c_sample["n"]
 
     n_after_budget = -1
     if n_tiers is not None:
-        from table_ocr_spark.operators.textstats import token_stats
         from table_ocr_spark.operators.tiers import score_tiers
 
-        stats = token_stats(corpus, text_col="text", id_col="url").select(
-            "url", "n_tokens", "quality_score"
+        # the stats ride on the corpus rows: the cutoff pass and the
+        # tier label read one leaf, with no join back by url
+        terms = _token_stat_terms()
+        with_stats, _ = _stage_leaf(
+            corpus.select(*corpus.columns, *_bound_tokens("text")).select(
+                *corpus.columns, terms["n_tokens"].alias("n_tokens"),
+                terms["quality_score"].alias("quality_score"),
+            )
         )
-        tiers = score_tiers(stats, "quality_score", n_tiers=n_tiers)
-        corpus, _ = _stage_leaf(
-            corpus.join(tiers.select("url", "n_tokens", "tier"), "url")
-        )
+        corpus = score_tiers(
+            with_stats, "quality_score", n_tiers=n_tiers
+        ).drop("quality_score")
         if token_budget is not None:
             from table_ocr_spark.operators.sampling import (
                 token_budget_sample,
@@ -632,19 +681,19 @@ def build_training_corpus(
                 token_budget_upsample if allow_upsampling
                 else token_budget_sample
             )
-            corpus = budget_op(
+            corpus, c_budget = _stage_leaf(budget_op(
                 corpus, token_budget, strata_col="tier",
                 weight_col="n_tokens", mix=tier_mix, key="url",
-            )
-            n_after_budget = corpus.count()
+            ))
+            n_after_budget = c_budget["n"]
 
     return corpus, CorpusReport(
-        n_input=n_input,
-        n_extracted=n_extracted,
-        n_quality_pass=n_quality,
-        n_after_exact_dedup=n_exact,
-        n_after_near_dedup=n_near,
-        n_had_pii=n_pii,
+        n_input=c_extract["n_input"],
+        n_extracted=c_extract["n_extracted"],
+        n_quality_pass=c_extract["n_quality"],
+        n_after_exact_dedup=c_exact["n"],
+        n_after_near_dedup=c_near["n"],
+        n_had_pii=c_near["n_had_pii"],
         n_contaminated=n_contaminated,
         n_after_sample=n_after_sample,
         n_after_budget=n_after_budget,

@@ -117,6 +117,16 @@ def test_exact_dedup_normalized_groups(spark):
         for r in exact_dedup(df).collect()
     }
     assert got == want
+    # the corpus builder's window form keeps exactly the is_dup=False
+    # rows, through one exchange keyed on the content hashes
+    from table_ocr_spark.operators.dedup import _exact_dedup_survivors
+
+    survivors = _exact_dedup_survivors(df)
+    plan = survivors._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(_h64") == 1, plan
+    assert sorted(map(tuple, survivors.collect())) == [
+        (1, "Hello   World"), (3, "different text"),
+    ]
 
 
 def test_exact_dedup_hash_path_shuffles_narrow_keys(spark):

@@ -2,6 +2,8 @@
 behavior, and PII scrubbing end-to-end on a corpus with planted
 duplicates and PII."""
 
+import datetime as dt
+
 from pyspark.sql import functions as F
 
 from table_ocr_spark.datagen import write_pages_parquet
@@ -275,6 +277,179 @@ def test_shard_tail_job_count_does_not_grow_with_tiers(spark, tmp_path):
         jobs[n_tiers] = len(sc.statusTracker().getJobIdsForGroup(group))
     # 13 on Spark 4.1; a per-tier loop would run 4 + 12 per tier
     assert jobs[2] == jobs[4] <= 14, jobs
+
+
+def _article(words: str) -> bytearray:
+    return bytearray(
+        f"<html><body><article><p>{words}</p></article></body></html>".encode()
+    )
+
+
+def _doc_words(tag: str) -> str:
+    # 14 distinct tokens per doc: passes the Gopher rules, and no two
+    # docs share a 3-shingle
+    return " ".join(f"{tag}w{j}" for j in range(14))
+
+
+def test_corpus_report_counts_from_the_extraction_leaf(spark):
+    # n_input is the sum of the url window's capture counts and
+    # n_extracted the latest captures with text, both from the one
+    # aggregate that materializes the extraction leaf
+    from table_ocr_spark.operators.extract import (
+        extract_documents,
+        latest_capture,
+    )
+
+    t1 = dt.datetime(2026, 3, 1, 9, 0, tzinfo=dt.timezone.utc)
+    t2 = dt.datetime(2026, 3, 2, 9, 0, tzinfo=dt.timezone.utc)
+    rows = [
+        # one url captured three times: NULL ts (oldest) and two
+        # equal-ts redeliveries, tie-broken on the html hash
+        ("http://a.test/", None, _article(_doc_words("old")), None, "en"),
+        ("http://a.test/", t1, _article(_doc_words("redeliv1")), None, "en"),
+        ("http://a.test/", t1, _article(_doc_words("redeliv2")), None, "en"),
+        # latest capture extracts to empty text; the older one has text
+        ("http://b.test/", t1, _article(_doc_words("bold")), None, "en"),
+        ("http://b.test/", t2, bytearray(b"<html><body></body></html>"),
+         None, "en"),
+    ] + [
+        (f"http://c{i}.test/", t1, _article(_doc_words(f"c{i}")), None, "en")
+        for i in range(5)
+    ] + [
+        # two equal captures of one url: one latest capture with
+        # warc_ts; without it, two rows of one url and one text
+        ("http://d.test/", t1, _article(_doc_words("same")), None, "en"),
+        ("http://d.test/", t1, _article(_doc_words("same")), None, "en"),
+        # x.test's latest text is its own; its older text is also
+        # w.test's, and w.test < x.test
+        ("http://x.test/", t2, _article(_doc_words("xown")), None, "en"),
+        ("http://x.test/", t1, _article(_doc_words("shared")), None, "en"),
+        ("http://w.test/", t1, _article(_doc_words("shared")), None, "en"),
+    ]
+    pages = spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string",
+    )
+
+    corpus, rep = build_training_corpus(pages)
+    assert rep.n_input == len(rows) == 15
+    # latest captures: a.test, b.test (empty), c0..c4, d, x, w
+    assert rep.n_extracted == 9
+    picked = (
+        extract_documents(latest_capture(pages))
+        .filter(F.col("url") == "http://a.test/")
+        .collect()
+    )
+    assert len(picked) == 1
+    got = {r.url: r.text for r in corpus.collect()}
+    assert got["http://a.test/"] == picked[0].extracted_text
+    assert "http://b.test/" not in got
+    assert got["http://x.test/"] == _doc_words("xown")
+    assert got["http://w.test/"] == _doc_words("shared")
+    assert rep.n_quality_pass == rep.n_after_near_dedup == len(got) == 9
+
+    # without warc_ts every row is its own capture, and exact dedup
+    # keeps ONE row per normalized text, the min url's: d.test's two
+    # equal rows collapse to one, and x.test's copy of w.test's text
+    # goes while x.test's own text stays
+    corpus2, rep2 = build_training_corpus(pages.drop("warc_ts"))
+    assert rep2.n_input == 15
+    assert rep2.n_extracted == rep2.n_quality_pass == 14
+    want = {
+        ("http://a.test/", _doc_words(t)) for t in ("old", "redeliv1", "redeliv2")
+    } | {
+        ("http://b.test/", _doc_words("bold")),
+        ("http://d.test/", _doc_words("same")),
+        ("http://x.test/", _doc_words("xown")),
+        ("http://w.test/", _doc_words("shared")),
+    } | {(f"http://c{i}.test/", _doc_words(f"c{i}")) for i in range(5)}
+    got2 = [(r.url, r.text) for r in corpus2.collect()]
+    assert sorted(got2) == sorted(want)
+    assert rep2.n_after_exact_dedup == rep2.n_after_near_dedup == 12
+
+
+def test_build_training_corpus_counts_only_through_stage_leaves():
+    # every report count comes from a stage leaf's materializing
+    # aggregate; a separate action here would re-run the stage's whole
+    # upstream only to fill the report
+    import ast
+    import pathlib
+
+    from table_ocr_spark import pipelines
+
+    path = pathlib.Path(pipelines.__file__)
+    (fn,) = [
+        node for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.FunctionDef)
+        and node.name == "build_training_corpus"
+    ]
+    actions = {"count", "collect", "first", "head", "take", "toPandas"}
+    sites = [
+        f"pipelines.py:{node.lineno} .{node.func.attr}()"
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in actions
+    ]
+    assert sites == [], "actions outside _stage_leaf: " + ", ".join(sites)
+
+
+def test_corpus_build_computes_each_stage_once(spark, tmp_path):
+    # SQL executions of one build_training_corpus call, from the
+    # session's SQL status store: the WARC parse (the binaryFile scan
+    # feeding read_warc) and the PII redaction each sit under exactly
+    # one execution, the one that materializes their stage leaf
+    from table_ocr_spark.pipelines import ingest_crawl
+    from table_ocr_spark.sources.warc import build_warc_record
+
+    def rec(i, ts="2026-03-01T09:00:00Z", extra=""):
+        body = (
+            f"<article><p>unique page body {i} with several distinct "
+            f"words alpha{i} beta{i * 7} gamma {extra}</p></article>"
+        ).encode()
+        block = (
+            b"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8"
+            b"\r\n\r\n" + body
+        )
+        return build_warc_record(
+            f"http://site{i % 5}.test/p{i}", ts, block, http=False
+        )
+
+    recs = [rec(i) for i in range(40)]
+    recs.append(rec(3, "2026-03-02T09:00:00Z", "mail me at a@b.org"))
+    (tmp_path / "a.warc").write_bytes(b"".join(recs))
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        lst = store.executionsList()
+        return {
+            e.executionId(): e.physicalPlanDescription()
+            for e in (lst.apply(i) for i in range(lst.size()))
+        }
+
+    before = set(executions())
+    group = "corpus-build-once"
+    sc.setJobGroup(group, group)
+    try:
+        _, rep = build_training_corpus(
+            ingest_crawl(spark, str(tmp_path / "*")), n_tiers=2
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plans = [p for i, p in executions().items() if i not in before]
+    assert (rep.n_input, rep.n_extracted, rep.n_had_pii) == (41, 40, 1)
+    assert sum("Scan binaryFile" in p for p in plans) == 1
+    assert sum("<EMAIL>" in p for p in plans) == 1
+    # 34 on Spark 4.1; 44 when the WARC was parsed twice, quality and
+    # exact dedup were url self-joins and the redaction ran per consumer
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 35, jobs
 
 
 class TestIngestCrawl:

@@ -1143,3 +1143,31 @@ def test_semantic_dedup_randomized_vs_python_reference(spark):
                 assert got[i][3] is True  # singleton pass-through
             else:
                 assert got[i] == expect[i], (trial, i, got[i], expect[i])
+
+
+def test_round6_twins_match_duckdb_on_half_edges(spark):
+    # the numpy rule and its Spark-expression twin round like DuckDB's
+    # round(x, 6) on doubles at and one ulp either side of .5e-6 edges;
+    # Spark's own round(x, 6) rounds the two named values the other way
+    import duckdb
+    import numpy as np
+
+    from table_ocr_spark.local_frames import local_frame
+    from table_ocr_spark.operators.similarity import _round6, _round6_col
+
+    edges = (np.arange(1, 1001) * 997 + 0.5) / 1e6
+    sweep = np.concatenate(
+        [np.nextafter(edges, 0), edges, np.nextafter(edges, 1)]
+    ).tolist()
+    vals = [0.2600975, 0.38331149999999997, *sweep, *(-x for x in sweep)]
+    (want,) = duckdb.connect().execute(
+        "select list_transform(?::double[], x -> round(x, 6))", [vals]
+    ).fetchone()
+    assert want[:2] == [0.260097, 0.383312]
+    assert _round6(np.array(vals)).tolist() == want
+    got = (
+        local_frame(spark, list(enumerate(vals)), "i long, x double")
+        .select("i", _round6_col("x").alias("r"))
+        .collect()
+    )
+    assert [r.r for r in sorted(got)] == want
