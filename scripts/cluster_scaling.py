@@ -10,6 +10,12 @@ threads). Usage:
 Prints one line: CLUSTER <total_cores> <best_sec> <docs_per_sec>.
 The harness (bench or manual) runs it at cores.max=N and 4N and
 computes (T_N / T_4N) / 4.
+
+The script builds its own session, not ``get_spark``'s, so it keeps
+Spark's 100-entry generated-code cache. A job that runs the whole
+crawl chain repeatedly in one session should pass
+``--conf spark.sql.codegen.cache.maxEntries=1000`` (a static conf: it
+only applies when the session starts; see ``session.py``).
 """
 
 from __future__ import annotations

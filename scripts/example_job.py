@@ -7,6 +7,12 @@
 Reads a pages table, runs the checkpointed extraction pipeline
 (bucketed lineage, idempotent restart), prints a one-line report.
 The package resolves from the zip on driver and executors alike.
+
+The job builds its own session, not ``get_spark``'s, so it keeps
+Spark's 100-entry generated-code cache. Pass
+``--conf spark.sql.codegen.cache.maxEntries=1000`` to hold every plan
+shape of the crawl chain across calls (a static conf: it only applies
+when the session starts; see ``session.py``).
 """
 
 from __future__ import annotations

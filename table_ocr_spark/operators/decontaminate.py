@@ -51,11 +51,14 @@ def contamination_stats(
     the corpus-wide shuffle this docstring warns about."""
     bench_text_col = bench_text_col or text_col
     corpus_sets = shingle_sets(corpus, text_col, id_col, k)
+    # explode the kernel's output in the kernel's own select: exploding
+    # a column of a previous select lets the optimizer infer a
+    # `size(shingles) > 0` filter and push it below that select, which
+    # copies the UDF into the filter (every benchmark row shingled twice)
     bench_shingles = (
         benchmark.select(
-            _shingle_udf(k)(tokens(F.col(bench_text_col))).alias("shingles")
+            F.explode(_shingle_udf(k)(tokens(F.col(bench_text_col)))).alias("sh")
         )
-        .select(F.explode("shingles").alias("sh"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )

@@ -355,7 +355,10 @@ def minhash_lsh_pairs(
     """
     # ONE Arrow kernel produces shingles AND signatures; the cached
     # frame is read by the band explode and both _pair_jaccard sides,
-    # so tokenize+shingle+sign runs exactly once. Signature shapes
+    # so tokenize+shingle+sign runs exactly once. The empty-set filter
+    # reads the cache: above the kernel's projection the optimizer
+    # pushes it below, copying the UDF into the filter (a second
+    # ArrowEvalPython that re-signs every document). Signature shapes
     # measured along the way:
     #   (a) num_hashes interpreted HOF folds: ~20x slower than (b);
     #   (b) explode + num_hashes codegen'd xxhash64-min aggregates:
@@ -378,8 +381,8 @@ def minhash_lsh_pairs(
             F.col("_s.shingles").alias("shingles"),
             F.col("_s.sigs").alias("_sigs"),
         )
-        .filter(F.size("shingles") > 0)
         .cache()
+        .filter(F.size("shingles") > 0)
     )
     bands = [
         F.xxhash64(
@@ -563,17 +566,18 @@ def duplicate_span_stats(
     position explode). Output per document: token count, covered token
     count, covered fraction, merged span count.
 
-    Scale shape: gram instances shuffle once to count (map-side
-    combine), once back for the >=min_count join (hash equi-join on the
-    gram), and once per doc for the window — all hash-partitioned
-    equi-operations; nothing quadratic, nothing driver-side. The heavy
+    Scale shape: gram instances shuffle once, by gram, for the
+    per-gram occurrence count (a window: a groupBy joined back would
+    read the gram frame twice and run the k-gram kernel twice per
+    document), and once per doc for the islands window — all
+    hash-partitioned; nothing quadratic, nothing driver-side. The heavy
     gram frame has exactly ONE consumer, so nothing corpus-token-sized
     is cached; the final left join re-derives only the narrow
     (id, n_tokens) side (one extra JVM tokenize — recompute beats a
     token-scale cache at crawl size).
 
     Exchange width: the k-gram STRING (k=5 tokens, ~30-60 bytes) is
-    projected away map-side; both gram exchanges carry
+    projected away map-side; the gram exchange carries
     ``xxhash64(gram)`` (8 bytes) instead — the ``exact_dedup``
     narrowing, MEASURED at sf0.1 with the shuffled-join regime forced:
     **13.20 MB raw-gram keys -> 7.62 MB hashed (1.73x)**
@@ -604,13 +608,12 @@ def duplicate_span_stats(
             _gram_seq_udf(k)(tokens(F.col(text_col)))
         ).alias("pos", "_g"),
     ).select("id", "pos", F.xxhash64("_g").alias("gram"))
-    hot = (
-        ex.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("_n"))
+    n_gram = F.count(F.lit(1)).over(Window.partitionBy("gram"))
+    dup = (
+        ex.withColumn("_n", n_gram)
         .filter(F.col("_n") >= min_count)
-        .select("gram")
+        .select("id", "pos")
     )
-    dup = ex.join(hot, "gram", "left_semi").select("id", "pos")
 
     w = Window.partitionBy("id").orderBy("pos")
     prev_max_end = F.max(F.col("pos") + (k - 1)).over(
@@ -727,8 +730,9 @@ def remove_duplicate_spans(
 
     Scale shape: the corpus TOKEN STREAM never shuffles (contrast
     ``remove_repeated_lines``, which ships the line stream — ~20x
-    fewer rows). Exchanges: gram keys twice (count with map-side
-    combine, then the >= min_count semi-join back), covered start
+    fewer rows). Exchanges: gram keys once (the per-gram count is a
+    window, so the k-gram kernel runs once per document — a groupBy
+    semi-joined back would read the gram frame twice), covered start
     positions once (``groupBy(id).collect_list`` — dup-position-sized,
     not corpus-sized), and one doc-level hash join corpus<->positions.
     Removal itself is a map-only Arrow kernel after that join.
@@ -741,6 +745,8 @@ def remove_duplicate_spans(
     one-per-document keys; grams are one-per-token, so the binary form
     pays) — still narrower than the raw ~30-60-byte 5-gram string, and
     a collision can no longer delete innocent text."""
+    from pyspark.sql import Window
+
     ex = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(
@@ -752,14 +758,10 @@ def remove_duplicate_spans(
         F.xxhash64("_g").alias("_g64"),
         F.unhex(F.md5("_g")).alias("_g128"),
     )
-    hot = (
-        ex.groupBy("_g64", "_g128")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= min_count)
-        .select("_g64", "_g128")
-    )
+    n_gram = F.count(F.lit(1)).over(Window.partitionBy("_g64", "_g128"))
     dup_pos = (
-        ex.join(hot, ["_g64", "_g128"], "left_semi")
+        ex.withColumn("_n", n_gram)
+        .filter(F.col("_n") >= min_count)
         .groupBy("id")
         .agg(F.collect_list("pos").alias("_ps"))
     )

@@ -110,27 +110,24 @@ def _smoothed_log_ratio(
     recipe shared by ``dsir_weights`` (target vs raw) and
     ``train_quality_classifier`` (pos vs neg). Inputs are
     ``(bucket, _c)`` count frames; absent-side buckets smooth to
-    count 0. Totals are single-row broadcasts, coalesced because
-    ``sum()`` over an EMPTY count table is NULL and a NULL total
-    would NULL every log-ratio (an empty side is well-defined under
-    add-one smoothing: p(b) = 1/B uniformly)."""
+    count 0. Totals are sums over the joined table (at most B rows,
+    one window partition), not separate aggregates of each count
+    frame: a second reader of a count frame re-runs its featurizing
+    kernel. An empty side totals 0 (well-defined under add-one
+    smoothing: p(b) = 1/B uniformly)."""
+    from pyspark.sql import Window
+
     num = num_counts.select("bucket", F.col("_c").alias("_cn_"))
     den = den_counts.select("bucket", F.col("_c").alias("_cd_"))
-    num_tot = num.agg(F.coalesce(F.sum("_cn_"), F.lit(0)).alias("_tn_"))
-    den_tot = den.agg(F.coalesce(F.sum("_cd_"), F.lit(0)).alias("_td_"))
-    return (
-        num.join(den, "bucket", "full_outer")
-        .crossJoin(F.broadcast(num_tot))
-        .crossJoin(F.broadcast(den_tot))
-        .select(
-            "bucket",
-            (
-                F.log((F.coalesce("_cn_", F.lit(0)) + 1)
-                      / (F.col("_tn_") + n_buckets))
-                - F.log((F.coalesce("_cd_", F.lit(0)) + 1)
-                        / (F.col("_td_") + n_buckets))
-            ).alias(out_col),
-        )
+    cn = F.coalesce("_cn_", F.lit(0))
+    cd = F.coalesce("_cd_", F.lit(0))
+    every = Window.partitionBy(F.lit(0))
+    return num.join(den, "bucket", "full_outer").select(
+        "bucket",
+        (
+            F.log((cn + 1) / (F.sum(cn).over(every) + n_buckets))
+            - F.log((cd + 1) / (F.sum(cd).over(every) + n_buckets))
+        ).alias(out_col),
     )
 
 

@@ -1,4 +1,15 @@
-"""SparkSession factory with the engine's pinned configuration."""
+"""SparkSession factory with the engine's pinned configuration.
+
+Generated-code cache: Spark keeps the classes whole-stage codegen
+compiles in a process-wide LRU of ``spark.sql.codegen.cache.maxEntries``
+entries, 100 by default. One ``crawl_to_shards`` call compiles about
+225 distinct classes (``build_training_corpus`` about 155,
+``run_pipeline`` 33), and a cyclic access pattern larger than an LRU
+gets almost no hits: at 100 entries every warm call recompiled nearly
+all of them (Janino, then the JIT again for each freshly loaded
+class). ``get_spark`` pins 1000 entries: the whole chain with
+headroom, at about 5 KB of source per entry.
+"""
 
 from __future__ import annotations
 
@@ -18,8 +29,9 @@ def get_spark(
 
     Reuse caveat (getOrCreate semantics): if the process already holds
     a session, JVM-immutable settings here — ``master``,
-    ``spark.driver.memory`` — silently DO NOT apply; only
-    SQL-mutable confs do. A mismatched ``master`` on reuse gets a
+    ``spark.driver.memory``, the code-cache size
+    ``spark.sql.codegen.cache.maxEntries`` — silently DO NOT apply;
+    only SQL-mutable confs do. A mismatched ``master`` on reuse gets a
     warning below; restart the process (or ``spark.stop()`` first) to
     change immutable settings.
     """
@@ -41,6 +53,8 @@ def get_spark(
         # (SURVEY.md §7.3.4)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.ui.enabled", "false")
+        # static: holds every plan shape of the chain (module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -41,7 +41,6 @@ TOP_MODULES = ["pipelines", "api"]
 HELPERS = {
     # dedup/decontaminate building blocks (consumed in-module)
     "operators.dedup.content_key_cols": "exact_dedup",
-    "operators.dedup.shingle_sets": "minhash_lsh_pairs",
     # closed-form fixture oracle kept with its datagen twin
     "operators.docpages.expected_source_cell": "documents_as_pages",
     # skew plumbing behind skew_aware_repartition

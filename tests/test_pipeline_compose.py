@@ -395,12 +395,9 @@ def test_build_training_corpus_counts_only_through_stage_leaves():
     assert sites == [], "actions outside _stage_leaf: " + ", ".join(sites)
 
 
-def test_corpus_build_computes_each_stage_once(spark, tmp_path):
-    # SQL executions of one build_training_corpus call, from the
-    # session's SQL status store: the WARC parse (the binaryFile scan
-    # feeding read_warc) and the PII redaction each sit under exactly
-    # one execution, the one that materializes their stage leaf
-    from table_ocr_spark.pipelines import ingest_crawl
+def _planted_warc(tmp_path):
+    """40 captures of distinct pages over 5 hosts plus a later re-crawl
+    of one of them that carries an email address: ``a.warc``."""
     from table_ocr_spark.sources.warc import build_warc_record
 
     def rec(i, ts="2026-03-01T09:00:00Z", extra=""):
@@ -420,6 +417,15 @@ def test_corpus_build_computes_each_stage_once(spark, tmp_path):
     recs.append(rec(3, "2026-03-02T09:00:00Z", "mail me at a@b.org"))
     (tmp_path / "a.warc").write_bytes(b"".join(recs))
 
+
+def test_corpus_build_computes_each_stage_once(spark, tmp_path):
+    # SQL executions of one build_training_corpus call, from the
+    # session's SQL status store: the WARC parse (the binaryFile scan
+    # feeding read_warc) and the PII redaction each sit under exactly
+    # one execution, the one that materializes their stage leaf
+    from table_ocr_spark.pipelines import ingest_crawl
+
+    _planted_warc(tmp_path)
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
@@ -450,6 +456,34 @@ def test_corpus_build_computes_each_stage_once(spark, tmp_path):
     # exact dedup were url self-joins and the redaction ran per consumer
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert jobs <= 35, jobs
+
+
+def test_warm_corpus_build_compiles_almost_nothing(spark, tmp_path):
+    # whole-stage codegen keeps generated classes in an LRU; one call's
+    # distinct plan shapes (about 140 here) overflow Spark's default
+    # 100 entries, and a cyclic pattern larger than an LRU gets almost
+    # no hits, so at that size every warm call recompiles nearly every
+    # class. The session's pinned cache holds them all. Earlier tests may have
+    # compiled some of these classes already, so a first call's count
+    # can be small; the bound is a quarter of it or of Spark's default.
+    from table_ocr_spark.pipelines import ingest_crawl
+
+    _planted_warc(tmp_path)
+    metrics = spark._jvm.org.apache.spark.metrics.source
+    compiled = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def compiles_per_call():
+        before = compiled.getCount()
+        build_training_corpus(
+            ingest_crawl(spark, str(tmp_path / "*")), n_tiers=2
+        )
+        return compiled.getCount() - before
+
+    first = compiles_per_call()
+    second = compiles_per_call()
+    cap = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    assert first < cap, (first, cap)
+    assert second <= max(first, 100) / 4, (first, second)
 
 
 class TestIngestCrawl:
