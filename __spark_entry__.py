@@ -481,24 +481,20 @@ def _budget_tiers(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """Quality tiers and their exact token total, shared by the budget
     samplers. Every sampler reads the tiers several times (total agg,
     fractions collects, membership filter), so the frame becomes a plan
-    leaf (``dedup._truncate_plan``: a localCheckpoint in local mode)
-    that the total aggregate materializes — token_stats and the two
-    tier window passes run once, and no cache-manager entry outlives
-    the query."""
-    from table_ocr_spark.operators.dedup import _truncate_plan
+    leaf (``dedup._stage_leaf``: a localCheckpoint in local mode) whose
+    token total is the aggregate that materializes it — token_stats and
+    the two tier window passes run once, and no cache-manager entry
+    outlives the query."""
+    from table_ocr_spark.operators.dedup import _stage_leaf
     from table_ocr_spark.operators.textstats import token_stats
     from table_ocr_spark.operators.tiers import score_tiers
 
     stats = token_stats(_read_par(spark, sf_dir, "documents"))
-    tiers, cached = _truncate_plan(score_tiers(stats, "quality_score", n_tiers=4))
-    total = int(
-        tiers.agg(
-            F.sum(F.col("n_tokens").cast("decimal(38,0)")).alias("t")
-        ).collect()[0]["t"]
+    tiers, c = _stage_leaf(
+        score_tiers(stats, "quality_score", n_tiers=4),
+        t=F.coalesce(F.sum(F.col("n_tokens").cast("decimal(38,0)")), F.lit(0)),
     )
-    if cached is not None:
-        cached.unpersist()
-    return tiers, total
+    return tiers, int(c["t"])
 
 
 def _unimax(tiers: DataFrame, total: int) -> DataFrame:

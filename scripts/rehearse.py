@@ -1688,12 +1688,14 @@ def north_star(run):
     per-record gzip members across 256 .warc.gz files — the CC layout
     the ingest path consumes at file grain.
 
-    TOS_CHECKPOINT_DIR=1 routes the CC iteration through the RELIABLE
-    checkpoint branch (persist + checkpoint(eager=False),
-    dedup._truncate_plan) — the cluster-deployment path that survives
-    executor loss — instead of the sandbox default localCheckpoint.
-    Set it to a path to use that path verbatim. The checkpoint dir
-    stays set for the blocks that run after this one."""
+    TOS_CHECKPOINT_DIR=1 routes every plan cut (stage leaves and the CC
+    rounds) through the RELIABLE checkpoint branch (checkpoint(eager=
+    True), dedup._truncate_plan) — the cluster-deployment path that
+    survives executor loss — instead of the sandbox default
+    localCheckpoint. Set it to a path to use that path verbatim. The
+    checkpoint dir stays set for the blocks that run after this one.
+    The shard digest line lets two runs (either path, any commit)
+    compare their shards."""
     import glob as _g
 
     from table_ocr_spark.pipelines import crawl_to_shards
@@ -1753,6 +1755,13 @@ def north_star(run):
     # shard files really exist under shards/tier=K/
     files = _g.glob(f"{out}/shards/tier=*/**/*.parquet", recursive=True)
     assert files, "no shard parquet written"
+    # order-free digest of every shard row: two runs (local vs reliable
+    # checkpoints, or two commits) wrote the same shards iff it matches
+    shards = spark.read.parquet(f"{out}/shards")
+    n_rows, digest = shards.agg(
+        F.count(F.lit(1)), F.bit_xor(F.xxhash64(*shards.columns))
+    ).first()
+    print(f"north_star shard digest: {n_rows} rows, {digest}", flush=True)
 
 
 @block(confs=SMALL_SPLITS)

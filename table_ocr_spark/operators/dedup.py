@@ -1,14 +1,17 @@
 """Deduplication operators for the training-data pipeline: exact
 (hash-groupBy), n-gram Jaccard, MinHash+LSH, and SimHash near-dup.
 
-Everything is JVM-side DataFrame algebra (no Python UDFs). Each
-operator's semantics are pinned so the DuckDB oracle reproduces them
-exactly; the probabilistic stage (MinHash banding) is always followed
-by an exact-Jaccard verification so the *output* is deterministic — the
-banding only prunes the candidate space (at 10^12 docs the all-pairs
-join is impossible; the band join is the scale path, and with 32
-hashes / 16 bands of 2 the miss probability at J>=0.8 is
-(1-0.8^2)^16 ≈ 6e-8 per pair).
+Joins, groupings and verification are JVM-side DataFrame algebra;
+the per-document kernels (shingle sets, the MinHash and SimHash
+signatures, ordered k-grams, span stripping) are pandas UDFs over
+Arrow batches, each measured against its JVM-expression shape where
+it is defined. Each operator's semantics are pinned so the DuckDB
+oracle reproduces them exactly; the probabilistic stage (MinHash
+banding) is always followed by an exact-Jaccard verification so the
+*output* is deterministic — the banding only prunes the candidate
+space (at 10^12 docs the all-pairs join is impossible; the band join
+is the scale path, and with 32 hashes / 16 bands of 2 the miss
+probability at J>=0.8 is (1-0.8^2)^16 ≈ 6e-8 per pair).
 
 Scale notes:
 - the shingle self-join (`ngram_jaccard_pairs`) is the *oracle-shaped*
@@ -263,6 +266,27 @@ def _shingle_sig_udf(k: int, num_hashes: int):
     return udf
 
 
+def _band_pairs(sigs: DataFrame, bands: list) -> DataFrame:
+    """Candidate pairs of an LSH banding, shared by the MinHash, SimHash
+    and hyperplane finders: ``(id_a, id_b, sig_a, sig_b)`` for every
+    ``id_a < id_b`` that agrees on some band, once per shared band
+    (callers deduplicate). ``sigs`` holds ``(id, sig)``; ``bands`` are
+    the band-key columns over it, all one type. One ``posexplode``
+    keys each row by (band index, key), and both join sides read that
+    one frame; a ``sig`` the caller drops after the join is pruned
+    below the exchange."""
+    banded = sigs.select(
+        "id", "sig", F.posexplode(F.array(*bands)).alias("band", "bkey")
+    )
+    a = banded.select(
+        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bkey"
+    )
+    b = banded.select(
+        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bkey"
+    )
+    return a.join(b, ["band", "bkey"]).filter(F.col("id_a") < F.col("id_b"))
+
+
 def _pair_jaccard(cand: DataFrame, sets_df: DataFrame) -> DataFrame:
     """Exact Jaccard for candidate pairs (id_a < id_b) via array
     intersection on the (small) candidate set."""
@@ -379,7 +403,7 @@ def minhash_lsh_pairs(
         .select(
             "id",
             F.col("_s.shingles").alias("shingles"),
-            F.col("_s.sigs").alias("_sigs"),
+            F.col("_s.sigs").alias("sig"),
         )
         .cache()
         .filter(F.size("shingles") > 0)
@@ -388,26 +412,14 @@ def minhash_lsh_pairs(
         F.xxhash64(
             F.lit(b),
             *[
-                F.element_at("_sigs", b * rows_per_band + r + 1)
+                F.element_at("sig", b * rows_per_band + r + 1)
                 for r in range(rows_per_band)
             ],
         )
         for b in range(num_hashes // rows_per_band)
     ]
-    banded = sets_df.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("band"), bk.cast("long").alias("bkey"))
-                for i, bk in enumerate(bands)
-            ])
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bkey")
-    a = banded.select(F.col("id").alias("id_a"), "band", "bkey")
-    b = banded.select(F.col("id").alias("id_b"), "band", "bkey")
     cand = (
-        a.join(b, ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _band_pairs(sets_df.select("id", "sig"), bands)
         .select("id_a", "id_b")
         .distinct()
     )
@@ -495,30 +507,15 @@ def simhash_pairs(
     """
     # cached: both sides of the band self-join read it; uncached, the
     # tokenize + signature kernel would run twice (rows: id + 1 long)
-    sig = simhash16(df, text_col, id_col).cache()
-    n_bands = SIMHASH_BITS // SIMHASH_BAND_BITS
+    sig = simhash16(df, text_col, id_col).toDF("id", "sig").cache()
     mask = (1 << SIMHASH_BAND_BITS) - 1
-    banded = sig.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftright("simhash", i * SIMHASH_BAND_BITS)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bkey"),
-                )
-                for i in range(n_bands)
-            ])
-        ).alias("bb"),
-    ).select("id", "simhash", "bb.band", "bb.bkey")
-    a = banded.select(F.col("id").alias("id_a"), F.col("simhash").alias("_ha"), "band", "bkey")
-    b = banded.select(F.col("id").alias("id_b"), F.col("simhash").alias("_hb"), "band", "bkey")
-    ham = F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))).cast("long")
+    bands = [
+        F.shiftright("sig", i * SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask))
+        for i in range(SIMHASH_BITS // SIMHASH_BAND_BITS)
+    ]
+    ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long")
     return (
-        a.join(b, ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _band_pairs(sig, bands)
         .select("id_a", "id_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)  # BEFORE distinct: the
         # band bucket emits pairs up to hamming 24; discarding them ahead
@@ -791,7 +788,7 @@ def remove_duplicate_spans(
     )
 
 
-def _truncate_plan(df: DataFrame):
+def _truncate_plan(df: DataFrame) -> DataFrame:
     """Cut the logical plan of an iteratively-rebuilt frame or a stage
     output. Uses the reliable checkpoint when the session has a
     checkpoint dir (the cluster deployment: survives executor loss),
@@ -804,47 +801,36 @@ def _truncate_plan(df: DataFrame):
     and Spark re-renders that plan's explain string at every SQL
     execution start and AQE update.
 
-    LAZY on purpose: every caller runs an aggregate action on the
-    result immediately (the convergence probe, a stage count), which
-    materializes the checkpoint in the same job — eager=True would
-    spend a separate job on the same work. Under AQE the lazy call
-    already runs the input's shuffle map stages (planning the RDD
+    The local checkpoint is LAZY on purpose: every caller runs an
+    aggregate action on the result immediately (the convergence probe,
+    a stage count), which materializes it in the same job — eager
+    would spend a separate job on the same work. Under AQE the lazy
+    call already runs the input's shuffle map stages (planning the RDD
     executes the adaptive plan's query stages); only the final stage
-    waits for the action. The reliable path persists
-    first: RDD checkpointing writes its files in a SECOND pass that
-    recomputes the un-cached plan (the classic persist-before-
-    checkpoint rule), so without the cache every cluster iteration
-    would run its joins twice.
-
-    Returns ``(checkpointed, cached)`` — ``cached`` is the persisted
-    input frame (None on the localCheckpoint path). The CALLER must
-    ``cached.unpersist()`` once the checkpoint has materialized (after
-    the stage count, or the next round's probe): relying on
-    ContextCleaner GC lets up to max_iters cached label frames pile up
-    in executor storage on a large dup subgraph (ADVICE r3)."""
+    waits for the action. The reliable checkpoint is EAGER: a lazy one
+    writes its files in a second pass that recomputes the plan, while
+    the eager call evaluates it once (a counting UDF under a 1,000-row
+    map-only plan ran 1,000 times eager, 2,000 lazy) in as many jobs
+    as a persist plus a lazy checkpoint, and leaves no persisted copy
+    for the caller to release."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
-        df.persist()
-        return df.checkpoint(eager=False), df
-    return df.localCheckpoint(eager=False), None
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=False)
 
 
 def _stage_leaf(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
     """A stage output as a checkpointed plan leaf, and its counts:
     ``{"n": rows, name: value for each of aggs}``. One global aggregate
     (the row count plus ``aggs``, evaluated over the leaf's rows) is the
-    action that materializes the checkpoint, so a stage's report counts
-    cost no pass of their own; on the reliable path the persisted copy
-    that fed the checkpoint write is released right after it. An
-    aggregate over zero rows must still give a number (``count_if``,
-    or ``coalesce(sum(...), 0)``)."""
-    leaf, cached = _truncate_plan(df)
+    action that materializes a local checkpoint, so a stage's report
+    counts cost no pass of their own. An aggregate over zero rows must
+    still give a number (``count_if``, or ``coalesce(sum(...), 0)``)."""
+    leaf = _truncate_plan(df)
     row = leaf.agg(
         F.count(F.lit(1)).alias("n"),
         *(c.alias(name) for name, c in aggs.items()),
     ).collect()[0]
-    if cached is not None:
-        cached.unpersist()
     return leaf, row.asDict()
 
 
@@ -1061,17 +1047,16 @@ def duplicate_clusters(
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    edges, edges_cached = _truncate_plan(edges)
+    edges = _truncate_plan(edges)
     # src covers every endpoint after symmetrization
     init = (
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("lbl", F.col("id"))
     )
-    cached = None
     start_round = 0
     if state_dir is None:
-        labels, cached = _truncate_plan(init)
+        labels = _truncate_plan(init)
     elif resume_meta is not None:
         start_round = resume_meta[0]
         labels = spark.read.parquet(_cc_round_path(state_dir, start_round))
@@ -1100,14 +1085,13 @@ def duplicate_clusters(
             merged.join(l2, merged["lbl"] == l2["_jid"])
             .select("id", F.least("lbl", "_jlbl").alias("lbl"))
         )
-        prev_cached = cached
         if state_dir is None:
-            labels, cached = _truncate_plan(jumped)
+            labels = _truncate_plan(jumped)
         else:
             labels = _cc_commit(spark, state_dir, jumped, rnd)
         # convergence probe (see docstring): count the edges whose two
         # endpoints still carry different labels. Its full scan of the
-        # labels also materializes this round's lazy checkpoint.
+        # labels also materializes this round's local checkpoint.
         n_split = (
             probe_edges
             .join(labels.select(F.col("id").alias("src"),
@@ -1117,19 +1101,9 @@ def duplicate_clusters(
             .where(F.col("_ls") != F.col("_ld"))
             .count()
         )
-        # the probe materialized this round's checkpoint, so last
-        # round's cached frame (which fed the checkpoint write) is dead
-        # — drop it NOW instead of waiting for ContextCleaner GC
-        # (ADVICE r3: up to max_iters cached label frames otherwise
-        # accumulate in executor storage on a large dup subgraph)
-        if prev_cached is not None:
-            prev_cached.unpersist()
         if n_split == 0:
             converged = True
             break
-    for c in (edges_cached, cached):
-        if c is not None:
-            c.unpersist()
     if not converged:
         raise RuntimeError(
             f"duplicate_clusters: no convergence in {max_iters} iterations "

@@ -378,9 +378,8 @@ def host_pagerank(
     dangling mass in the same pass (round 0's mass is closed-form
     under the uniform start) — the same bounded-driver discipline as
     ``duplicate_clusters``'s label-sum probe. Every round's frame is
-    checkpointed (``_truncate_plan``) and the previous round's cache
-    explicitly unpersisted, so plans stay flat and executor storage
-    holds at most two rank frames. Ranks are float sums, so exact
+    checkpointed (``_truncate_plan``; round 0 is a ``_stage_leaf``),
+    so plans stay flat. Ranks are float sums, so exact
     bits can vary with aggregation order across runs — rankings are
     stable to ~1e-12; tests pin closed forms with tolerances, not
     hashes.
@@ -389,7 +388,7 @@ def host_pagerank(
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
-    from .dedup import _truncate_plan
+    from .dedup import _stage_leaf, _truncate_plan
 
     ext = graph.filter(F.col("src_host") != F.col("dst_host"))
     nodes = (
@@ -403,7 +402,7 @@ def host_pagerank(
         nodes.unpersist()
         return nodes.withColumn("rank", F.lit(0.0))
 
-    edges = nodes_t = dangling = prev_cached = None
+    edges = nodes_t = dangling = None
     try:
         out_tot = ext.groupBy("src_host").agg(
             F.sum("n_links").alias("_tot"),
@@ -457,10 +456,9 @@ def host_pagerank(
         ).persist()
 
         d = float(damping)
-        ranks = nodes_t.select("host", F.col("_t").alias("rank"))
-        ranks, cached = _truncate_plan(ranks)
-        ranks.count()
-        prev_cached = cached
+        ranks, _ = _stage_leaf(
+            nodes_t.select("host", F.col("_t").alias("rank"))
+        )
         # round 0's dangling mass is one bootstrap aggregate
         # (closed-form count/n in the uniform case); each later
         # round's is folded into the previous round's delta probe, so
@@ -491,10 +489,10 @@ def host_pagerank(
                     + F.lit(d) * F.coalesce("_c", F.lit(0.0))
                 ).alias("rank"),
             )
-            nxt, cached = _truncate_plan(nxt)
-            # one probe action per round: materializes the checkpoint,
-            # measures the L1 delta, and harvests the NEXT round's
-            # dangling mass in the same pass
+            nxt = _truncate_plan(nxt)
+            # one probe action per round: materializes a local
+            # checkpoint, measures the L1 delta, and harvests the NEXT
+            # round's dangling mass in the same pass
             delta_row = (
                 nxt.join(
                     ranks.select("host", F.col("rank").alias("_prev")),
@@ -513,20 +511,14 @@ def host_pagerank(
             )
             delta = delta_row[0]
             dmass = float(delta_row[1] or 0.0)
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = cached
             ranks = nxt
             if delta is not None and float(delta) <= tol:
                 break
         return ranks
     finally:
-        # prev_cached: the final round's checkpoint materialized in
-        # the probe action, so its backing persist is dead weight
-        # (same final unpersist duplicate_clusters does); the None
-        # guards cover a teleport-validation raise before a frame
-        # exists
-        for f in (edges, nodes_t, dangling, prev_cached):
+        # the None guards cover a teleport-validation raise before a
+        # frame exists
+        for f in (edges, nodes_t, dangling):
             if f is not None:
                 f.unpersist()
         nodes.unpersist()

@@ -51,7 +51,7 @@ SUBGRAPH only — (src, cur, hops) id-width triples over the 3xx rows,
 never the corpus (the same subgraph-only lesson the CC closure
 measured at 4.4× shuffle, BASELINE.md r3). Each round is one
 hash-join of the state with itself on ``cur = src`` plus a plan
-truncation (:func:`dedup._truncate_plan`) so Catalyst never re-plans
+truncation (:func:`dedup._stage_leaf`) so Catalyst never re-plans
 the round stack; the terminal probe is one broadcast-or-hash semi
 against the distinct src set. Redirect captures are a few percent of
 a real crawl, so the whole resolution runs over a frame orders of
@@ -66,7 +66,7 @@ from typing import Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from table_ocr_spark.operators.dedup import _truncate_plan
+from table_ocr_spark.operators.dedup import _stage_leaf
 from table_ocr_spark.operators.linkgraph import resolve_href
 
 #: RFC 9110 §15.4 statuses that carry a Location the client follows.
@@ -140,10 +140,9 @@ def resolve_redirects(
     terminal stops advancing; a src still moving after round k sits
     exactly ``2^k`` hops out. After ``ceil(log2(max_hops+1))`` rounds
     every non-terminal survivor is provably > max_hops deep — a loop
-    by definition. Plans are truncated per round (persist +
+    by definition. Every round's state is a stage leaf (a reliable
     checkpoint when the session has a checkpoint dir — the cluster
-    deployment — else localCheckpoint), with the previous round's
-    cache explicitly released once the next materializes."""
+    deployment — else a localCheckpoint its count materializes)."""
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
     rounds = max(1, math.ceil(math.log2(max_hops + 1)))
@@ -151,9 +150,7 @@ def resolve_redirects(
     state = edges.select(
         F.col("src"), F.col("dst").alias("cur"), F.lit(1).alias("hops")
     )
-    state, cached = _truncate_plan(state)
-    state.count()  # materialize round-0 checkpoint
-    prev_cached = cached
+    state, _ = _stage_leaf(state)
     for _ in range(rounds):
         nxt = state.select(
             F.col("src").alias("j_src"),
@@ -170,18 +167,7 @@ def resolve_redirects(
                 ).alias("hops"),
             )
         )
-        state, cached = _truncate_plan(stepped)
-        state.count()
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = cached
-
-    # the final count() materialized the last checkpoint, so the
-    # frame that fed it is dead — release it now instead of leaking
-    # one cached state frame per call (the ADVICE-r3 rule the CC
-    # closure pins)
-    if prev_cached is not None:
-        prev_cached.unpersist()
+        state, _ = _stage_leaf(stepped)
 
     # terminal-probe src set from the CHECKPOINTED state (its src
     # column is exactly the edge src set): probing `edges` instead

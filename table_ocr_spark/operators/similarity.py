@@ -179,44 +179,30 @@ def hyperplane_near_dup_pairs(
     (angle <= 8.1 deg) is 1 - (1-(1-θ/π)^4)^4 ≈ 1 - 8e-4, and exact
     (1.0) for true duplicates, whose signatures are identical. The
     input needs only (vec_id, vec_col) — genuinely label-free."""
+    from table_ocr_spark.operators.dedup import _band_pairs
+
     base = _with_vec(emb, vec_col, with_label=False)
-    sig = base.select(
-        "vec_id", _hyperplane_sig_udf(HP_BITS)(F.col("vec")).alias("_sig")
-    )
-    mask = (1 << HP_BAND_BITS) - 1
-    n_bands = HP_BITS // HP_BAND_BITS
-    # Band rows and the candidate self-join carry ONLY (vec_id, band,
-    # bkey) — 24 bytes/row. The previous shape exploded the full vector
-    # 8x through the exchange and shuffled two vector copies per
-    # candidate BEFORE dedup; at crawl scale that exchange dominates the
-    # whole job. Vectors re-join ONCE per deduped pair for the exact
-    # verification — the same narrow-candidates-then-rejoin shape as
-    # MinHash's _pair_jaccard (operators/dedup.py).
-    banded = sig.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    # unsigned shift: the packed 64-bit signature may be
-                    # negative as a long; arithmetic shift would smear
-                    # the sign bit into high bands
-                    F.shiftrightunsigned("_sig", i * HP_BAND_BITS)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bkey"),
-                )
-                for i in range(n_bands)
-            ])
-        ).alias("bb"),
-    ).select("vec_id", "bb.band", "bb.bkey")
     # cached: both sides of the band self-join read it; uncached, the
     # signature matmul UDF would run twice over every embedding
-    banded = banded.cache()
-    a = banded.select(F.col("vec_id").alias("id_a"), "band", "bkey")
-    b = banded.select(F.col("vec_id").alias("id_b"), "band", "bkey")
+    sig = base.select(
+        F.col("vec_id").alias("id"),
+        _hyperplane_sig_udf(HP_BITS)(F.col("vec")).alias("sig"),
+    ).cache()
+    mask = (1 << HP_BAND_BITS) - 1
+    # Band rows and the candidate self-join carry ONLY (id, band, bkey):
+    # the full vector exploded 8x through the exchange, with two copies
+    # per candidate before dedup, would dominate the whole job at crawl
+    # scale. Vectors re-join ONCE per deduped pair for the exact
+    # verification — the same narrow-candidates-then-rejoin shape as
+    # MinHash's _pair_jaccard (operators/dedup.py). Unsigned shift: the
+    # packed 64-bit signature may be negative as a long; arithmetic
+    # shift would smear the sign bit into high bands.
+    bands = [
+        F.shiftrightunsigned("sig", i * HP_BAND_BITS).bitwiseAND(F.lit(mask))
+        for i in range(HP_BITS // HP_BAND_BITS)
+    ]
     cand = (
-        a.join(b, ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _band_pairs(sig, bands)
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )

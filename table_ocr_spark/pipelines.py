@@ -24,8 +24,9 @@ stages. Stages that share a leaf are bracketed together:
 [leaf 3: near dedup + PII — n_after_near_dedup, n_had_pii]
 6. MinHash+LSH near-dup removal at the given Jaccard threshold
    (exact-verified pairs → connected-component closure → longest-text
-   survivor per cluster; the CC convergence jobs run eagerly at this
-   stage)
+   survivor per cluster, ties to min url; keyed by a per-row id, since
+   input without warc_ts can repeat a url; the CC convergence jobs run
+   eagerly at this stage)
 7. PII redaction (emails/phones → typed placeholders) of the survivors
 [leaf: the clean rows; n_contaminated = the rows it drops]
 8. (optional) benchmark decontamination — drop docs whose k-shingle
@@ -603,30 +604,38 @@ def build_training_corpus(
     )
     passed = flagged.filter("_q").select("url", "text")
 
+    # near dedup keys each row by its own id, ordered by url first:
+    # input without warc_ts can hold several rows of one url, and a url
+    # key would give their distinct texts one near-dup id and one keep
+    # flag. The id is drawn inside the leaf, so every reader sees the
+    # same one; on url-unique input it orders exactly as the url does.
     uniq, c_exact = _stage_leaf(
         _exact_dedup_survivors(passed, text_col="text", id_col="url")
+        .withColumn(
+            "_id", F.struct("url", F.monotonically_increasing_id().alias("_row"))
+        )
     )
 
     pairs = minhash_lsh_pairs(
-        uniq, text_col="text", id_col="url", k=shingle_k,
+        uniq, text_col="text", id_col="_id", k=shingle_k,
         threshold=minhash_threshold,
     )
     # transitive closure + best-representative survivor (longest text,
-    # ties to min url) — near-dup is not transitive, so dropping one
-    # side of every pair would over-keep (two docs both similar to a
-    # third but not to each other would BOTH survive). The CC loop
-    # runs its convergence jobs here, so this stage is eager.
-    clusters = duplicate_clusters(uniq, pairs, id_col="url")
-    scores = uniq.select("url", F.length("text").cast("double").alias("_len"))
+    # ties to min id, so to min url) — near-dup is not transitive, so
+    # dropping one side of every pair would over-keep (two docs both
+    # similar to a third but not to each other would BOTH survive). The
+    # CC loop runs its convergence jobs here, so this stage is eager.
+    clusters = duplicate_clusters(uniq, pairs, id_col="_id")
+    scores = uniq.select("_id", F.length("text").cast("double").alias("_len"))
     keep = (
-        cluster_survivors(clusters, scores, id_col="url", score_col="_len")
+        cluster_survivors(clusters, scores, id_col="_id", score_col="_len")
         .filter(F.col("keep"))
-        .select("url")
+        .select("_id")
     )
     # the survivors and their redaction share one leaf
     clean, c_near = _stage_leaf(
         redact_pii(
-            uniq.join(keep, "url", "left_semi"), text_col="text", id_col="url"
+            uniq.join(keep, "_id", "left_semi"), text_col="text", id_col="url"
         ),
         n_had_pii=F.count_if("had_pii"),
     )

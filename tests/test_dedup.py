@@ -540,35 +540,108 @@ def test_survivor_unparseable_string_scores_fall_to_missing_rank(spark):
     assert rows[8]["keep"] and not rows[9]["keep"]
 
 
-def test_duplicate_clusters_unpersists_iteration_caches(spark):
-    # ADVICE r4: on the reliable-checkpoint path every round persists
-    # its label frame to make the checkpoint write one-pass; those
-    # caches must be dropped explicitly as rounds retire, not left to
-    # ContextCleaner GC
-    import tempfile
-
+def _cc_chain(spark):
     from table_ocr_spark.operators.dedup import duplicate_clusters
 
+    docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], "id_a long, id_b long"
+    )
+    out = duplicate_clusters(docs, pairs)
+    assert all(r["cluster_id"] == 0 for r in out.collect())
+
+
+def _redirect_chain(spark):
+    from table_ocr_spark.operators.redirects import resolve_redirects
+
+    edges = spark.createDataFrame(
+        [(f"u{i}", f"u{i + 1}") for i in range(9)], "src string, dst string"
+    )
+    out = {r["url"]: r for r in resolve_redirects(edges).collect()}
+    assert out["u0"]["final_url"] == "u9" and out["u0"]["hops"] == 9
+
+
+def _pagerank_ring(spark):
+    from table_ocr_spark.operators.linkgraph import host_pagerank
+
+    g = spark.createDataFrame(
+        [(f"h{i}", f"h{(i + 1) % 5}", 1) for i in range(5)],
+        "src_host string, dst_host string, n_links long",
+    )
+    ranks = [r["rank"] for r in host_pagerank(g).collect()]
+    assert len(ranks) == 5 and all(abs(x - 0.2) < 1e-9 for x in ranks)
+
+
+def _corpus_build(spark):
+    from table_ocr_spark.pipelines import build_training_corpus
+
+    def page(i):
+        words = " ".join(f"p{i}w{j}" for j in range(14))
+        html = f"<html><body><article><p>{words}</p></article></body></html>"
+        return (f"http://s{i}.test/", bytearray(html.encode()))
+
+    pages = spark.createDataFrame(
+        [page(i) for i in range(12)], "url string, html binary"
+    )
+    corpus, rep = build_training_corpus(pages, n_tiers=2)
+    assert rep.n_after_near_dedup == 12 and corpus.count() == 12
+
+
+@pytest.mark.parametrize(
+    "call, left",
+    [(_cc_chain, 0), (_redirect_chain, 0), (_pagerank_ring, 0),
+     # minhash_lsh_pairs' own .cache() of the shingle sets is never
+     # released (ROADMAP items 2 and 7); it is the one RDD allowed
+     (_corpus_build, 1)],
+    ids=["duplicate_clusters", "resolve_redirects", "host_pagerank",
+         "build_training_corpus"],
+)
+def test_reliable_checkpoint_path_leaves_no_persisted_rdd(
+    spark, tmp_path, call, left
+):
+    # with a checkpoint dir set, plan cuts are eager reliable
+    # checkpoints: no iteration round or stage leaf keeps a persisted
+    # copy of its input for the caller to release
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    d = tempfile.mkdtemp(prefix="cc_ckpt_")
-    sc.setCheckpointDir(d)
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        docs = spark.createDataFrame(
-            [(i,) for i in range(40)], "doc_id long"
-        )
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(39)], "id_a long, id_b long"
-        )
-        out = duplicate_clusters(docs, pairs)
-        assert all(r["cluster_id"] == 0 for r in out.collect())
-        # everything the iteration persisted (edges + per-round
-        # label frames) is explicitly released by return time
-        assert jsc.getPersistentRDDs().size() <= before
+        call(spark)
+        assert jsc.getPersistentRDDs().size() <= before + left
     finally:
         # unset so the rest of the session-scoped suite stays on the
         # localCheckpoint path (scala setter: Option[String] = None)
+        getattr(jsc, "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None)
+        )
+
+
+def test_stage_leaf_reliable_checkpoint_evaluates_each_row_once(spark, tmp_path):
+    # a reliable checkpoint written lazily recomputes its plan in a
+    # second pass; the eager one under _stage_leaf reads each row once
+    from table_ocr_spark.operators.dedup import _stage_leaf
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    calls = sc.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        calls.add(1)
+        return x * 2
+
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        leaf, c = _stage_leaf(
+            spark.range(1000).select(counted("id").alias("y")),
+            total=F.sum("y"),
+        )
+        assert c == {"n": 1000, "total": 999000}
+        assert calls.value == 1000
+        assert leaf.agg(F.max("y")).collect()[0][0] == 1998
+        assert calls.value == 1000
+    finally:
         getattr(jsc, "checkpointDir_$eq")(
             sc._jvm.scala.Option.apply(None)
         )

@@ -83,10 +83,9 @@ def test_training_corpus_plan_is_flat(spark, tmp_path):
 
 
 def test_training_corpus_reliable_checkpoint_path(spark, tmp_path):
-    # with a checkpoint dir set, stage leaves are reliable checkpoints
-    # (persist + checkpoint, persisted copy released after the count):
-    # same report and same corpus as the localCheckpoint path. n_tiers
-    # adds the tiered-corpus leaf.
+    # with a checkpoint dir set, stage leaves are eager reliable
+    # checkpoints (no persisted copy): same report and same corpus as
+    # the localCheckpoint path. n_tiers adds the tiered-corpus leaf.
     pages, _ = _planted_pages(spark, tmp_path)
     corpus, rep = build_training_corpus(pages, n_tiers=2)
     want = sorted(map(tuple, corpus.collect()))
@@ -367,6 +366,28 @@ def test_corpus_report_counts_from_the_extraction_leaf(spark):
     got2 = [(r.url, r.text) for r in corpus2.collect()]
     assert sorted(got2) == sorted(want)
     assert rep2.n_after_exact_dedup == rep2.n_after_near_dedup == 12
+
+
+def test_near_dedup_keys_rows_not_urls(spark):
+    # without warc_ts one url can carry several texts: x.test has its
+    # own text and a near-dup of w.test's (last token changed, Jaccard
+    # 11/13). Near dedup drops that one row; a url key dropped x.test's
+    # own text with it, since both rows shared one keep flag
+    shared = _doc_words("shared")
+    near = shared.rsplit(" ", 1)[0] + " sharedz13"
+    rows = [
+        ("http://w.test/", _article(shared)),
+        ("http://x.test/", _article(_doc_words("xown"))),
+        ("http://x.test/", _article(near)),
+    ] + [(f"http://c{i}.test/", _article(_doc_words(f"c{i}"))) for i in range(3)]
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    corpus, rep = build_training_corpus(pages)
+    got = sorted((r.url, r.text) for r in corpus.collect())
+    assert got == sorted(
+        [("http://w.test/", shared), ("http://x.test/", _doc_words("xown"))]
+        + [(f"http://c{i}.test/", _doc_words(f"c{i}")) for i in range(3)]
+    )
+    assert (rep.n_after_exact_dedup, rep.n_after_near_dedup) == (6, 5)
 
 
 def test_build_training_corpus_counts_only_through_stage_leaves():
