@@ -28,7 +28,13 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# Spark's Python workers do not inherit the driver's sys.path: they
+# import the package through PYTHONPATH, set before the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+)
 
 import __spark_entry__ as em  # noqa: E402
 

@@ -15,7 +15,13 @@ import sys
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers do not inherit the driver's sys.path: they
+# import the package through PYTHONPATH, set before the session starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

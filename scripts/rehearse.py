@@ -86,6 +86,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+# importing bench also puts the checkout on the PYTHONPATH the Spark
+# Python workers import the package through
 from bench import probe_effective_cores  # noqa: E402
 
 BLOCKS: dict = {}

@@ -838,95 +838,37 @@ def _cc_round_path(state_dir: str, rnd: int) -> str:
     return f"{state_dir}/labels/round={rnd}"
 
 
-def _cc_marker_path(state_dir: str, rnd: int, done: bool) -> str:
-    return f"{state_dir}/meta/{'done' if done else 'round'}_{rnd}"
+def _cc_committed(spark, path: str) -> bool:
+    # the output committer writes _SUCCESS only after every part file
+    # is in place: a write cut by a driver kill leaves a directory
+    # without it, and the next write of that round overwrites it
+    return fs_exists(spark, f"{path}/_SUCCESS")
 
 
-def _read_cc_meta(spark, state_dir: str):
-    """(round, done) of the last COMMITTED CC round, or None for a
-    fresh state dir. Scans the per-round marker dirs newest-first and
-    SKIPS any marker that is unreadable or empty — a marker caught
-    mid-write by a driver kill: the previous round's marker plus the
-    idempotent labels overwrite mean that round is merely recomputed,
-    never lost (review r4: the original single overwritten meta file
-    could be destroyed by a kill during its own rewrite, stranding
-    resume permanently)."""
-    meta = f"{state_dir}/meta"
-    if not fs_exists(spark, meta):
+def _cc_resume_point(spark, state_dir: str) -> tuple[int, bool] | None:
+    """(round, done) a durable CC run resumes from, or None for a fresh
+    state dir. ``done/`` names the final round of a converged run and
+    counts only when that round is committed; otherwise the newest
+    committed ``labels/round=N`` is the resume point. Every other name
+    under ``labels/`` (an uncommitted round, an S3 ``_$folder$``
+    marker, tooling files) is skipped."""
+    done = f"{state_dir}/done"
+    if _cc_committed(spark, done):
+        rnd = int(spark.read.parquet(done).collect()[0]["round"])
+        if _cc_committed(spark, _cc_round_path(state_dir, rnd)):
+            return rnd, True
+    labels = f"{state_dir}/labels"
+    if not fs_exists(spark, labels):
         return None
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(meta)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(labels)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    markers = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        try:
-            if name.startswith("done_"):
-                markers.append((int(name[5:]), True))
-            elif name.startswith("round_"):
-                markers.append((int(name[6:]), False))
-        except ValueError:
-            # a stray artifact matching the prefix (S3N '_$folder$'
-            # markers, tooling files) must be ignored, not strand
-            # resume with an uncaught parse error (review r4)
-            continue
-    # newest round first; a done marker outranks the same round's
-    # in-progress marker
-    for rnd, done in sorted(markers, reverse=True):
-        try:
-            rows = (
-                spark.read.parquet(_cc_marker_path(state_dir, rnd, done))
-                .collect()
-            )
-        except Exception:
-            continue  # partial marker from a crashed write
-        if not rows:
-            continue
-        if fs_exists(spark, _cc_round_path(state_dir, rnd)):
-            return rnd, done
-    if not markers:
-        # legacy layout (pre-marker rounds wrote ONE overwritten parquet
-        # file at meta/ itself): read it the old way so an existing
-        # durable run is resumed, not silently restarted. After resume,
-        # new markers land as subdirectories; the legacy part files
-        # linger unread (review r4).
-        try:
-            rows = spark.read.parquet(meta).collect()
-        except Exception:
-            return None
-        if rows and fs_exists(
-            spark, _cc_round_path(state_dir, int(rows[0]["round"]))
-        ):
-            return int(rows[0]["round"]), bool(rows[0]["done"])
-    return None
-
-
-def _write_cc_meta(spark, state_dir: str, rnd: int, done: bool) -> None:
-    """One write-ONCE marker dir per (round, done) state: no marker a
-    resume might depend on is ever rewritten, so a driver kill can only
-    corrupt the marker of the round being committed — which the reader
-    skips. Data N is only ever (re)written while the newest marker is
-    N-1, so a readable marker N implies fully-committed round-N labels.
-    mode="overwrite" here only clears a partial marker left by a
-    previous crash of this SAME write."""
-    local_frame(
-        spark, [(rnd, done)], "round long, done boolean"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        _cc_marker_path(state_dir, rnd, done)
-    )
-
-
-def _cc_commit(spark, state_dir: str, labels: DataFrame, rnd: int) -> DataFrame:
-    """Durable round commit: labels → parquet, meta advances AFTER the
-    data write succeeds (a crash between the two resumes from this
-    round's data under the previous round's meta — the labels write is
-    simply redone, idempotent overwrite). Reading the file back both
-    truncates the plan (the checkpoint role) and makes the next round
-    independent of this driver's lineage graph."""
-    path = _cc_round_path(state_dir, rnd)
-    labels.write.mode("overwrite").parquet(path)
-    _write_cc_meta(spark, state_dir, rnd, False)
-    return spark.read.parquet(path)
+    rounds = [
+        int(name[6:])
+        for name in (st.getPath().getName() for st in fs.listStatus(jpath))
+        if name.startswith("round=") and name[6:].isdigit()
+        and _cc_committed(spark, f"{labels}/{name}")
+    ]
+    return (max(rounds), False) if rounds else None
 
 
 def _cc_finalize(docs: DataFrame, labels: DataFrame, id_col: str) -> DataFrame:
@@ -985,10 +927,14 @@ def duplicate_clusters(
     probe is one count over the subgraph's edges with both endpoint
     labels joined on, the same for every orderable id type, and the
     loop stops in the round that reaches the fixed point — no
-    confirming round. The symmetrized edges and each round's labels
-    are checkpointed (:func:`_truncate_plan`), so every round plans
-    over two leaves instead of the upstream pair pipeline and a
-    growing join stack. Raises
+    confirming round. The symmetrized edges are one materialized
+    :func:`_stage_leaf` and each round's labels a plan cut
+    (:func:`_truncate_plan`) that the round's probe materializes, so
+    every round plans over materialized leaves instead of the upstream
+    pair pipeline and a growing join stack. Every label starts as its
+    node's own id, so round 1 needs no label frame: its merge is one
+    ``groupBy(src)`` over the edge leaf. The leaf's row count ends the
+    call with no round when there are no pairs. Raises
     ``RuntimeError`` after ``max_iters`` (pathological graphs only:
     log2(10^12-node chain) < 25).
 
@@ -1008,73 +954,79 @@ def duplicate_clusters(
     duplicate edge cannot change a ``min()`` — dedup would cost an
     always-on shuffle to guard a harmless case.
 
-    RESTART CONTRACT (r3 verdict #7). Default (``state_dir=None``):
-    per-round checkpoints survive EXECUTOR loss (the reliable-
-    checkpoint path when the session has a checkpoint dir) but live
-    in this session — a DRIVER loss costs re-running every round from
-    scratch (bounded: O(log diameter) rounds, each one subgraph-sized
-    job wave). Pass ``state_dir`` to make rounds durable the way
-    extraction is (``plans/lineage.py``): each round's labels commit
-    to ``state_dir/labels/round=i/`` parquet with a meta row advancing
-    AFTER the data write, so a killed driver resumes from the last
-    complete round (the same ``pairs`` recipe must be passed again —
-    the pair operators are deterministic, so recomputing edges is
-    correct); a COMPLETED run short-circuits to the stored labels
-    without iterating (idempotent re-run, the lineage-table property).
-    The durable commit replaces the checkpoint as the plan-truncation
-    mechanism — one parquet write+read per round is the durability
-    price, paid only when asked for. Kill/resume pinned in
+    RESTART CONTRACT. Default (``state_dir=None``): the plan cuts
+    survive EXECUTOR loss (the reliable-checkpoint path when the
+    session has a checkpoint dir) but live in this session — a DRIVER
+    loss costs re-running every round from scratch (bounded:
+    O(log diameter) rounds, each one subgraph-sized job wave). Pass
+    ``state_dir`` to make rounds durable the way extraction is
+    (``plans/lineage.py``): round N's labels are written to
+    ``state_dir/labels/round=N/`` parquet and read back, which also
+    cuts the plan. A round is committed exactly when its ``_SUCCESS``
+    file exists: Spark's output committer writes it after every part
+    file is in place, so it needs the committer's default
+    ``mapreduce.fileoutputcommitter.marksuccessfuljobs=true`` (without
+    it no round counts as committed and every call restarts cleanly).
+    A killed driver resumes from the newest committed round (the same
+    ``pairs`` recipe must be passed again — the pair operators are
+    deterministic, so recomputing edges is correct). Convergence
+    writes the final round to ``state_dir/done``; while that is
+    committed and names a committed round, a re-call returns the
+    stored labels without iterating (idempotent re-run, the
+    lineage-table property). An uncommitted ``done`` costs one more
+    round. Kill/resume pinned in
     ``tests/test_dedup.py::test_duplicate_clusters_resumes_from_state_dir``.
     """
     spark = docs.sparkSession
-    resume_meta = None
-    if state_dir is not None:
-        resume_meta = _read_cc_meta(spark, state_dir)
-        if resume_meta is not None and resume_meta[1]:
-            labels = spark.read.parquet(
-                _cc_round_path(state_dir, resume_meta[0])
-            )
-            return _cc_finalize(docs, labels, id_col)
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-                ),
-                F.struct(
-                    F.col("id_b").alias("src"), F.col("id_a").alias("dst")
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    edges = _truncate_plan(edges)
-    # src covers every endpoint after symmetrization
-    init = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
+    resume = _cc_resume_point(spark, state_dir) if state_dir else None
+    if resume is not None and resume[1]:
+        labels = spark.read.parquet(_cc_round_path(state_dir, resume[0]))
+        return _cc_finalize(docs, labels, id_col)
+    edges, c = _stage_leaf(
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+                    ),
+                    F.struct(
+                        F.col("id_b").alias("src"), F.col("id_a").alias("dst")
+                    ),
+                )
+            ).alias("e")
+        ).select("e.src", "e.dst")
     )
-    start_round = 0
-    if state_dir is None:
-        labels = _truncate_plan(init)
-    elif resume_meta is not None:
-        start_round = resume_meta[0]
-        labels = spark.read.parquet(_cc_round_path(state_dir, start_round))
-    else:
-        labels = _cc_commit(spark, state_dir, init, 0)
+    if c["n"] == 0:
+        # no pair, so no round: every doc is a singleton, and the empty
+        # leaf carries the id type the labels would have
+        return _cc_finalize(docs, edges.toDF("id", "lbl"), id_col)
+    rnd, labels = 0, None
+    if resume is not None:
+        rnd = resume[0]
+        labels = spark.read.parquet(_cc_round_path(state_dir, rnd))
     # each symmetrized pair once: a split pair splits in both directions
     probe_edges = edges.where(F.col("src") < F.col("dst"))
     converged = False
-    rnd = start_round
     for _ in range(max_iters):
         rnd += 1
-        offered = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .select(F.col("dst").alias("id"), "lbl")
-        )
-        merged = (
-            labels.union(offered).groupBy("id").agg(F.min("lbl").alias("lbl"))
-        )
+        if labels is None:
+            # labels start as the ids themselves, and src covers every
+            # endpoint: each takes the least of itself and its
+            # smallest neighbour
+            merged = (
+                edges.groupBy(F.col("src").alias("id"))
+                .agg(F.min("dst").alias("lbl"))
+                .select("id", F.least("id", "lbl").alias("lbl"))
+            )
+        else:
+            offered = (
+                edges.join(labels, edges["src"] == labels["id"])
+                .select(F.col("dst").alias("id"), "lbl")
+            )
+            merged = (
+                labels.union(offered)
+                .groupBy("id").agg(F.min("lbl").alias("lbl"))
+            )
         # pointer jump: lbl <- label(lbl). Every lbl IS a node id (labels
         # start as ids and min() only selects existing ones), so the
         # inner self-join is total.
@@ -1088,7 +1040,9 @@ def duplicate_clusters(
         if state_dir is None:
             labels = _truncate_plan(jumped)
         else:
-            labels = _cc_commit(spark, state_dir, jumped, rnd)
+            path = _cc_round_path(state_dir, rnd)
+            jumped.write.mode("overwrite").parquet(path)
+            labels = spark.read.parquet(path)
         # convergence probe (see docstring): count the edges whose two
         # endpoints still carry different labels. Its full scan of the
         # labels also materializes this round's local checkpoint.
@@ -1117,7 +1071,9 @@ def duplicate_clusters(
             )
         )
     if state_dir is not None:
-        _write_cc_meta(spark, state_dir, rnd, True)
+        local_frame(spark, [(rnd,)], "round long").write.mode(
+            "overwrite"
+        ).parquet(f"{state_dir}/done")
     return _cc_finalize(docs, labels, id_col)
 
 

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from table_ocr_spark.operators.dedup import _stage_leaf
 from table_ocr_spark.operators.textstats import tokens
 
 HASH_MIX = 2654435761  # Knuth multiplicative constant (same as simhash)
@@ -146,10 +147,20 @@ def dsir_weights(
     rounded 6 dp. Zero-bigram documents score 0.0 (no evidence).
     Downstream: resample/filter by weight (e.g. keep the top-k or
     Gumbel-top-k sample) to shape the corpus toward the target.
+    The corpus's bucket arrays are a plan leaf materialized by the call
+    itself (one job), so the kernel runs once per corpus document.
     """
     # n_buckets validated in _bigram_bucket_udf (the shared factory)
     target_text_col = target_text_col or text_col
-    corpus_f = _features(corpus, text_col, id_col, n_buckets)
+    # the corpus buckets are one leaf: the histogram, the scoring and
+    # the zero-bigram backfill all read it, so the kernel runs once
+    buckets, _ = _stage_leaf(
+        corpus.select(
+            F.col(id_col).alias("id"),
+            _bigram_bucket_udf(n_buckets)(tokens(F.col(text_col))).alias("_b"),
+        )
+    )
+    corpus_f = buckets.select("id", F.explode("_b").alias("bucket"))
     target_f = _features(
         target.select(F.col(target_text_col).alias("_t")), "_t", "_t", n_buckets
     ).select("bucket")
@@ -171,10 +182,8 @@ def dsir_weights(
         )
     )
     # zero-bigram docs: map-side backfill, never an anti-join
-    empties = corpus.filter(
-        F.size(tokens(F.col(text_col))) < 2
-    ).select(
-        F.col(id_col),
+    empties = buckets.filter(F.size("_b") == 0).select(
+        F.col("id").alias(id_col),
         F.lit(0).cast("long").alias("n_features"),
         F.lit(0.0).alias("dsir_logweight"),
     )
@@ -321,7 +330,10 @@ def train_langid_classifier(
     Size: <= B x C + 2C rows — broadcast-sized by construction (DSIR
     uses B ~ 10^4; C is the label set). Scale shape: one explode ->
     groupBy(bucket, label) pass with map-side combine; every exchange
-    is bounded by B x C regardless of corpus size."""
+    is bounded by B x C regardless of corpus size. The counts are a
+    plan leaf materialized by the call itself (one job), so the
+    training kernel runs once per labeled document however often the
+    model is read."""
     lab = labeled.filter(F.col(label_col).isNotNull())
     feats = lab.select(
         F.col(label_col).alias("label"),
@@ -329,8 +341,10 @@ def train_langid_classifier(
             _bigram_bucket_udf(n_buckets)(tokens(F.col(text_col)))
         ).alias("bucket"),
     )
-    counts = feats.groupBy("bucket", "label").agg(
-        F.count(F.lit(1)).alias("_c")
+    # one leaf for the counts' several readers (the bucket universe,
+    # the class totals, the densified join), so the kernel runs once
+    counts, _ = _stage_leaf(
+        feats.groupBy("bucket", "label").agg(F.count(F.lit(1)).alias("_c"))
     )
     # label universe + priors come from DOC counts (a label whose every
     # doc is <2 tokens still gets prior/default rows and stays a class)

@@ -26,7 +26,7 @@ Two operators:
 - :func:`resolve_redirects` — the successor mapping → per-src verdict
   ``(url, final_url, hops, redirect_loop)`` by POINTER DOUBLING, the
   same O(log chain-length) round structure as the near-dup CC closure
-  (``dedup.connected_components``): round k composes the partial map
+  (``dedup.duplicate_clusters``): round k composes the partial map
   with itself, so after ``ceil(log2(max_hops+1))`` rounds every chain
   of length ≤ max_hops has fully collapsed. A hop-by-hop loop would
   take max_hops shuffle rounds; doubling takes 6 for the default 32.

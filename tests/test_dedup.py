@@ -670,7 +670,7 @@ def test_duplicate_clusters_resumes_from_state_dir(spark, tmp_path):
         duplicate_clusters(docs, pairs, max_iters=2,
                            state_dir=state).collect()
     committed = sorted(os.listdir(os.path.join(state, "labels")))
-    assert committed == ["round=0", "round=1", "round=2"]
+    assert committed == ["round=1", "round=2"]
 
     # resume: picks up at round 2 and finishes
     resumed = duplicate_clusters(docs, pairs, max_iters=25,
@@ -692,17 +692,17 @@ def test_duplicate_clusters_resumes_from_state_dir(spark, tmp_path):
 
 
 def test_duplicate_clusters_resumes_past_corrupt_marker(spark, tmp_path):
-    # review r4: a driver kill mid-marker-write must not strand resume.
-    # Markers are write-once per round; the reader skips an unreadable/
-    # empty marker and falls back to the previous committed round,
-    # whose labels data is guaranteed intact (data N is only rewritten
-    # while the newest marker is N-1).
+    # a driver kill mid-write leaves a directory without _SUCCESS (the
+    # committer writes it last). Resume skips it and every name that is
+    # not a round, and falls back to the newest committed round.
     import os
-    import shutil
 
     import pytest as _pytest
 
-    from table_ocr_spark.operators.dedup import duplicate_clusters
+    from table_ocr_spark.operators.dedup import (
+        _cc_resume_point,
+        duplicate_clusters,
+    )
 
     ids = list(range(40))
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
@@ -714,83 +714,51 @@ def test_duplicate_clusters_resumes_past_corrupt_marker(spark, tmp_path):
         duplicate_clusters(docs, pairs, max_iters=2,
                            state_dir=state).collect()
 
-    # simulate a kill during the round-2 marker write: the marker dir
-    # exists but holds no readable parquet
-    marker = os.path.join(state, "meta", "round_2")
-    shutil.rmtree(marker)
-    os.makedirs(marker)
-    open(os.path.join(marker, "part-00000.parquet"), "wb").close()
+    # a kill during the round-2 write, an S3 folder marker and a stray
+    # directory
+    labels = os.path.join(state, "labels")
+    os.remove(os.path.join(labels, "round=2", "_SUCCESS"))
+    open(os.path.join(labels, "round=9_$folder$"), "w").close()
+    os.makedirs(os.path.join(labels, "round=x"))
+    assert _cc_resume_point(spark, state) == (1, False)
 
     resumed = duplicate_clusters(docs, pairs, max_iters=25,
                                  state_dir=state)
     fresh = duplicate_clusters(docs, pairs, max_iters=25)
     as_rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
     assert as_rows(resumed) == as_rows(fresh)
-
-    # and a partial DONE marker degrades to one recomputed round, not
-    # a from-scratch run or a crash
-    done_markers = [
-        d for d in os.listdir(os.path.join(state, "meta"))
-        if d.startswith("done_")
-    ]
-    assert len(done_markers) == 1
-    dm = os.path.join(state, "meta", done_markers[0])
-    shutil.rmtree(dm)
-    os.makedirs(dm)
-    n_label_dirs = len(os.listdir(os.path.join(state, "labels")))
-    again = duplicate_clusters(docs, pairs, state_dir=state)
-    assert as_rows(again) == as_rows(fresh)
-    # exactly one extra (idempotently recomputed) round committed
-    assert len(os.listdir(os.path.join(state, "labels"))) <= n_label_dirs + 1
-
-
-def test_duplicate_clusters_reads_legacy_single_file_meta(spark, tmp_path):
-    # pre-marker state dirs wrote ONE overwritten parquet at meta/
-    # itself; the marker-era reader must still resume them (review r4:
-    # silently treating them as fresh discards the durable contract).
-    # Stray prefix-matching junk in meta/ must be skipped, not crash.
-    import os
-
-    from table_ocr_spark.operators.dedup import (
-        _cc_round_path,
-        _read_cc_meta,
-        duplicate_clusters,
-    )
-
-    ids = list(range(20))
-    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in ids[:-1]], "id_a long, id_b long"
-    )
-    state = str(tmp_path / "cc_state")
-    out = duplicate_clusters(docs, pairs, state_dir=state)
-    expected = sorted(map(tuple, out.collect()))
-    final_round, done = _read_cc_meta(spark, state)
+    final_round, done = _cc_resume_point(spark, state)
     assert done
 
-    # rebuild the state dir in the LEGACY layout: same labels data,
-    # meta/ is itself a single-row parquet
-    legacy = str(tmp_path / "cc_legacy")
-    os.makedirs(legacy)
-    os.rename(
-        os.path.join(state, "labels"), os.path.join(legacy, "labels")
-    )
-    spark.createDataFrame(
-        [(final_round, True)], "round long, done boolean"
-    ).coalesce(1).write.parquet(os.path.join(legacy, "meta"))
-    # junk that matches the marker prefix must be ignored
-    open(os.path.join(legacy, "meta", "round_9_$folder$"), "w").close()
+    # an uncommitted done costs at most one recomputed round, not a
+    # from-scratch run or a crash
+    os.remove(os.path.join(state, "done", "_SUCCESS"))
+    assert _cc_resume_point(spark, state) == (final_round, False)
+    again = duplicate_clusters(docs, pairs, state_dir=state)
+    assert as_rows(again) == as_rows(fresh)
+    assert _cc_resume_point(spark, state)[0] <= final_round + 1
 
-    assert _read_cc_meta(spark, legacy) == (final_round, True)
-    again = duplicate_clusters(
-        docs, spark.createDataFrame([], "id_a long, id_b long"),
-        state_dir=legacy,
-    )
-    assert sorted(map(tuple, again.collect())) == expected
-    # the completed-run short-circuit used the stored labels: no new
-    # round directory appeared
-    assert len(os.listdir(os.path.join(legacy, "labels"))) == \
-        final_round + 1
+
+def test_duplicate_clusters_without_pairs_runs_one_job(spark):
+    # the edge leaf's row count is the only action: no pair, no round
+    from table_ocr_spark.local_frames import local_frame
+    from table_ocr_spark.operators.dedup import duplicate_clusters
+
+    sc = spark.sparkContext
+    docs = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
+    group = "cc-no-pairs"
+    sc.setJobGroup(group, group)
+    try:
+        out = duplicate_clusters(
+            docs, local_frame(spark, [], "id_a long, id_b long")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sorted(map(tuple, out.collect())) == [
+        (i, i, 1, False) for i in range(20)
+    ]
 
 
 def test_duplicate_clusters_state_dir_string_ids(spark, tmp_path):

@@ -13,11 +13,13 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REHEARSE = os.path.join(ROOT, "scripts", "rehearse.py")
 
 
-def _rehearse(*args, timeout):
+def _rehearse(*args, timeout, cwd=ROOT):
     env = dict(os.environ, SPARK_DRIVER_MEM="2g", SPARK_GRAFT_CPUS="2")
+    # the script must put its own checkout on the workers' path
+    env.pop("PYTHONPATH", None)
     return subprocess.run(
         [sys.executable, REHEARSE, *args],
-        capture_output=True, text=True, timeout=timeout, env=env, cwd=ROOT,
+        capture_output=True, text=True, timeout=timeout, env=env, cwd=cwd,
     )
 
 
@@ -36,6 +38,14 @@ def test_two_blocks_pass_and_report_every_step():
         assert s["n"] == 2000 and s["wall_s"] > 0 and s["probe"] > 0, s
     # one probe-qualified line per step
     assert sum(ln.startswith("[probe ") for ln in proc.stdout.splitlines()) == 2
+
+
+def test_workers_import_the_checkout_from_another_directory(tmp_path):
+    # the Python workers start in the working directory, outside the
+    # checkout: they find the package only through the PYTHONPATH the
+    # script exports, or every UDF stage fails to import it
+    proc = _rehearse("tier_chain", "--n", "2000", timeout=600, cwd=tmp_path)
+    assert proc.returncode == 0, proc.stdout + proc.stderr
 
 
 def test_unknown_block_exits_before_spark_starts():

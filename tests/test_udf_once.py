@@ -112,17 +112,6 @@ def _pos_neg(docs):
     return docs.filter("lang = 'en'"), docs.filter("lang = 'de'")
 
 
-# Read the featurized frame twice by construction: the corpus bucket
-# histogram and the per-document scoring both explode the corpus, and
-# the densified lang-id table reads its (bucket, label) counts for the
-# bucket universe, the class totals and the counts themselves.
-_READS_FEATURES_TWICE = pytest.mark.xfail(
-    raises=AssertionError,
-    strict=True,
-    reason="featurized frame has more than one consumer",
-)
-
-
 TEXT_OPERATORS = [
     pytest.param(dedup.shingle_sets, id="shingle_sets"),
     pytest.param(
@@ -152,7 +141,6 @@ TEXT_OPERATORS = [
             d, d.filter("lang = 'en'"), n_buckets=64
         ),
         id="dsir_weights",
-        marks=_READS_FEATURES_TWICE,
     ),
     pytest.param(
         lambda d: importance.train_quality_classifier(*_pos_neg(d)),
@@ -165,9 +153,12 @@ TEXT_OPERATORS = [
         id="apply_linear_model",
     ),
     pytest.param(
-        importance.train_langid_classifier,
+        # the lazy composition q_langid_classifier runs: training is a
+        # leaf, so the plan holds the scoring kernel only
+        lambda d: importance.apply_langid_model(
+            d, importance.train_langid_classifier(d)
+        ),
         id="train_langid_classifier",
-        marks=_READS_FEATURES_TWICE,
     ),
     pytest.param(
         lambda d: importance.apply_langid_model(
